@@ -53,19 +53,18 @@ object FraudRules {
     *
     * The blacklist is CUMULATIVE and grows forever, so a static
     * `broadcast()` hint is an eventual driver OOM (SCALING.md measured
-    * the 8g broadcast wall). Count-then-dial instead, the same pattern
-    * as the graph/HITS operators: one bounded count sizes the decision —
-    * broadcast below `broadcastMaxRows` (~64 MB at ~64 B/row of
-    * passport+date), plain shuffle join above it, which is the plan a
-    * years-old blacklist needs anyway. */
+    * the 8g broadcast wall). No hint and no eager count either: the
+    * planner broadcasts the blacklist while its plan-time size estimate
+    * (the parquet files' size) is under `autoBroadcastJoinThreshold`,
+    * and plans a shuffle join above it — the plan a years-old blacklist
+    * needs anyway; adaptive execution can still demote that join to a
+    * broadcast once the shuffled side turns out small. */
   def rule1(txns: DataFrame, blacklist: DataFrame, seed: Seeds.Seed,
-            reportDt: Date,
-            broadcastMaxRows: Long = (64L << 20) / 64): DataFrame = {
+            reportDt: Date): DataFrame = {
     val bl = blacklist.select(col("passport").as("bl_passport"),
       col("date").as("bl_date"))
-    val dialed = if (bl.count() <= broadcastMaxRows) broadcast(bl) else bl
     val joined = withClients(txns, seed)
-      .join(dialed, col("passport_num") === col("bl_passport"), "left")
+      .join(bl, col("passport_num") === col("bl_passport"), "left")
       .where((col("passport_valid_to") < to_date(col("transaction_date")) ||
         (col("bl_passport").isNotNull &&
           to_date(col("transaction_date")) > col("bl_date"))) &&

@@ -2,15 +2,18 @@ package graft.bank
 
 import java.sql.Date
 
+import graft.bank.Warehouse.Meta
 import graft.operators.Cdc
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Daily batch orchestration, reference order (`main.py:85-117`):
-  * ingest 3 files → staging views → fact append (blacklist anti-join
-  * dedup, transactions blind append) → SCD2 terminals transition →
-  * staging clear audit rows → four fraud rules appended to REP_FRAUD.
-  * Each day is one call; state lives in the [[Warehouse]].
+  * ingest 3 files → fact append (blacklist anti-join dedup, transactions
+  * blind append) → SCD2 terminals transition → four fraud rules appended
+  * to REP_FRAUD → the day's META_LOADING audit rows. Each day is one
+  * call; state lives in the [[Warehouse]]. Staging and rule row counts
+  * are observed on the writes themselves, and META is written once per
+  * day (see [[runDayStaged]]).
   */
 final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
                      incrementalRules12: Boolean = false,
@@ -61,46 +64,48 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
   }
 
   /** The post-ingest daily cycle over already-typed staging frames:
-    * staging audit → fact updates → SCD2 terminals → fraud mart. Split
-    * from [[runDay]] so synthetic multi-day parity specs and the
-    * end-to-end scale probe ([[graft.ScaleStress]]) can drive the
-    * pipeline at volume without materializing CSV/XLSX drops. */
-  def runDayStaged(txns: org.apache.spark.sql.DataFrame,
-                   blacklist: org.apache.spark.sql.DataFrame,
-                   terminals: org.apache.spark.sql.DataFrame,
-                   day: Date): Unit = {
-    val stgTxns = txns.cache()
-    wh.logMeta("stg_transactions", day, stgTxns.count())
-
-    val stgBlacklist = blacklist.cache()
-    wh.logMeta("stg_passport_blacklist", day, stgBlacklist.count())
-
-    val stgTerminals = terminals.cache()
-    wh.logMeta("stg_terminals", day, stgTerminals.count())
-
-    // --- fact updates (`comm_funcs.py:47-78`)
-    val blFact = wh.readOr(FactBlacklist, Schemas.factPassportBlacklist)
-    val blNew = stgBlacklist.join(blFact.select("passport"),
-      Seq("passport"), "left_anti")
-    wh.append(FactBlacklist, blNew.select("date", "passport"))
+    * fact updates → SCD2 terminals → fraud mart → audit. Split from
+    * [[runDay]] so synthetic multi-day parity specs and the end-to-end
+    * scale probe ([[graft.ScaleStress]]) can drive the pipeline at volume
+    * without materializing CSV/XLSX drops.
+    *
+    * Every write is one Spark execution that also yields the row counts
+    * the audit trail needs ([[RowCount]], observed on the write — no
+    * separate count job; S8/S15). The one exception is the terminals
+    * snapshot: SCD2 reads it three times, so it is cached and counted.
+    * The four rules land as ONE mart append, computed against the mart
+    * as it stood before the day: each rule's J12 anti-join filters only
+    * its own `event_type`, which no other rule produces, so this is
+    * row-identical to the reference's rule-by-rule appends. The day's
+    * ten META rows follow as one append, in reference order — a day
+    * that throws leaves no META rows behind. */
+  def runDayStaged(txns: DataFrame, blacklist: DataFrame,
+                   terminals: DataFrame, day: Date): Unit = {
+    // --- fact updates (`comm_funcs.py:47-78`); each write counts its
+    // staging input
+    val blFact = wh.readOr(FactBlacklist)
+    val (blNew, Seq(nBlacklist)) =
+      RowCount.observe(Seq("stg_passport_blacklist" -> blacklist))(bl =>
+        bl.head.join(blFact.select("passport"), Seq("passport"), "left_anti")
+          .select("date", "passport"))
+    wh.append(FactBlacklist, blNew)
     // facts are laid out date-partitioned: daily consumers prune to one
     // partition; the reference's full-history rules still scan all of it
-    wh.append(FactTransactions, stgTxns.select(
-        Schemas.factTransactions.fieldNames.map(col).toSeq: _*)
-      .withColumn("txn_date", to_date(col("transaction_date"))),
-      partitionCols = Seq("txn_date"))
+    val (factRows, Seq(nTxns)) = RowCount.observe(Seq("stg_transactions" ->
+        txns.select(Schemas.factTransactions.fieldNames.map(col).toSeq: _*)
+          .withColumn("txn_date", to_date(col("transaction_date")))))(_.head)
+    wh.append(FactTransactions, factRows, partitionCols = Seq("txn_date"))
 
     // --- SCD2 terminals dimension (`incr_loading.py`)
-    val hist = wh.readOr(DimTerminals, Schemas.dimTerminalsHist)
+    val stgTerminals = terminals.cache()
+    val nTerminals = stgTerminals.count()
+    val hist = wh.readOr(DimTerminals)
     val newHist = Cdc.scd2Apply(hist, stgTerminals, day,
       keyCol = "terminal_id",
       attrCols = Seq("terminal_type", "terminal_city", "terminal_address"))
     wh.overwrite(DimTerminals, newHist
       .select(Schemas.dimTerminalsHist.fieldNames.map(col).toSeq: _*))
-
-    // --- staging clear audit (`comm_funcs.py:28-44`)
-    Seq("stg_transactions", "stg_terminals", "stg_passport_blacklist")
-      .foreach(t => wh.logMeta(s"CLEAR_$t", day, 0))
+    stgTerminals.unpersist()
 
     // --- fraud mart (`loading_rep_fraud.py`): the reference rules read
     // the FULL accumulated fact table each day. The incremental modes
@@ -109,32 +114,33 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
     // most two txn_date partitions of the fact, however old the table.
     val (facts, facts12, facts34) =
       ruleFacts(wh, day, incrementalRules12, incrementalRules34)
-    val blAll = wh.read(FactBlacklist)
-    val dim = wh.read(DimTerminals)
-
-    def appendRule(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val cached = df.cache()
-      val n = cached.count() // S15: rowcount before append, single compute
-      wh.append(RepFraud, cached)
-      wh.logMeta(name, day, n)
-      cached.unpersist()
-    }
-    appendRule("REP_FRAUD_passport", FraudRules.rule1(facts12, blAll, seed, day))
-    appendRule("REP_FRAUD_contract", FraudRules.rule2(facts12, seed, day))
-    appendRule("REP_FRAUD_diff_cities", FraudRules.rule3(facts34, dim, seed,
-      wh.readOr(RepFraud, Schemas.repFraud), day, bucketedBandJoins,
-      bandJoinSalt))
-    appendRule("REP_FRAUD_attempt_amount", FraudRules.rule4(facts34, seed,
-      wh.readOr(RepFraud, Schemas.repFraud), day, bucketedBandJoins,
-      bandJoinSalt))
-
-    stgTxns.unpersist(); stgBlacklist.unpersist(); stgTerminals.unpersist()
+    val repBefore = wh.readOr(RepFraud)
+    val (mart, ruleCounts) = RowCount.observe(Seq(
+      "REP_FRAUD_passport" ->
+        FraudRules.rule1(facts12, wh.read(FactBlacklist), seed, day),
+      "REP_FRAUD_contract" -> FraudRules.rule2(facts12, seed, day),
+      "REP_FRAUD_diff_cities" -> FraudRules.rule3(facts34,
+        wh.read(DimTerminals), seed, repBefore, day, bucketedBandJoins,
+        bandJoinSalt),
+      "REP_FRAUD_attempt_amount" -> FraudRules.rule4(facts34, seed,
+        repBefore, day, bucketedBandJoins, bandJoinSalt)))(
+      _.reduce(_ unionByName _))
+    wh.append(RepFraud, mart)
     facts.unpersist()
+
+    // --- audit (`comm_funcs.py:13-44`), reference order: staging
+    // counts, staging clears, then one row per rule
+    wh.logMeta(
+      Seq(Meta("stg_transactions", day, nTxns.get()),
+        Meta("stg_passport_blacklist", day, nBlacklist.get()),
+        Meta("stg_terminals", day, nTerminals)) ++
+      Seq("stg_transactions", "stg_terminals", "stg_passport_blacklist")
+        .map(t => Meta(s"CLEAR_$t", day, 0)) ++
+      ruleCounts.map(n => Meta(n.label, day, n.get())))
   }
 }
 
 object Pipeline {
-  import org.apache.spark.sql.DataFrame
 
   /** The fact-table frames the four fraud rules read, under the two
     * incremental dials — shared by the batch pipeline and the streaming

@@ -6,7 +6,7 @@ import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DateType, StructType}
 
 /** Parquet-backed warehouse layer: the Spark replacement for the
   * reference's PostgreSQL schema (`comm_funcs.py:10`). Tables live as
@@ -41,16 +41,25 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     if (exists(name)) recoverPartitions(name)
   }
 
+  /** Open a table. The daily cycle's tables are opened with their
+    * declared schema ([[Warehouse.KnownSchemas]]), so no job reads
+    * parquet footers to infer it; any other table is inferred. */
   def read(name: String): DataFrame = {
     heal(name)
-    spark.read.parquet(dir(name).toString)
+    Warehouse.KnownSchemas.get(name)
+      .fold(spark.read)(spark.read.schema)
+      .parquet(dir(name).toString)
   }
 
-  /** Read if present, else an empty frame with the given schema. */
-  def readOr(name: String, schema: StructType): DataFrame = {
+  /** Read one of the daily cycle's tables if present, else an empty
+    * frame with its declared schema — a local relation, so the optimizer
+    * sees it is empty (a join against a table that does not exist yet
+    * drops out of the plan). */
+  def readOr(name: String): DataFrame = {
     heal(name)
     if (exists(name)) read(name)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.createDataFrame(java.util.List.of[Row](),
+      Warehouse.KnownSchemas(name))
   }
 
   def append(name: String, df: DataFrame,
@@ -385,11 +394,34 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       finally walk.close()
     }
 
-  /** META_LOADING audit sink (`comm_funcs.py:13-18`). */
-  def logMeta(tableName: String, eventDt: Date, rowsProcessed: Long,
-              status: String = "SUCCESS"): Unit = {
-    val row = Row(tableName, eventDt, rowsProcessed.toInt, status)
-    append("meta_loading", spark.createDataFrame(
-      java.util.List.of(row), Schemas.metaLoading))
-  }
+  /** META_LOADING audit sink (`comm_funcs.py:13-18`): the rows land as
+    * one append of one file, in the given order (none for an empty
+    * list). A single event is a one-element list. */
+  def logMeta(rows: Seq[Warehouse.Meta]): Unit =
+    if (rows.nonEmpty) {
+      import scala.jdk.CollectionConverters._
+      append(Pipeline.MetaLoading, spark.createDataFrame(
+        rows.map(m => Row(m.table, m.eventDt, m.rows.toInt, m.status)).asJava,
+        Schemas.metaLoading).coalesce(1))
+    }
+}
+
+object Warehouse {
+
+  /** One `META_LOADING` row: (table_name, event_dt, rows_processed,
+    * status). */
+  final case class Meta(table: String, eventDt: Date, rows: Long,
+                        status: String = "SUCCESS")
+
+  /** Declared schemas of the daily cycle's tables, used by
+    * [[Warehouse.read]] and [[Warehouse.readOr]]. The fact carries its
+    * `txn_date` partition column; the streaming mart's `report_dt`
+    * partition column is part of [[Schemas.repFraud]] already. */
+  val KnownSchemas: Map[String, StructType] = Map(
+    Pipeline.FactTransactions -> Schemas.factTransactions
+      .add("txn_date", DateType),
+    Pipeline.FactBlacklist -> Schemas.factPassportBlacklist,
+    Pipeline.DimTerminals -> Schemas.dimTerminalsHist,
+    Pipeline.RepFraud -> Schemas.repFraud,
+    Pipeline.MetaLoading -> Schemas.metaLoading)
 }

@@ -183,7 +183,7 @@ object Linkage {
 
   /** The `k` globally closest same-block pairs by
     * (levenshtein, id1, id2) — EXACT, without ever materializing the
-    * in-block pair space. Count-then-dial ladder (the q282/rule-1
+    * in-block pair space. Count-then-dial ladder (the q282
     * stance, VERDICT r12 #1):
     *
     *  1. rung 0 — identical strings: one hash aggregate on

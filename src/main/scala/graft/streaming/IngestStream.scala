@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.bank.{FraudRules, Ingest, Pipeline, Schemas, Seeds, Warehouse}
+import graft.bank.{FraudRules, Ingest, Pipeline, RowCount, Schemas, Seeds,
+  Warehouse}
+import graft.bank.Warehouse.Meta
 import graft.operators.Cdc
 import graft.sources.Xlsx
 
@@ -209,7 +211,7 @@ object IngestStream {
       val files = fileCounts.keys.toArray
         .sortBy(f => dayFromFileName(f).toLocalDate.toEpochDay)
       if (files.nonEmpty) {
-        val hist0 = wh.readOr(Pipeline.DimTerminals, Schemas.dimTerminalsHist)
+        val hist0 = wh.readOr(Pipeline.DimTerminals)
         // Out-of-order guard: SCD2 effective-dating is ORDER-SENSITIVE
         // (applying an older snapshot over a newer history silently
         // corrupts the version chain — the reference's loop is
@@ -252,12 +254,13 @@ object IngestStream {
           Map(BatchTag -> s"$streamId $batchId"))
         // S8 audit parity with the batch path (Pipeline.runDay logs
         // per-day staging counts): one META row per consumed snapshot,
-        // AFTER the swap so a guard-skipped replay never double-logs
+        // all in one append, AFTER the swap so a guard-skipped replay
+        // never double-logs
         // (a crash between swap and log loses audit rows, not data —
         // the same at-least-once audit semantics a rerun of the
         // reference has)
-        files.foreach(f =>
-          wh.logMeta("stg_terminals", dayFromFileName(f), fileCounts(f)))
+        wh.logMeta(files.toSeq.map(f =>
+          Meta("stg_terminals", dayFromFileName(f), fileCounts(f))))
       }
     } finally parsed.unpersist()
   }
@@ -317,7 +320,7 @@ object IngestStream {
     try {
       val typed = Ingest.typedBlacklist(parsed)
         .groupBy("passport").agg(min(col("date")).as("date"))
-      val fact = wh.readOr(Pipeline.FactBlacklist, Schemas.factPassportBlacklist)
+      val fact = wh.readOr(Pipeline.FactBlacklist)
       val fresh = typed.join(fact.select("passport"), Seq("passport"), "left_anti")
       wh.append(Pipeline.FactBlacklist, fresh.select("date", "passport"))
       // S8 audit parity: one META row per consumed cumulative drop, with
@@ -325,9 +328,9 @@ object IngestStream {
       // A replayed batch re-logs — same at-least-once audit semantics a
       // rerun of the reference has; the FACT rows stay exactly-once via
       // the anti-join.
-      parsed.groupBy("_file").agg(count(lit(1)).as("n")).collect()
-        .foreach(r => wh.logMeta("stg_passport_blacklist",
-          dayFromFileName(r.getString(0)), r.getLong(1)))
+      wh.logMeta(parsed.groupBy("_file").agg(count(lit(1)).as("n"))
+        .collect().toSeq.map(r => Meta("stg_passport_blacklist",
+          dayFromFileName(r.getString(0)), r.getLong(1))))
     } finally parsed.unpersist()
   }
 
@@ -381,8 +384,12 @@ object IngestStream {
     *     day rows and rewrites the same partition, where an append
     *     would double it;
     *  2. the four fraud rules run against the accumulated fact (which
-    *     now includes this day but no later one) and append to
-    *     REP_FRAUD, each logging its META row like the batch path;
+    *     now includes this day but no later one) and land in REP_FRAUD,
+    *     each logging its META row like the batch path. Every row count
+    *     in those META rows is observed on the write it describes
+    *     ([[graft.bank.RowCount]]) — the fact overwrite yields the
+    *     staging count, the mart overwrite the four rule counts — so no
+    *     separate count runs;
     *  3. a COMPLETED day — its last rule marker
     *     (`REP_FRAUD_attempt_amount`) already in META — is skipped
     *     entirely on re-delivery, after a loud content check (row count
@@ -445,7 +452,7 @@ object IngestStream {
       val days = rows.select("txn_date")
         .distinct().collect().map(_.getDate(0)).sortBy(_.toLocalDate.toEpochDay)
       if (days.isEmpty) return
-      val meta = wh.readOr(Pipeline.MetaLoading, Schemas.metaLoading)
+      val meta = wh.readOr(Pipeline.MetaLoading)
       // the day-completion marker is the LAST rule's META row
       val done = meta.where(col("table_name") === "REP_FRAUD_attempt_amount")
         .select("event_dt").distinct().collect().map(_.getDate(0)).toSet
@@ -519,25 +526,27 @@ object IngestStream {
               "completed day can only be replayed verbatim — " +
               "correct-by-replacement needs an explicit operator action")
         } else {
-          val n = dayRows.count()
-          wh.overwritePartitions(Pipeline.FactTransactions, dayRows,
+          val (factRows, Seq(n)) =
+            RowCount.observe(Seq("stg_transactions" -> dayRows))(_.head)
+          wh.overwritePartitions(Pipeline.FactTransactions, factRows,
             partitionCols = Seq("txn_date"))
           failpoint("fact_overwrite")
-          wh.logMeta("stg_transactions", day, n)
+          wh.logMeta(Seq(Meta("stg_transactions", day, n.get())))
           failpoint("meta_stg")
           val (facts, facts12, facts34) = Pipeline.ruleFacts(wh, day,
             incrementalRules12, incrementalRules34)
           try {
-            val blAll = wh.readOr(Pipeline.FactBlacklist,
-              Schemas.factPassportBlacklist)
-            val dim = wh.readOr(Pipeline.DimTerminals, Schemas.dimTerminalsHist)
+            val blAll = wh.readOr(Pipeline.FactBlacklist)
+            val dim = wh.readOr(Pipeline.DimTerminals)
             // the mart WITHOUT today's partition: a crashed earlier
             // attempt's own partial rows must not feed J12's anti-join,
             // or the healing overwrite would drop exactly the rows the
             // crashed attempt already wrote
-            val repBefore = wh.readOr(Pipeline.RepFraud, Schemas.repFraud)
+            val repBefore = wh.readOr(Pipeline.RepFraud)
               .where(col("report_dt") =!= lit(day))
-            val ruleOut: Seq[(String, DataFrame)] = Seq(
+            // ONE idempotent mart write for the whole day; it also
+            // yields each rule's row count
+            val (mart, ruleCounts) = RowCount.observe(Seq(
               "REP_FRAUD_passport" ->
                 FraudRules.rule1(facts12, blAll, seed, day),
               "REP_FRAUD_contract" ->
@@ -547,22 +556,16 @@ object IngestStream {
                   bucketedBandJoins),
               "REP_FRAUD_attempt_amount" ->
                 FraudRules.rule4(facts34, seed, repBefore, day,
-                  bucketedBandJoins))
-            val cached = ruleOut.map { case (nm, df) => nm -> df.cache() }
-            try {
-              val counts = cached.map { case (nm, df) => nm -> df.count() }
-              // ONE idempotent mart write for the whole day
-              wh.overwritePartitions(Pipeline.RepFraud,
-                cached.map(_._2).reduce(_ unionByName _),
-                partitionCols = Seq("report_dt"))
-              failpoint("mart_overwrite")
-              // rule META rows in reference order; the LAST one
-              // (attempt_amount) is the day-completion marker
-              counts.foreach { case (nm, cnt) =>
-                wh.logMeta(nm, day, cnt)
-                failpoint(s"meta_$nm")
-              }
-            } finally cached.foreach(_._2.unpersist())
+                  bucketedBandJoins)))(_.reduce(_ unionByName _))
+            wh.overwritePartitions(Pipeline.RepFraud, mart,
+              partitionCols = Seq("report_dt"))
+            failpoint("mart_overwrite")
+            // rule META rows in reference order; the LAST one
+            // (attempt_amount) is the day-completion marker
+            ruleCounts.foreach { n =>
+              wh.logMeta(Seq(Meta(n.label, day, n.get())))
+              failpoint(s"meta_${n.label}")
+            }
           } finally facts.unpersist()
         }
       }

@@ -102,39 +102,51 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(facts12.count() == 10) // rules 1/2: today's partition only
   }
 
-  test("rule1 blacklist join: broadcast below the dial, shuffle join above it") {
+  test("rule1 blacklist join: broadcast under autoBroadcastJoinThreshold, shuffle join with it lowered") {
     import org.apache.spark.sql.functions._
-    val seed = graft.bank.Seeds.load(spark, "/root/reference/data/ddl_dml.sql")
     import spark.implicits._
+    import graft.bank.{FraudRules, Pipeline, Seeds, Warehouse}
+    def d(s: String) = java.sql.Date.valueOf(s)
+    val seed = Seeds.Seed(
+      cards = Seq(("1111", "A1", d("2020-01-01"), d("2020-01-01")))
+        .toDF("card_num", "account", "create_dt", "update_dt"),
+      accounts = Seq(("A1", d("2022-01-01"), "C1", d("2020-01-01"),
+          d("2020-01-01")))
+        .toDF("account", "valid_to", "client", "create_dt", "update_dt"),
+      clients = Seq(("C1", "Ivanov", "Ivan", "Ivanovich", d("1980-01-01"),
+          "P1", d("2030-01-01"), "+7", d("2020-01-01"), d("2020-01-01")))
+        .toDF("client_id", "last_name", "first_name", "patronymic",
+          "date_of_birth", "passport_num", "passport_valid_to", "phone",
+          "create_dt", "update_dt"))
     val txns = Seq(("t1", "2021-03-01 10:00:00", "1111",
         "PAYMENT", "SUCCESS", "T1")).toDF("transaction_id", "ts",
         "card_num", "oper_type", "oper_result", "terminal")
       .withColumn("transaction_date", to_timestamp($"ts")).drop("ts")
       .withColumn("amount", lit(BigDecimal(1)).cast("decimal(10,2)"))
-    val bl = Seq((java.sql.Date.valueOf("2021-01-01"), "P1"))
-      .toDF("date", "passport")
-    val day = java.sql.Date.valueOf("2021-03-01")
-    // below the threshold (default): the blacklist ships broadcast
-    val pSmall = graft.bank.FraudRules.rule1(txns, bl, seed, day)
-      .queryExecution.executedPlan.toString
-    assert("BroadcastHashJoin .*bl_passport".r.findFirstIn(pSmall).isDefined
-      || pSmall.contains("BroadcastHashJoin"), pSmall)
-    // above it (dial forced to 0): NO broadcast HINT for the blacklist
-    // join — the shuffle join an unbounded cumulative table needs.
-    // (Auto-broadcast is disabled for the check: a 1-row test blacklist
-    // would otherwise broadcast on size stats alone; at the dial's real
-    // threshold the table is past the auto threshold too.)
+    // the blacklist as the pipeline opens it: a warehouse parquet table,
+    // whose plan-time size estimate is its files' size
+    val wh = new Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("pq_rule1").toString)
+    wh.append(Pipeline.FactBlacklist,
+      Seq((d("2021-01-01"), "P1")).toDF("date", "passport"))
+    val day = d("2021-03-01")
+    def blJoins(): Seq[String] = FraudRules.rule1(txns,
+        wh.read(Pipeline.FactBlacklist), seed, day)
+      .queryExecution.executedPlan.toString.linesIterator
+      .filter(l => l.contains("bl_passport") && l.contains("Join")).toSeq
+    // under the threshold: the blacklist ships broadcast on its estimate
+    val small = blJoins()
+    assert(small.nonEmpty && small.forall(_.contains("BroadcastHashJoin")),
+      small)
+    // threshold lowered below the table's size: the shuffle join an
+    // unbounded cumulative blacklist needs, no broadcast of it
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try {
-      val pBig = graft.bank.FraudRules.rule1(txns, bl, seed, day,
-          broadcastMaxRows = 0).queryExecution.executedPlan.toString
-      val blJoinLines = pBig.linesIterator
-        .filter(l => l.contains("bl_passport") && l.contains("Join")).toSeq
-      assert(blJoinLines.nonEmpty && blJoinLines.forall(!_.contains("Broadcast")),
-        pBig)
-      assert(pBig.contains("SortMergeJoin") ||
-        pBig.contains("ShuffledHashJoin"), pBig)
+      val big = blJoins()
+      assert(big.nonEmpty && big.forall(l => !l.contains("Broadcast") &&
+        (l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin"))),
+        big)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
