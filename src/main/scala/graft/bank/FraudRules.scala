@@ -92,11 +92,10 @@ object FraudRules {
     * shapes, quadratic on a hot key). Identical semantics either way
     * (BucketedRulesSpec proves it on the fixture byte-for-byte). */
   private def bandPairs(a: DataFrame, b: DataFrame, i: Int, j: Int,
-                        deltaUs: Long, bucketed: Boolean,
-                        salt: Int = 1): DataFrame =
+                        deltaUs: Long, bucketed: Boolean): DataFrame =
     if (bucketed)
       BandJoin.joinWithin(a, b, "card_num",
-        s"transaction_date_$i", s"transaction_date_$j", deltaUs, salt)
+        s"transaction_date_$i", s"transaction_date_$j", deltaUs)
     else
       a.join(b, Seq("card_num"))
         .where(col(s"transaction_date_$i") < col(s"transaction_date_$j") &&
@@ -110,9 +109,9 @@ object FraudRules {
     * (a date) is cast to timestamp for the BETWEEN bound. */
   def rule3(txns: DataFrame, termHist: DataFrame, seed: Seeds.Seed,
             repFraud: DataFrame, reportDt: Date,
-            bucketed: Boolean = true, bandSalt: Int = 1): DataFrame = {
+            bucketed: Boolean = true): DataFrame = {
     val pairs = bandPairs(sided(txns, 1), sided(txns, 2), 1, 2,
-      3600L * 1000000L, bucketed, bandSalt)
+      3600L * 1000000L, bucketed)
     def th(n: Int): DataFrame = termHist.columns.foldLeft(termHist)(
       (d, c) => d.withColumnRenamed(c, s"${c}_h$n"))
     val located = pairs
@@ -138,14 +137,12 @@ object FraudRules {
     * REJECT → REJECT → SUCCESS with strictly decreasing amounts, all
     * gaps and the total span under 20 minutes. */
   def rule4(txns: DataFrame, seed: Seeds.Seed, repFraud: DataFrame,
-            reportDt: Date, bucketed: Boolean = true,
-            bandSalt: Int = 1): DataFrame = {
+            reportDt: Date, bucketed: Boolean = true): DataFrame = {
     val limit = 1200L * 1000000L
     def us(n: Int) = unix_micros(col(s"transaction_date_$n"))
     val chain = bandPairs(
-        bandPairs(sided(txns, 1), sided(txns, 2), 1, 2, limit, bucketed,
-          bandSalt),
-        sided(txns, 3), 2, 3, limit, bucketed, bandSalt)
+        bandPairs(sided(txns, 1), sided(txns, 2), 1, 2, limit, bucketed),
+        sided(txns, 3), 2, 3, limit, bucketed)
       .where(col("oper_result_1") === "REJECT" &&
         col("oper_result_2") === "REJECT" &&
         col("oper_result_3") === "SUCCESS" &&

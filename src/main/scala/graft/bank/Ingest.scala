@@ -15,8 +15,12 @@ import org.apache.spark.sql.types.DecimalType
 object Ingest {
 
   /** S1–S4: read a transactions CSV; returns (typed frame, batch date).
-    * The batch date is the file's (single) calendar day — `min` rather
-    * than the reference's first-row peek, same value on these files. */
+    * The batch date is the file's calendar day — `min` rather than the
+    * reference's first-row peek, same value on these files. The file
+    * must hold exactly one date and no null one, checked in the same
+    * aggregate before anything is written: the day's facts land as a
+    * dynamic overwrite of the partitions their rows fall in, so a second
+    * date would replace another day's partition. */
   def transactions(spark: SparkSession, path: String): (DataFrame, Date) = {
     val raw = spark.read
       .option("sep", ";")
@@ -24,8 +28,13 @@ object Ingest {
       .schema(Schemas.transactionsCsv)
       .csv(path)
     val typed = typedTransactions(raw)
-    val day = typed.agg(min(to_date(col("transaction_date")))).head().getDate(0)
-    (typed, day)
+    val date = to_date(col("transaction_date"))
+    val r = typed.agg(min(date), max(date), count_if(date.isNull)).head()
+    val (first, last, nNull) = (r.getDate(0), r.getDate(1), r.getLong(2))
+    require(first != null && first == last && nNull == 0,
+      s"$path must hold one transaction date; it holds dates $first to " +
+        s"$last and $nNull row(s) with a null date")
+    (typed, first)
   }
 
   /** S1–S3 typing projection, shared by the batch reader above and the

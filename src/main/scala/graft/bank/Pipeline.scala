@@ -8,12 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Daily batch orchestration, reference order (`main.py:85-117`):
-  * ingest 3 files → fact append (blacklist anti-join dedup, transactions
-  * blind append) → SCD2 terminals transition → four fraud rules appended
-  * to REP_FRAUD → the day's META_LOADING audit rows. Each day is one
-  * call; state lives in the [[Warehouse]]. Staging and rule row counts
-  * are observed on the writes themselves, and META is written once per
-  * day (see [[runDayStaged]]).
+  * ingest 3 files → blacklist fact append (anti-join dedup) → SCD2
+  * terminals transition → the transactions day ([[Pipeline.transactionsDay]]:
+  * fact partition, the four fraud rules into REP_FRAUD, the day's
+  * META_LOADING audit rows). Each day is one call; state lives in the
+  * [[Warehouse]].
   */
 final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
                      incrementalRules12: Boolean = false,
@@ -37,14 +36,7 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
                      // and the only formulation that survives hot keys at
                      // scale (89.1 s → 1.1 s on one hot card, SCALING.md).
                      // `false` restores the reference's naive plan.
-                     bucketedBandJoins: Boolean = true,
-                     // >1 spreads a hot (card, Δ-bucket) pair in the rule-3/4
-                     // band joins over this many tasks (content-hash salt —
-                     // see [[graft.operators.BandJoin]]); identical output
-                     // (BucketedRulesSpec), parallelism-only dial for the
-                     // one-card-hammered-in-one-hour shape below AQE's
-                     // skew-split threshold.
-                     bandJoinSalt: Int = 1) {
+                     bucketedBandJoins: Boolean = true) {
   private val spark: SparkSession = wh.spark
 
   import Pipeline._
@@ -64,37 +56,33 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
   }
 
   /** The post-ingest daily cycle over already-typed staging frames:
-    * fact updates → SCD2 terminals → fraud mart → audit. Split from
-    * [[runDay]] so synthetic multi-day parity specs and the end-to-end
-    * scale probe ([[graft.ScaleStress]]) can drive the pipeline at volume
-    * without materializing CSV/XLSX drops.
+    * blacklist fact → SCD2 terminals → [[Pipeline.transactionsDay]].
+    * Split from [[runDay]] so synthetic multi-day specs can drive the
+    * pipeline without materializing CSV/XLSX drops (the round-12 volume
+    * probe of SCALING.md's "flagship daily workload" drove it too).
+    * `txns` must hold the rows of `day` only ([[Ingest.transactions]]
+    * enforces it for a file): the fact lands as a dynamic overwrite of
+    * the partitions the rows fall in.
     *
-    * Every write is one Spark execution that also yields the row counts
-    * the audit trail needs ([[RowCount]], observed on the write — no
-    * separate count job; S8/S15). The one exception is the terminals
-    * snapshot: SCD2 reads it three times, so it is cached and counted.
-    * The four rules land as ONE mart append, computed against the mart
-    * as it stood before the day: each rule's J12 anti-join filters only
-    * its own `event_type`, which no other rule produces, so this is
-    * row-identical to the reference's rule-by-rule appends. The day's
-    * ten META rows follow as one append, in reference order — a day
-    * that throws leaves no META rows behind. */
+    * The blacklist count is observed on its append ([[RowCount]]); the
+    * terminals snapshot is cached and counted, since SCD2 reads it three
+    * times. The day's ten META rows land as one append, in reference
+    * order, after the mart write — a day that throws leaves no META
+    * rows behind.
+    *
+    * Re-running a day rewrites its fact and mart partitions instead of
+    * appending a second copy. The blacklist append is idempotent through
+    * its anti-join; the SCD2 transition and the META rows are not — a
+    * re-run applies the snapshot again and logs the day again. */
   def runDayStaged(txns: DataFrame, blacklist: DataFrame,
                    terminals: DataFrame, day: Date): Unit = {
-    // --- fact updates (`comm_funcs.py:47-78`); each write counts its
-    // staging input
+    // --- blacklist fact (`comm_funcs.py:47-56`)
     val blFact = wh.readOr(FactBlacklist)
     val (blNew, Seq(nBlacklist)) =
       RowCount.observe(Seq("stg_passport_blacklist" -> blacklist))(bl =>
         bl.head.join(blFact.select("passport"), Seq("passport"), "left_anti")
           .select("date", "passport"))
     wh.append(FactBlacklist, blNew)
-    // facts are laid out date-partitioned: daily consumers prune to one
-    // partition; the reference's full-history rules still scan all of it
-    val (factRows, Seq(nTxns)) = RowCount.observe(Seq("stg_transactions" ->
-        txns.select(Schemas.factTransactions.fieldNames.map(col).toSeq: _*)
-          .withColumn("txn_date", to_date(col("transaction_date")))))(_.head)
-    wh.append(FactTransactions, factRows, partitionCols = Seq("txn_date"))
 
     // --- SCD2 terminals dimension (`incr_loading.py`)
     val stgTerminals = terminals.cache()
@@ -107,45 +95,87 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
       .select(Schemas.dimTerminalsHist.fieldNames.map(col).toSeq: _*))
     stgTerminals.unpersist()
 
-    // --- fraud mart (`loading_rep_fraud.py`): the reference rules read
-    // the FULL accumulated fact table each day. The incremental modes
-    // prune the read BELOW the cache boundary so the parquet scan itself
-    // skips cold partitions — with both modes on, a day's run touches at
-    // most two txn_date partitions of the fact, however old the table.
-    val (facts, facts12, facts34) =
-      ruleFacts(wh, day, incrementalRules12, incrementalRules34)
-    val repBefore = wh.readOr(RepFraud)
-    val (mart, ruleCounts) = RowCount.observe(Seq(
-      "REP_FRAUD_passport" ->
-        FraudRules.rule1(facts12, wh.read(FactBlacklist), seed, day),
-      "REP_FRAUD_contract" -> FraudRules.rule2(facts12, seed, day),
-      "REP_FRAUD_diff_cities" -> FraudRules.rule3(facts34,
-        wh.read(DimTerminals), seed, repBefore, day, bucketedBandJoins,
-        bandJoinSalt),
-      "REP_FRAUD_attempt_amount" -> FraudRules.rule4(facts34, seed,
-        repBefore, day, bucketedBandJoins, bandJoinSalt)))(
-      _.reduce(_ unionByName _))
-    wh.append(RepFraud, mart)
-    facts.unpersist()
-
-    // --- audit (`comm_funcs.py:13-44`), reference order: staging
-    // counts, staging clears, then one row per rule
-    wh.logMeta(
-      Seq(Meta("stg_transactions", day, nTxns.get()),
-        Meta("stg_passport_blacklist", day, nBlacklist.get()),
-        Meta("stg_terminals", day, nTerminals)) ++
-      Seq("stg_transactions", "stg_terminals", "stg_passport_blacklist")
-        .map(t => Meta(s"CLEAR_$t", day, 0)) ++
-      ruleCounts.map(n => Meta(n.label, day, n.get())))
+    // --- facts, fraud mart and the day's audit (`comm_funcs.py:13-78`,
+    // `loading_rep_fraud.py`); META in reference order: staging counts,
+    // staging clears, then one row per rule
+    transactionsDay(wh, seed, day,
+      txns.select(Schemas.factTransactions.fieldNames.map(col).toSeq: _*)
+        .withColumn("txn_date", to_date(col("transaction_date"))),
+      incrementalRules12, incrementalRules34, bucketedBandJoins,
+      extraMeta = Seq(Meta("stg_passport_blacklist", day, nBlacklist.get()),
+          Meta("stg_terminals", day, nTerminals)) ++
+        Seq("stg_transactions", "stg_terminals", "stg_passport_blacklist")
+          .map(t => Meta(s"CLEAR_$t", day, 0)))
   }
 }
 
 object Pipeline {
 
-  /** The fact-table frames the four fraud rules read, under the two
-    * incremental dials — shared by the batch pipeline and the streaming
-    * twin so the pruning logic lives once. Returns (cached widest frame,
-    * rules-1/2 input, rules-3/4 input); the caller unpersists the first.
+  /** The one code that lands a transactions day, for the batch
+    * [[Pipeline.runDayStaged]] and the streaming
+    * [[graft.streaming.IngestStream.applyTransactionsBatch]] alike. In
+    * order:
+    *
+    *  1. `dayRows` (fact columns plus `txn_date`) land as a dynamic
+    *     overwrite of their `txn_date` partition, which yields the
+    *     staging count ([[RowCount]]); then `failpoint("fact_overwrite")`;
+    *  2. the four fraud rules run over [[ruleFacts]] and land as ONE
+    *     dynamic overwrite of `report_dt=<day>`, which yields the four
+    *     rule counts; then `failpoint("mart_overwrite")`;
+    *  3. one META append: `stg_transactions`, then `extraMeta`, then the
+    *     four rule rows in reference order. The last of them
+    *     (`REP_FRAUD_attempt_amount`) is the streaming twin's
+    *     day-completion marker.
+    *
+    * The rules are computed against the mart WITHOUT `report_dt = day`:
+    * an earlier attempt's rows for this day must not feed J12's
+    * anti-join, or the healing overwrite would drop exactly the rows
+    * that attempt wrote. The reference appends the rules one by one, but
+    * each rule's anti-join filters its OWN event_type
+    * (`loading_rep_fraud.py:86-91,123-128`), which no other rule
+    * produces, so computing all four against the prior mart is
+    * row-identical to the reference's order.
+    *
+    * A cut at either failpoint, followed by a re-run of the same day,
+    * leaves the fact and mart of an uninterrupted run and the day's META
+    * rows exactly once: both writes are partition overwrites and META is
+    * written only after them. `failpoint` is the crash-injection seam; a
+    * throwing hook simulates a crash there. */
+  private[graft] def transactionsDay(wh: Warehouse, seed: Seeds.Seed,
+      day: Date, dayRows: DataFrame, incremental12: Boolean,
+      incremental34: Boolean, bucketed: Boolean, extraMeta: Seq[Meta],
+      failpoint: String => Unit = _ => ()): Unit = {
+    val (factRows, Seq(nTxns)) =
+      RowCount.observe(Seq("stg_transactions" -> dayRows))(_.head)
+    wh.overwritePartitions(FactTransactions, factRows, Seq("txn_date"))
+    failpoint("fact_overwrite")
+    // the reference rules read the FULL accumulated fact each day; the
+    // incremental modes prune the read below the cache boundary
+    val (facts, facts12, facts34) =
+      ruleFacts(wh, day, incremental12, incremental34)
+    try {
+      val repBefore =
+        wh.readOr(RepFraud).where(col("report_dt") =!= lit(day))
+      val (mart, ruleCounts) = RowCount.observe(Seq(
+        "REP_FRAUD_passport" ->
+          FraudRules.rule1(facts12, wh.readOr(FactBlacklist), seed, day),
+        "REP_FRAUD_contract" -> FraudRules.rule2(facts12, seed, day),
+        "REP_FRAUD_diff_cities" -> FraudRules.rule3(facts34,
+          wh.readOr(DimTerminals), seed, repBefore, day, bucketed),
+        "REP_FRAUD_attempt_amount" ->
+          FraudRules.rule4(facts34, seed, repBefore, day, bucketed)))(
+        _.reduce(_ unionByName _))
+      wh.overwritePartitions(RepFraud, mart, Seq("report_dt"))
+      failpoint("mart_overwrite")
+      wh.logMeta((Meta("stg_transactions", day, nTxns.get()) +: extraMeta) ++
+        ruleCounts.map(n => Meta(n.label, day, n.get())))
+    } finally facts.unpersist()
+  }
+
+  /** The fact-table frames the four fraud rules read in
+    * [[transactionsDay]], under the two incremental dials. Returns
+    * (cached widest frame, rules-1/2 input, rules-3/4 input); the caller
+    * unpersists the first.
     *
     *  - rules 1/2 (no cross-day joins): today's partition only when
     *    `incremental12` — the sane default at scale, each hit reported

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.{DateType, StructType}
 
 /** Parquet-backed warehouse layer: the Spark replacement for the
   * reference's PostgreSQL schema (`comm_funcs.py:10`). Tables live as
-  * parquet directories under a root; facts append, dimensions swap
+  * parquet directories under a root; facts and the mart land as
+  * day-partition overwrites, the audit log appends, dimensions swap
   * atomically (write-new → move), since Spark cannot overwrite a table
   * it is currently reading (the SCD2 dimension is input AND output of
   * the same transition — SURVEY §7 hard-part 2).
@@ -87,15 +88,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * concurrent access — see [[compact]]'s concurrency contract
     * (single writer; a crash anywhere in the window is healed by
     * [[recover]] using the [[CommitMarker]] rules). */
-  def overwrite(name: String, df: DataFrame): Unit = {
-    heal(name)
-    val tmp = Paths.get(root, s"$name.tmp")
-    deleteRecursive(tmp)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    Files.writeString(tmp.resolve(CommitMarker), "")
-    deleteRecursive(dir(name))
-    Files.move(tmp, dir(name))
-  }
+  def overwrite(name: String, df: DataFrame): Unit =
+    overwriteTagged(name, df, Map.empty)
 
   /** [[overwrite]] plus small metadata files written INTO the new table
     * directory before the swap, so the tags and the data version move
@@ -415,8 +409,8 @@ object Warehouse {
 
   /** Declared schemas of the daily cycle's tables, used by
     * [[Warehouse.read]] and [[Warehouse.readOr]]. The fact carries its
-    * `txn_date` partition column; the streaming mart's `report_dt`
-    * partition column is part of [[Schemas.repFraud]] already. */
+    * `txn_date` partition column; the mart's `report_dt` partition
+    * column is part of [[Schemas.repFraud]] already. */
   val KnownSchemas: Map[String, StructType] = Map(
     Pipeline.FactTransactions -> Schemas.factTransactions
       .add("txn_date", DateType),

@@ -101,33 +101,20 @@ object BandJoin {
   /** General two-table band join: rows l ∈ left, r ∈ right with equal
     * `key` and l.lts < r.rts < l.lts + Δ. Same Δ-bucket rewrite as
     * [[pairsWithin]] (left probes its own bucket and the next one);
-    * column names must already be disjoint apart from `key`. `salt` > 1
-    * spreads a hot (key, Δ-bucket) pair over that many tasks. */
+    * column names must already be disjoint apart from `key`. */
   def joinWithin(left: DataFrame, right: DataFrame, key: String,
-                 ltsCol: String, rtsCol: String, deltaUs: Long,
-                 salt: Int = 1): DataFrame = {
-    require(salt >= 1, s"salt must be >= 1, got $salt")
-    val l0 = left
+                 ltsCol: String, rtsCol: String, deltaUs: Long): DataFrame = {
+    val l = left
       .withColumn("__lus", unix_micros(col(ltsCol)))
       .withColumn("__bucket", explode(array(
         expr(s"__lus DIV ${deltaUs}L"), expr(s"__lus DIV ${deltaUs}L + 1L"))))
-    val r0 = right
+    val r = right
       .withColumn("__rus", unix_micros(col(rtsCol)))
       .withColumn("__bucket", expr(s"__rus DIV ${deltaUs}L"))
-    val joinKeys = if (salt <= 1) Seq(key, "__bucket")
-                   else Seq(key, "__bucket", "__salt")
-    // the right side takes the deterministic content salt; the left side
-    // (already exploded ×2 over buckets) replicates over every salt
-    val r = if (salt <= 1) r0
-            else pinSalted(r0.withColumn("__salt", contentSalt(r0, salt)),
-              joinKeys, salt)
-    val l = if (salt <= 1) l0
-            else pinSalted(l0.withColumn("__salt", allSalts(salt)),
-              joinKeys, salt)
-    l.join(r, joinKeys)
+    l.join(r, Seq(key, "__bucket"))
       .where(col("__lus") < col("__rus") &&
         col("__rus") - col("__lus") < deltaUs)
-      .drop(joinKeys.filterNot(_ == key): _*).drop("__lus", "__rus")
+      .drop("__bucket", "__lus", "__rus")
   }
 
   /** Naive formulation (equi key + residual) — the semantic reference

@@ -875,7 +875,8 @@ object Dedup {
     * members still witnesses over-merge — a chained cluster's weak
     * links are everywhere, not in the tail of the id order
     * (ClusterAuditSpec proves both properties on a generated
-    * mega-cluster; ScaleStress measures capped vs uncapped).
+    * mega-cluster; SCALING.md's round-10 "mega-cluster + hot shingle"
+    * entry measures capped vs uncapped).
     *
     * `idCol` must be integral (the bottom-k key is a long). */
   def clusterOverMergeAudit(docs: DataFrame, idCol: String, textCol: String,

@@ -240,7 +240,7 @@ object Ivf {
     * standard IVF deployment shape (nlist grows with the corpus,
     * nprobe is a small recall dial that does not); recall at equal
     * nprobe is measured against the exact truth set in IvfSpec and the
-    * ScaleStress `ivfdial` section (SCALING.md round 14) rather than
+    * SCALING.md's round-14 entry "the IVF constant fraction" rather than
     * assumed.
     *
     * The floors keep every corpus up to floorNlist² = 4096 rows on the
@@ -263,7 +263,7 @@ object Ivf {
     * on index size and candidate volume — the asymptotic Θ(n^1.5 log n)
     * shape is the dial's — and it buys back the boundary-miss recall
     * the leaner nprobe gives up: measured on the deterministic index
-    * (ScaleStress `ivfdial`, SCALING.md round 14), recall@5 vs exact
+    * (SCALING.md, round 14 "the IVF constant fraction"), recall@5 vs exact
     * truth 0.800/0.695/0.568 across sf0.1/10×/100× against the old
     * constant-fraction dial's 0.582/0.491/0.646 — ahead at the first
     * two decades outright, and at 100× budget-matched (nprobe raised

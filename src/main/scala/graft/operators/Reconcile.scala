@@ -88,8 +88,9 @@ object Reconcile {
     * materialized: each is consumed by BOTH anti-joins (and the bucket
     * list by both semi-joins), and without pinning, Spark re-derives
     * them per consumer — measured 19.5 s → 6.9 s at 4.8M rows
-    * (ScaleStress `reconcile`). Bounded by the dirty-bucket row count,
-    * i.e. drift-proportional in the sized-right regime; the blocks are
+    * (SCALING.md, "Reconciliation: ship fingerprints, not rows").
+    * Bounded by the dirty-bucket row count, i.e. drift-proportional in
+    * the sized-right regime; the blocks are
     * persistent RDDs, so long-lived applications release them via the
     * same hygiene the bench applies (see SCALING.md). */
   def drillDown(a: DataFrame, b: DataFrame, bucketKey: Column,

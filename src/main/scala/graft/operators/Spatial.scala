@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * distribution degenerates to per-cell quadratic — the same hot-key
   * regime as the band join's one-hot-key case, and the same mitigation
   * applies (shrink the cell edge below ε and probe a wider stencil,
-  * trading stencil fan-out for occupancy; measured in ScaleStress).
+  * trading stencil fan-out for occupancy; measured in SCALING.md,
+  * "Spatial ε-joins: the 2-D Δ-bucket").
   *
   * Coordinates are exact integers; every distance comparison is
   * integer arithmetic — no floating point in the predicate path, so

@@ -1885,8 +1885,9 @@ object TextQueries {
     * earliest members still witnesses over-merge (a chained cluster's
     * weak links are everywhere, not in the tail of the id order). The
     * cap is mirrored verbatim in the oracle SQL (row_number <= 64 on
-    * the same order), so the hash check stays exact; ScaleStressSpec
-    * proves the capped plan flat on a corpus with one mega-cluster. */
+    * the same order), so the hash check stays exact; ClusterAuditSpec
+    * proves the capped plan flat on a corpus with one mega-cluster
+    * (SCALING.md, round 10 "mega-cluster + hot shingle"). */
   val q313 = QueryDef.sql("q313_cluster_diameter",
     """WITH RECURSIVE
       |sh AS (SELECT DISTINCT doc_id, substring(text, i, 8) AS s

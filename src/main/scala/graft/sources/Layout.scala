@@ -103,7 +103,7 @@ object Layout {
     * none on the others; Z-order trades a little of the lead column's
     * locality for locality on EVERY listed dimension, so a predicate on
     * any subset of `zCols` touches ~files^(1 - |subset|/D) of the files
-    * instead of all of them (measured: ScaleStress `zorder`). The
+    * instead of all of them (measured: SCALING.md, "Z-order layout"). The
     * standard lakehouse layout for facts queried along several axes
     * (time AND user AND …).
     *

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.bank.{FraudRules, Ingest, Pipeline, RowCount, Schemas, Seeds,
-  Warehouse}
+import graft.bank.{Ingest, Pipeline, Schemas, Seeds, Warehouse}
 import graft.bank.Warehouse.Meta
 import graft.operators.Cdc
 import graft.sources.Xlsx
@@ -33,7 +32,10 @@ import graft.sources.Xlsx
   * The typing projection is the SAME code as the batch path
   * ([[Ingest.typedTransactions]]) and the sink is laid out
   * date-partitioned like the warehouse fact table, so batch and
-  * streaming ingestion are interchangeable row-for-row.
+  * streaming ingestion are interchangeable row-for-row. The
+  * transactions twin ([[transactionsFraudAvailableNow]]) lands each day
+  * through the batch pipeline's own day core,
+  * [[graft.bank.Pipeline.transactionsDay]].
   */
 object IngestStream {
 
@@ -375,48 +377,25 @@ object IngestStream {
   /** foreachBatch body for the transactions → fact → REP_FRAUD twin,
     * factored out so the replay semantics are directly testable. A
     * micro-batch may carry several daily files; days apply in calendar
-    * order, and each day runs the reference's full per-day sequence
-    * (`main.py:43-66` ingest + `loading_rep_fraud.py` rules):
+    * order, each through the one day core the batch pipeline uses,
+    * [[graft.bank.Pipeline.transactionsDay]]: the day's `txn_date`
+    * partition overwrite, then the four fraud rules as one overwrite of
+    * `report_dt=<day>`, then the day's five META rows (`stg_transactions`
+    * and the four rule rows) as one append. A COMPLETED day — its last
+    * rule marker (`REP_FRAUD_attempt_amount`) already in META — is
+    * skipped on re-delivery, after a loud content check (a same-day file
+    * with DIFFERENT content is an upstream fault, not a replay).
     *
-    *  1. the day's rows land as a DYNAMIC PARTITION OVERWRITE of their
-    *     `txn_date` partition ([[Warehouse.overwritePartitions]]) — the
-    *     idempotent write: a replayed micro-batch re-derives identical
-    *     day rows and rewrites the same partition, where an append
-    *     would double it;
-    *  2. the four fraud rules run against the accumulated fact (which
-    *     now includes this day but no later one) and land in REP_FRAUD,
-    *     each logging its META row like the batch path. Every row count
-    *     in those META rows is observed on the write it describes
-    *     ([[graft.bank.RowCount]]) — the fact overwrite yields the
-    *     staging count, the mart overwrite the four rule counts — so no
-    *     separate count runs;
-    *  3. a COMPLETED day — its last rule marker
-    *     (`REP_FRAUD_attempt_amount`) already in META — is skipped
-    *     entirely on re-delivery, after a loud content check (row count
-    *     must match the committed partition: a same-day file with
-    *     DIFFERENT content is an upstream fault, not a replay).
+    * Exactly-once summary: the fact and the mart are exactly-once by
+    * idempotent partition overwrite, and META is exactly-once because it
+    * is written once, after both, and a day with its marker is never
+    * re-run. A crash at either failpoint (`fact_overwrite`,
+    * `mart_overwrite`) followed by a replay of the same batch heals to
+    * byte parity with an uninterrupted run, with the day's META rows
+    * logged once (TransactionsDaySpec, FraudStreamSpec).
     *
-    * Exactly-once summary: fact partitions are exactly-once by
-    * idempotent overwrite; the MART is exactly-once the same way — the
-    * four rules' output for a day lands as ONE dynamic partition
-    * overwrite of `report_dt=<day>` (computed against the mart
-    * EXCLUDING that partition, so a crashed attempt's own partial rows
-    * never perturb the recomputation), so a replay of any cut inside
-    * the day rewrites the identical partition instead of appending a
-    * second copy. Every write boundary therefore heals to byte parity
-    * with an uninterrupted run (FraudStreamSpec crash-injection cases);
-    * only META audit rows re-log on replay — deliberate at-least-once
-    * audit semantics, same as the xlsx twins. The rules are computed
-    * from the mart-before-today: the reference appends them
-    * sequentially, but each rule's anti-join filters its OWN event_type
-    * (`loading_rep_fraud.py:86-91,123-128`), which same-day earlier
-    * rules never produce — so batch-computing all four against the
-    * prior mart is row-identical to the reference's order
-    * (FraudStreamSpec proves mart parity with the batch path).
-    *
-    * `failpoint` is the crash-injection seam: called with a label after
-    * each write boundary; a throwing hook simulates a crash exactly
-    * there. Production leaves it a no-op.
+    * `failpoint` is the crash-injection seam, forwarded to the day core.
+    * Production leaves it a no-op.
     *
     * Drive order within a day mirrors `main.py`: blacklist and
     * terminals drains first, then this one, so the rules see the day's
@@ -432,7 +411,6 @@ object IngestStream {
   private[streaming] def applyTransactionsBatch(wh: Warehouse,
       seed: Seeds.Seed, batch: DataFrame,
       incrementalRules12: Boolean = DefaultIncrementalRules12,
-      bucketedBandJoins: Boolean = true,
       incrementalRules34: Boolean = DefaultIncrementalRules34,
       failpoint: String => Unit = _ => ()): Unit = {
     val rows = batch.cache()
@@ -525,49 +503,9 @@ object IngestStream {
               s"(rows/xor-sig $incoming vs committed $existing); a " +
               "completed day can only be replayed verbatim — " +
               "correct-by-replacement needs an explicit operator action")
-        } else {
-          val (factRows, Seq(n)) =
-            RowCount.observe(Seq("stg_transactions" -> dayRows))(_.head)
-          wh.overwritePartitions(Pipeline.FactTransactions, factRows,
-            partitionCols = Seq("txn_date"))
-          failpoint("fact_overwrite")
-          wh.logMeta(Seq(Meta("stg_transactions", day, n.get())))
-          failpoint("meta_stg")
-          val (facts, facts12, facts34) = Pipeline.ruleFacts(wh, day,
-            incrementalRules12, incrementalRules34)
-          try {
-            val blAll = wh.readOr(Pipeline.FactBlacklist)
-            val dim = wh.readOr(Pipeline.DimTerminals)
-            // the mart WITHOUT today's partition: a crashed earlier
-            // attempt's own partial rows must not feed J12's anti-join,
-            // or the healing overwrite would drop exactly the rows the
-            // crashed attempt already wrote
-            val repBefore = wh.readOr(Pipeline.RepFraud)
-              .where(col("report_dt") =!= lit(day))
-            // ONE idempotent mart write for the whole day; it also
-            // yields each rule's row count
-            val (mart, ruleCounts) = RowCount.observe(Seq(
-              "REP_FRAUD_passport" ->
-                FraudRules.rule1(facts12, blAll, seed, day),
-              "REP_FRAUD_contract" ->
-                FraudRules.rule2(facts12, seed, day),
-              "REP_FRAUD_diff_cities" ->
-                FraudRules.rule3(facts34, dim, seed, repBefore, day,
-                  bucketedBandJoins),
-              "REP_FRAUD_attempt_amount" ->
-                FraudRules.rule4(facts34, seed, repBefore, day,
-                  bucketedBandJoins)))(_.reduce(_ unionByName _))
-            wh.overwritePartitions(Pipeline.RepFraud, mart,
-              partitionCols = Seq("report_dt"))
-            failpoint("mart_overwrite")
-            // rule META rows in reference order; the LAST one
-            // (attempt_amount) is the day-completion marker
-            ruleCounts.foreach { n =>
-              wh.logMeta(Seq(Meta(n.label, day, n.get())))
-              failpoint(s"meta_${n.label}")
-            }
-          } finally facts.unpersist()
-        }
+        } else Pipeline.transactionsDay(wh, seed, day, dayRows,
+          incrementalRules12, incrementalRules34, bucketed = true,
+          extraMeta = Nil, failpoint)
       }
     } finally rows.unpersist()
   }
@@ -606,7 +544,6 @@ object IngestStream {
       // default: that is the explicitly-named golden mode.
       maxFilesPerTrigger: Int = 10000,
       incrementalRules12: Boolean = DefaultIncrementalRules12,
-      bucketedBandJoins: Boolean = true,
       incrementalRules34: Boolean = DefaultIncrementalRules34,
       compactAboveFiles: Int = 256,
       // crash-injection seam, forwarded to [[applyTransactionsBatch]];
@@ -631,7 +568,7 @@ object IngestStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyTransactionsBatch(wh, seed, batch, incrementalRules12,
-          bucketedBandJoins, incrementalRules34, failpoint)
+          incrementalRules34, failpoint)
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -10,6 +10,7 @@ class QuarantineSpec extends AnyFunSuite {
   test("bad rows divert to quarantine with reasons; good rows match the strict reader") {
     val dir = java.nio.file.Files.createTempDirectory("quarantine")
     val f = dir.resolve("transactions_01032021.csv")
+    val clean = dir.resolve("transactions_clean.csv")
     java.nio.file.Files.writeString(f,
       """transaction_id;transaction_date;amount;card_num;oper_type;oper_result;terminal
         |T1;2021-03-01 10:00:00;1046,40;C1;PAYMENT;SUCCESS;A01
@@ -27,8 +28,16 @@ class QuarantineSpec extends AnyFunSuite {
         .as[(String, BigDecimal)].collect().toMap
       assert(goodRows.keySet == Set("T1", "T2"))
       assert(goodRows("T1") == BigDecimal("1046.40"))
-      // same schema as the strict reader
-      assert(good.schema == Ingest.transactions(spark, f.toString)._1.schema)
+      // same schema as the strict reader; the strict reader rejects this
+      // file, whose unparseable timestamp is a null transaction date
+      java.nio.file.Files.writeString(clean,
+        """transaction_id;transaction_date;amount;card_num;oper_type;oper_result;terminal
+          |T1;2021-03-01 10:00:00;1046,40;C1;PAYMENT;SUCCESS;A01
+          |""".stripMargin)
+      assert(good.schema == Ingest.transactions(spark, clean.toString)._1.schema)
+      val strict = intercept[IllegalArgumentException](
+        Ingest.transactions(spark, f.toString))
+      assert(strict.getMessage.contains("1 row(s) with a null date"))
 
       val reasons = quarantine.select("reason").as[String]
         .collect().sorted.toSeq
@@ -43,6 +52,7 @@ class QuarantineSpec extends AnyFunSuite {
         .collect().forall(_.contains("transactions_01032021")))
     } finally {
       java.nio.file.Files.deleteIfExists(f)
+      java.nio.file.Files.deleteIfExists(clean)
       java.nio.file.Files.deleteIfExists(dir)
     }
   }

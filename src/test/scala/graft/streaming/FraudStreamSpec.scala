@@ -211,18 +211,16 @@ class FraudStreamSpec extends AnyFunSuite {
   }
 
   test("crash injection: every write boundary of the multi-write day heals to byte parity") {
-    // The day's writes, in order: fact partition overwrite → stg META →
-    // mart partition overwrite → four rule META rows. A crash after any
-    // of them, followed by a replay of the same batch (what the
+    // The day's writes, in order: fact partition overwrite → mart
+    // partition overwrite → one META append. A crash after either
+    // overwrite, followed by a replay of the same batch (what the
     // checkpoint guarantees), must converge to the exact fact and mart
     // of an uninterrupted run: the fact heals by idempotent partition
     // overwrite, the mart by the per-day partition overwrite computed
     // against the mart-without-today (so a crashed attempt's own partial
-    // rows cannot perturb the recomputation). META audit rows are
-    // at-least-once by design — the log records both attempts.
-    val labels = Seq("fact_overwrite", "meta_stg", "mart_overwrite",
-      "meta_REP_FRAUD_passport", "meta_REP_FRAUD_contract",
-      "meta_REP_FRAUD_diff_cities", "meta_REP_FRAUD_attempt_amount")
+    // rows cannot perturb the recomputation). META is written once,
+    // after both, so the day's rows are logged exactly once.
+    val labels = Seq("fact_overwrite", "mart_overwrite")
 
     def typedDay(d: String): DataFrame = {
       val raw = spark.read.option("sep", ";").option("header", "true")
@@ -280,7 +278,7 @@ class FraudStreamSpec extends AnyFunSuite {
       // day-3 completion marker present exactly as in the oracle
       assert(wh.read(Pipeline.MetaLoading)
         .where(col("table_name") === "REP_FRAUD_attempt_amount" &&
-          col("event_dt") === "2021-03-03").count() >= 1)
+          col("event_dt") === "2021-03-03").count() == 1)
     }
     day3.unpersist()
   }
