@@ -87,10 +87,12 @@ object FraudRules {
       if (c == "card_num") d else d.withColumnRenamed(c, s"${c}_$n"))
 
   /** Same-card ordered pairs within Δ: the Δ-bucketed rewrite
-    * (`operators.BandJoin` — the hot-key-safe 100 TB plan, the default)
-    * or the naive equi+residual (the reference's plan — fine at its data
-    * shapes, quadratic on a hot key). Identical semantics either way
-    * (BucketedRulesSpec proves it on the fixture byte-for-byte). */
+    * (`operators.BandJoin` — the hot-key-safe 100 TB plan, the only one
+    * the daily cycle runs) or, with `bucketed = false`, the naive
+    * equi+residual (the reference's plan — fine at its data shapes,
+    * quadratic on a hot key), kept as the reference the specs compare
+    * against. Identical rows either way (BucketedRulesSpec on the
+    * fixture, TransactionsDaySpec on midnight-crossing chains). */
   private def bandPairs(a: DataFrame, b: DataFrame, i: Int, j: Int,
                         deltaUs: Long, bucketed: Boolean): DataFrame =
     if (bucketed)

@@ -13,30 +13,13 @@ import org.apache.spark.sql.functions._
   * fact partition, the four fraud rules into REP_FRAUD, the day's
   * META_LOADING audit rows). Each day is one call; state lives in the
   * [[Warehouse]].
+  *
+  * The batch mode fixes the rule plan: every day rescans the whole
+  * accumulated fact, as the reference does (`loading_rep_fraud.py:73,107`)
+  * — the golden mode, which tolerates days run out of order. The
+  * streaming twin runs the pruned plan of the same core.
   */
-final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
-                     incrementalRules12: Boolean = false,
-                     // Δ-margin incremental mode for the cross-day rules 3/4:
-                     // prune the daily fact read to partitions [day−1, day].
-                     // Any rule-3/4 chain is confined to Δ ≤ 1 h of its last
-                     // transaction, so a chain with any leg on `day` fits the
-                     // window, and a chain confined to days ≤ day−1 was
-                     // derived (and reported) by an earlier run — J12's
-                     // anti-join makes its re-derivation a no-op. Under
-                     // in-day-order operation (the streaming twin enforces
-                     // it; the reference's cron assumes it) the output is
-                     // byte-identical to the full-history rescan
-                     // (IncrementalPipelineSpec) at O(2 days) per day instead
-                     // of O(history) — the plan that survives years of facts.
-                     // `false` restores the reference's full rescan
-                     // (`loading_rep_fraud.py:73,107`).
-                     incrementalRules34: Boolean = false,
-                     // Δ-bucketed band joins are the default: byte-identical
-                     // to the naive plan on the fixture (BucketedRulesSpec)
-                     // and the only formulation that survives hot keys at
-                     // scale (89.1 s → 1.1 s on one hot card, SCALING.md).
-                     // `false` restores the reference's naive plan.
-                     bucketedBandJoins: Boolean = true) {
+final class Pipeline(wh: Warehouse, seed: Seeds.Seed) {
   private val spark: SparkSession = wh.spark
 
   import Pipeline._
@@ -101,7 +84,7 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
     transactionsDay(wh, seed, day,
       txns.select(Schemas.factTransactions.fieldNames.map(col).toSeq: _*)
         .withColumn("txn_date", to_date(col("transaction_date"))),
-      incrementalRules12, incrementalRules34, bucketedBandJoins,
+      incremental = false,
       extraMeta = Seq(Meta("stg_passport_blacklist", day, nBlacklist.get()),
           Meta("stg_terminals", day, nTerminals)) ++
         Seq("stg_transactions", "stg_terminals", "stg_passport_blacklist")
@@ -127,6 +110,13 @@ object Pipeline {
     *     (`REP_FRAUD_attempt_amount`) is the streaming twin's
     *     day-completion marker.
     *
+    * `incremental` is the mode's rule plan, not a tuning choice: the
+    * batch day passes `false` (the reference's full rescan), the
+    * streaming day `true` (the pruned plan, exact under the day-order
+    * guards of [[graft.streaming.IngestStream.applyTransactionsBatch]]).
+    * Rules 3/4 always run the Δ-bucketed band join
+    * ([[graft.operators.BandJoin.joinWithin]]).
+    *
     * The rules are computed against the mart WITHOUT `report_dt = day`:
     * an earlier attempt's rows for this day must not feed J12's
     * anti-join, or the healing overwrite would drop exactly the rows
@@ -142,17 +132,13 @@ object Pipeline {
     * written only after them. `failpoint` is the crash-injection seam; a
     * throwing hook simulates a crash there. */
   private[graft] def transactionsDay(wh: Warehouse, seed: Seeds.Seed,
-      day: Date, dayRows: DataFrame, incremental12: Boolean,
-      incremental34: Boolean, bucketed: Boolean, extraMeta: Seq[Meta],
-      failpoint: String => Unit = _ => ()): Unit = {
+      day: Date, dayRows: DataFrame, incremental: Boolean,
+      extraMeta: Seq[Meta], failpoint: String => Unit = _ => ()): Unit = {
     val (factRows, Seq(nTxns)) =
       RowCount.observe(Seq("stg_transactions" -> dayRows))(_.head)
     wh.overwritePartitions(FactTransactions, factRows, Seq("txn_date"))
     failpoint("fact_overwrite")
-    // the reference rules read the FULL accumulated fact each day; the
-    // incremental modes prune the read below the cache boundary
-    val (facts, facts12, facts34) =
-      ruleFacts(wh, day, incremental12, incremental34)
+    val (facts, facts12) = ruleFacts(wh, day, incremental)
     try {
       val repBefore =
         wh.readOr(RepFraud).where(col("report_dt") =!= lit(day))
@@ -160,10 +146,10 @@ object Pipeline {
         "REP_FRAUD_passport" ->
           FraudRules.rule1(facts12, wh.readOr(FactBlacklist), seed, day),
         "REP_FRAUD_contract" -> FraudRules.rule2(facts12, seed, day),
-        "REP_FRAUD_diff_cities" -> FraudRules.rule3(facts34,
-          wh.readOr(DimTerminals), seed, repBefore, day, bucketed),
+        "REP_FRAUD_diff_cities" -> FraudRules.rule3(facts,
+          wh.readOr(DimTerminals), seed, repBefore, day),
         "REP_FRAUD_attempt_amount" ->
-          FraudRules.rule4(facts34, seed, repBefore, day, bucketed)))(
+          FraudRules.rule4(facts, seed, repBefore, day)))(
         _.reduce(_ unionByName _))
       wh.overwritePartitions(RepFraud, mart, Seq("report_dt"))
       failpoint("mart_overwrite")
@@ -173,39 +159,35 @@ object Pipeline {
   }
 
   /** The fact-table frames the four fraud rules read in
-    * [[transactionsDay]], under the two incremental dials. Returns
-    * (cached widest frame, rules-1/2 input, rules-3/4 input); the caller
-    * unpersists the first.
+    * [[transactionsDay]]: (cached rules-3/4 input, rules-1/2 input); the
+    * caller unpersists the first.
     *
-    *  - rules 1/2 (no cross-day joins): today's partition only when
-    *    `incremental12` — the sane default at scale, each hit reported
-    *    exactly once (the reference's full rescan re-reports, SURVEY §7
-    *    quirk 1);
-    *  - rules 3/4 (Δ ≤ 1 h chains): partitions [day−1, day] when
-    *    `incremental34` — byte-identical output under in-day-order
-    *    operation (see the [[Pipeline]] ctor note), O(2 days) per day.
+    *  - `incremental = false` (batch): the whole accumulated fact for all
+    *    four rules, as the reference reads it. Rules 1/2 re-report
+    *    earlier days' hits every day (SURVEY §7 quirk 1).
+    *  - `incremental = true` (streaming): partitions [day−1, day] for
+    *    rules 3/4, and that window filtered to `day` for rules 1/2, so
+    *    each rules-1/2 hit is reported once, on its own day. Any
+    *    rule-3/4 chain spans Δ ≤ 1 h, so a chain with a leg on `day`
+    *    fits the window, and a chain confined to days ≤ day−1 was
+    *    reported by an earlier day — J12's anti-join drops its
+    *    re-derivation. With days applied in order the rules-3/4 rows
+    *    equal the full rescan's, at two partitions per day however
+    *    long the history.
     *
-    * The widest frame any enabled rule needs is what gets cached, and
-    * its filter sits BELOW the cache so the parquet scan itself prunes:
-    * with both dials on, a daily run reads two txn_date partitions no
-    * matter how many years of facts have accumulated. */
+    * The window filter sits BELOW the cache, so the parquet scan itself
+    * prunes to the two partitions. */
   private[graft] def ruleFacts(wh: Warehouse, day: Date,
-      incremental12: Boolean, incremental34: Boolean)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val window34 =
-      col("txn_date").between(date_sub(lit(day), 1), lit(day))
-    val facts = (
-      if (incremental12 && incremental34)
-        wh.read(FactTransactions).where(window34)
-      else wh.read(FactTransactions)).cache()
-    val facts12 =
-      if (incremental12) facts.where(col("txn_date") === lit(day))
-      else facts
-    val facts34 =
-      if (incremental34) facts.where(window34)
-      else facts
-    (facts, facts12, facts34)
-  }
+      incremental: Boolean): (DataFrame, DataFrame) =
+    if (incremental) {
+      val facts = wh.read(FactTransactions)
+        .where(col("txn_date").between(date_sub(lit(day), 1), lit(day)))
+        .cache()
+      (facts, facts.where(col("txn_date") === lit(day)))
+    } else {
+      val facts = wh.read(FactTransactions).cache()
+      (facts, facts)
+    }
 
   val FactTransactions = "dwh_fact_transactions"
   val FactBlacklist = "dwh_fact_passport_blacklist"

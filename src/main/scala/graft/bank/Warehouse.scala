@@ -5,7 +5,6 @@ import java.sql.Date
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DateType, StructType}
 
 /** Parquet-backed warehouse layer: the Spark replacement for the
@@ -82,8 +81,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   private val CommitMarker = "_COMMITTED"
 
   /** Replace via write-new → swap: write to `<name>.tmp`, mark it
-    * complete, delete old, move in. The source plan is fully
-    * materialized before the old directory goes away, so
+    * complete, delete old, move in — the one swap sequence of every
+    * whole-table rewrite ([[compact]] included). The source plan is
+    * fully materialized before the old directory goes away, so
     * self-referencing rewrites (SCD2) are safe. NOT atomic against
     * concurrent access — see [[compact]]'s concurrency contract
     * (single writer; a crash anywhere in the window is healed by
@@ -116,8 +116,12 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     Files.move(tmp, dir(name))
   }
 
-  /** Read a tag file written by [[overwriteTagged]], if present. */
+  /** Read a tag file written by [[overwriteTagged]], if present. Heals
+    * first like every accessor: a version stranded at `<name>.tmp`
+    * carries its tag, and a replay guard must see it, not an untagged
+    * table. */
   def readTag(name: String, tag: String): Option[String] = {
+    heal(name)
     val p = dir(name).resolve(tag)
     if (Files.exists(p)) Some(Files.readString(p)) else None
   }
@@ -201,20 +205,28 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * partition wide. Unpartitioned tables keep the whole-table rewrite
     * (they ARE one partition). */
   def compactIfFragmented(name: String, partitionCols: Seq[String] = Nil,
-                          maxFiles: Int = 256,
-                          targetFileBytes: Long = 128L << 20): Boolean = {
+                          maxFiles: Int = 256): Boolean = {
     heal(name)
     if (partitionCols.isEmpty) {
       if (parquetFileCount(name) > maxFiles) {
-        compact(name, Nil, targetFileBytes); true
+        compact(name); true
       } else false
     } else {
       val parts = leafPartitionDirs(name)
       val perPart = math.max(2, maxFiles / math.max(1, parts.size))
       val frag = parts.filter(p => parquetFilesUnder(p).size > perPart)
-      frag.foreach(p => compactPartition(name, p, targetFileBytes))
+      frag.foreach(compactPartition(name, _))
       frag.nonEmpty
     }
+  }
+
+  /** Size a compacted rewrite aims for: ~128 MiB per output file. */
+  private val TargetFileBytes = 128L << 20
+
+  /** Output files for a rewrite of `files`: ⌈bytes / target⌉, at least 1. */
+  private def compactedFileCount(files: Seq[Path]): Int = {
+    val bytes = files.map(Files.size(_)).sum
+    math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes).toInt
   }
 
   /** Leaf partition directories of a partitioned table (the `col=value`
@@ -259,17 +271,14 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     tmp.stripPrefix("_tmppart_").replace("__EQ__", "=")
 
   /** Rewrite ONE leaf partition directory's small files into
-    * ~`targetFileBytes` ones, leaving every other partition untouched.
+    * ~[[TargetFileBytes]] ones, leaving every other partition untouched.
     * Write-new → swap like [[compact]], but the tmp lives INSIDE the
     * table as an `_`-prefixed sibling (ignored by Spark's listing), so
     * the crash window is one partition wide and [[recoverPartitions]]
     * heals it. Rows inside a leaf dir carry no partition columns, so
     * the rewrite is a plain read→repartition→write of that directory. */
-  def compactPartition(name: String, partDir: Path,
-                       targetFileBytes: Long = 128L << 20): Unit = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val bytes = parquetFilesUnder(partDir).map(Files.size(_)).sum
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+  def compactPartition(name: String, partDir: Path): Unit = {
+    val nFiles = compactedFileCount(parquetFilesUnder(partDir))
     val tmp = partDir.resolveSibling(tmpPartName(partDir.getFileName.toString))
     deleteRecursive(tmp)
     spark.read.parquet(partDir.toString).repartition(nFiles)
@@ -336,15 +345,14 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     recovered
   }
 
-  /** Compact a table's small files into ~`targetFileBytes`-sized ones.
-    * Daily appends leave one file-set per batch; a year of days makes
-    * every scan open hundreds of tiny files (at cluster scale: NameNode
-    * /object-store metadata pressure and per-file open latency dominate
-    * the read). Rewrites through the write-new → swap path shared with
-    * [[overwrite]]; for a partitioned table pass `partitionCols` — rows
-    * re-bucket BY partition so each task writes whole files into its
-    * partition directories and the layout is preserved. Run it off-peak
-    * at a cadence matching append volume; appends after the swap are new
+  /** Compact an unpartitioned table's small files into
+    * ~[[TargetFileBytes]]-sized ones. Daily appends leave one file-set
+    * per batch; a year of days makes every scan open hundreds of tiny
+    * files (at cluster scale: NameNode/object-store metadata pressure
+    * and per-file open latency dominate the read). Rewrites through
+    * [[overwrite]]'s write-new → swap. Partitioned tables compact per
+    * leaf instead ([[compactIfFragmented]]). Run it off-peak at a
+    * cadence matching append volume; appends after the swap are new
     * small files again (the usual compact-behind pattern).
     *
     * Concurrency contract: compact (and overwrite) must be SERIALIZED
@@ -355,29 +363,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * recovery = [[recover]] (moves `<name>.tmp` back). A cluster deployment
     * gets real atomicity from a table format's commit protocol; this
     * layer deliberately keeps the single-writer filesystem shape. */
-  def compact(name: String, partitionCols: Seq[String] = Nil,
-              targetFileBytes: Long = 128L << 20): Unit = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    heal(name)
-    val src = dir(name)
-    val walk = Files.walk(src)
-    val bytes =
-      try walk.filter(p => p.toString.endsWith(".parquet"))
-        .mapToLong(p => Files.size(p)).sum()
-      finally walk.close()
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = read(name)
-    val arranged =
-      if (partitionCols.nonEmpty)
-        df.repartition(nFiles, partitionCols.map(col): _*)
-      else df.repartition(nFiles)
-    val tmp = Paths.get(root, s"$name.tmp")
-    deleteRecursive(tmp)
-    arranged.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(tmp.toString)
-    Files.writeString(tmp.resolve(CommitMarker), "")
-    deleteRecursive(src)
-    Files.move(tmp, src)
+  def compact(name: String): Unit = {
+    val df = read(name) // heals first, so the file count below is exact
+    overwrite(name,
+      df.repartition(compactedFileCount(parquetFilesUnder(dir(name)))))
   }
 
   private def deleteRecursive(p: Path): Unit =

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.bank.{Ingest, Pipeline, Schemas, Seeds, Warehouse}
 import graft.bank.Warehouse.Meta
@@ -36,23 +36,15 @@ import graft.sources.Xlsx
   * transactions twin ([[transactionsFraudAvailableNow]]) lands each day
   * through the batch pipeline's own day core,
   * [[graft.bank.Pipeline.transactionsDay]].
+  *
+  * The streaming mode fixes the rule plan: always the pruned one —
+  * today's partition for rules 1/2, `[day−1, day]` for rules 3/4 — so a
+  * day's cost stays flat however long the history grows (SCALING.md
+  * round-12). The day-order guards of [[applyTransactionsBatch]] are what
+  * make that plan exact; the batch [[graft.bank.Pipeline]] keeps the
+  * reference's full rescan.
   */
 object IngestStream {
-
-  /** The streaming twin's DEFAULT rule dials: incremental ON (VERDICT
-    * r12 #7). The twin's file-source checkpoint enforces in-day-order
-    * delivery — the one precondition under which the pruned rules-1/2
-    * (today's partition) and rules-3/4 (Δ-margin [day−1, day] window)
-    * plans are byte-identical to the reference's full-history rescan —
-    * and flat-in-history cost is the only shape that survives years of
-    * accumulated fact (SCALING.md round-12). These constants ARE the
-    * default parameter values below; PlanQualitySpec asserts both that
-    * they are true and that the fact read under them prunes to ≤ 2
-    * txn_date partitions. The batch [[graft.bank.Pipeline]] keeps
-    * reference-parity full rescan as its default — the explicitly-named
-    * golden mode. */
-  val DefaultIncrementalRules12 = true
-  val DefaultIncrementalRules34 = true
 
   /** Unbounded source over the inbox: `;`-separated CSV drops, typed. */
   def transactionsSource(spark: SparkSession, inboxDir: String,
@@ -66,21 +58,14 @@ object IngestStream {
         .csv(inboxDir))
       .withColumn("txn_date", to_date(col("transaction_date")))
 
-  /** Drain all currently-available drops into a date-partitioned
-    * parquet fact directory, then stop. Returns the number of
-    * micro-batches that actually committed (0 ⇒ nothing new). */
-  def drainAvailableNow(spark: SparkSession, inboxDir: String,
-                        checkpointDir: String, outDir: String,
-                        maxFilesPerTrigger: Int = 1): Long = {
-    val q = transactionsSource(spark, inboxDir, maxFilesPerTrigger)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy("txn_date")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+  /** Run `writer` under `Trigger.AvailableNow` until it has drained
+    * every available file, then stop. Returns the micro-batches that
+    * read rows, as seen through the engine's recent-progress buffer,
+    * which Spark caps (default 100 entries): on a backfill bigger than
+    * the cap the count is a floor; the reliable contract is 0 ⇔ nothing
+    * new. */
+  private def drainAvailableFiles(writer: DataStreamWriter[Row]): Long = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val progressed = q.recentProgress.count(_.numInputRows > 0)
     q.stop()
@@ -286,26 +271,16 @@ object IngestStream {
   def terminalsScd2AvailableNow(spark: SparkSession, inboxDir: String,
                                 checkpointDir: String, wh: Warehouse,
                                 maxFilesPerTrigger: Int = 10000): Long = {
-    // close the swap crash window before draining: a dimension stranded
-    // at `<name>.tmp` (crash between delete and move) comes back, WITH
-    // its batch tag, so the replay guard still sees the right version
-    wh.recover(Pipeline.DimTerminals)
     // evaluated lazily INSIDE the first micro-batch, after the engine
     // has written <checkpointDir>/metadata — the id is the checkpoint
     // INSTANCE, regenerated if the checkpoint is wiped and recreated
     lazy val sid = checkpointQueryId(spark, checkpointDir)
-    val q = xlsxFiles(spark, inboxDir, maxFilesPerTrigger)
+    drainAvailableFiles(xlsxFiles(spark, inboxDir, maxFilesPerTrigger)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         applyTerminalsBatch(wh, batch, id, streamId = sid)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val progressed = q.recentProgress.count(_.numInputRows > 0)
-    q.stop()
-    progressed.toLong
+      })
   }
 
   /** foreachBatch body for the blacklist twin. No batch-id tag: J1's
@@ -347,27 +322,18 @@ object IngestStream {
                             checkpointDir: String, wh: Warehouse,
                             maxFilesPerTrigger: Int = 1,
                             compactAboveFiles: Int = 256): Long = {
-    // close the compact crash window first: a crash between compact's
-    // delete and move strands the fact at `<name>.tmp`, and the next
-    // drain would otherwise read an EMPTY fact and re-append every
-    // passport the anti-join exists to dedup
-    wh.recover(Pipeline.FactBlacklist)
-    val q = xlsxFiles(spark, inboxDir, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBlacklistBatch(wh, batch)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val progressed = q.recentProgress.count(_.numInputRows > 0)
-    q.stop()
+    val progressed = drainAvailableFiles(
+      xlsxFiles(spark, inboxDir, maxFilesPerTrigger)
+        .writeStream
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          applyBlacklistBatch(wh, batch)
+        })
     // compact-behind AFTER the drain (single-writer: the stream is
     // stopped; the daily cron runs drains sequentially)
     wh.compactIfFragmented(Pipeline.FactBlacklist,
       maxFiles = compactAboveFiles)
-    progressed.toLong
+    progressed
   }
 
   // ------------------------------------------------------------------
@@ -402,16 +368,16 @@ object IngestStream {
     * dimension and blacklist state.
     *
     * PRECONDITION (enforced, not assumed — ADVICE r13): days must
-    * arrive in calendar order. The incremental rule dials (the
-    * streaming defaults) are byte-parity with the full rescan only
-    * when no later fact day exists at rule time; the streaming
+    * arrive in calendar order. The streaming day always runs the
+    * pruned rule plan, whose rules-3/4 rows equal the full rescan's
+    * only when no later fact day exists at rule time; the streaming
     * checkpoint delivers in order, and a DIRECT caller who doesn't is
     * rejected loudly by two guards — against the META completion
-    * markers and against the fact table's own max day. */
+    * markers and against the fact table's own max day. Both guards
+    * read through the [[Warehouse]], which heals a table stranded by a
+    * crashed swap before any read. */
   private[streaming] def applyTransactionsBatch(wh: Warehouse,
       seed: Seeds.Seed, batch: DataFrame,
-      incrementalRules12: Boolean = DefaultIncrementalRules12,
-      incrementalRules34: Boolean = DefaultIncrementalRules34,
       failpoint: String => Unit = _ => ()): Unit = {
     val rows = batch.cache()
     try {
@@ -443,16 +409,15 @@ object IngestStream {
       // branch below) are exempt.
       val maxDone = done.toSeq.sortBy(_.toLocalDate.toEpochDay).lastOption
       // Second guard, against the FACT table itself (ADVICE r13): the
-      // incremental rule dials (the streaming defaults) are byte-parity
-      // with the reference only under in-day-order delivery, and the
-      // META completion guard above is blind to fact partitions whose
-      // day never finished its rules — a crashed later day, or a
-      // warehouse populated outside this twin. A NEW day must not sort
-      // below any already-written fact day. The max day comes from the
-      // hive partition DIRECTORY NAMES (one readdir — ADVICE r14: the
-      // previous max(txn_date) aggregate scanned the whole fact table
-      // every micro-batch, a cost that grew with warehouse history
-      // while answering a metadata question).
+      // pruned rule plan equals the reference's full rescan only under
+      // in-day-order delivery, and the META completion guard above is
+      // blind to fact partitions whose day never finished its rules — a
+      // crashed later day, or a warehouse populated outside this twin. A
+      // NEW day must not sort below any already-written fact day. The
+      // max day comes from the hive partition DIRECTORY NAMES (one
+      // readdir — ADVICE r14: the previous max(txn_date) aggregate
+      // scanned the whole fact table every micro-batch, a cost that grew
+      // with warehouse history while answering a metadata question).
       val maxFact: Option[java.sql.Date] =
         wh.partitionValues(Pipeline.FactTransactions, "txn_date")
           .filter(_.matches("\\d{4}-\\d{2}-\\d{2}"))
@@ -469,8 +434,8 @@ object IngestStream {
         maxFact.foreach { last =>
           require(done(day) || !day.before(last),
             s"out-of-order transactions drop: day $day arrived while " +
-              s"fact partitions already reach $last; the incremental " +
-              "rule dials assume in-day-order delivery — deliver drops " +
+              s"fact partitions already reach $last; the pruned rule " +
+              "plan assumes in-day-order delivery — deliver drops " +
               "in day order, or replay the completed day verbatim")
         }
       }
@@ -504,8 +469,7 @@ object IngestStream {
               "completed day can only be replayed verbatim — " +
               "correct-by-replacement needs an explicit operator action")
         } else Pipeline.transactionsDay(wh, seed, day, dayRows,
-          incrementalRules12, incrementalRules34, bucketed = true,
-          extraMeta = Nil, failpoint)
+          incremental = true, extraMeta = Nil, failpoint)
       }
     } finally rows.unpersist()
   }
@@ -517,12 +481,8 @@ object IngestStream {
     * per day in calendar order, stop. See [[applyTransactionsBatch]]
     * for the exactly-once contract. After the drain, compact-behind
     * bounds the file counts of the three append-accumulating tables
-    * (fact partitions, REP_FRAUD, META_LOADING).
-    *
-    * Return value counts committing micro-batches as observed through
-    * the engine's recent-progress buffer, which Spark caps (default
-    * 100 entries) — on a backfill bigger than the cap the count is a
-    * floor, not exact; the reliable contract is 0 ⇔ nothing new. */
+    * (fact partitions, REP_FRAUD, META_LOADING). Returns the committing
+    * micro-batches (a floor on huge backfills; 0 ⇔ nothing new). */
   def transactionsFraudAvailableNow(spark: SparkSession, inboxDir: String,
       checkpointDir: String, wh: Warehouse, seed: Seeds.Seed,
       // whole-backlog default, like the terminals twin: the file source
@@ -533,48 +493,20 @@ object IngestStream {
       // replays the same failure). One big batch folds the backlog in
       // day order inside applyTransactionsBatch instead; steady state
       // (one drop per drain) is unaffected.
-      // Incremental dials ON by default for the STREAMING twin (VERDICT
-      // r12 #7): the file-source checkpoint already enforces in-day-
-      // order delivery — the one precondition under which the pruned
-      // plans are byte-identical to the reference's full-history rescan
-      // (IncrementalPipelineSpec, FraudStreamSpec) — and the flat-cost
-      // mode is the only one that survives years of accumulated fact
-      // (SCALING.md round-12: day-29 cost = day-4 cost at 100× volume).
-      // The batch Pipeline keeps reference-parity full rescan as ITS
-      // default: that is the explicitly-named golden mode.
       maxFilesPerTrigger: Int = 10000,
-      incrementalRules12: Boolean = DefaultIncrementalRules12,
-      incrementalRules34: Boolean = DefaultIncrementalRules34,
       compactAboveFiles: Int = 256,
       // crash-injection seam, forwarded to [[applyTransactionsBatch]];
       // a throwing hook simulates a crash at that write boundary and
       // the next drain must heal it (FraudStreamSpec). No-op in
       // production.
       failpoint: String => Unit = _ => ()): Long = {
-    // close the compact crash windows for every table this drain owns
-    // BEFORE reading any of them: a crash between compact's delete and
-    // move strands a table at `<name>.tmp` (or ONE LEAF of the
-    // partitioned fact at `_tmppart_<leaf>`); without recovery the next
-    // drain would see an empty META (losing the day-completion markers
-    // and re-running non-idempotent rules on replay), an empty mart, or
-    // — the partition case — run the rules against a fact silently
-    // missing one day's partition
-    Seq(Pipeline.FactTransactions, Pipeline.RepFraud, Pipeline.MetaLoading)
-      .foreach(wh.recover)
-    wh.recoverPartitions(Pipeline.FactTransactions)
-    wh.recoverPartitions(Pipeline.RepFraud)
-    val q = transactionsSource(spark, inboxDir, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyTransactionsBatch(wh, seed, batch, incrementalRules12,
-          incrementalRules34, failpoint)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val progressed = q.recentProgress.count(_.numInputRows > 0)
-    q.stop()
+    val progressed = drainAvailableFiles(
+      transactionsSource(spark, inboxDir, maxFilesPerTrigger)
+        .writeStream
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          applyTransactionsBatch(wh, seed, batch, failpoint)
+        })
     // compact-behind AFTER the drain (single-writer: stream stopped,
     // daily cron runs drains sequentially). This drain owns the three
     // append-accumulating tables of the daily cycle.
@@ -585,7 +517,7 @@ object IngestStream {
     wh.compactIfFragmented(Pipeline.RepFraud, Seq("report_dt"),
       compactAboveFiles)
     wh.compactIfFragmented(Pipeline.MetaLoading, maxFiles = compactAboveFiles)
-    progressed.toLong
+    progressed
   }
 
   /** The whole daily cycle as one streaming call — the twin of the
@@ -604,11 +536,6 @@ object IngestStream {
   def runDailyDrains(spark: SparkSession, inboxRoot: String,
                      checkpointRoot: String, wh: Warehouse,
                      seed: Seeds.Seed,
-                     // incremental by default — see
-                     // [[transactionsFraudAvailableNow]]; pass false
-                     // for reference-parity full-history rescans
-                     incrementalRules12: Boolean = DefaultIncrementalRules12,
-                     incrementalRules34: Boolean = DefaultIncrementalRules34,
                      compactAboveFiles: Int = 256): Long = {
     def sub(p: String) = s"$inboxRoot/$p"
     def cp(p: String) = s"$checkpointRoot/$p"
@@ -623,9 +550,7 @@ object IngestStream {
     val b = terminalsScd2AvailableNow(spark, sub("terminals"),
       cp("terminals"), wh)
     val c = transactionsFraudAvailableNow(spark, sub("transactions"),
-      cp("transactions"), wh, seed, incrementalRules12 = incrementalRules12,
-      incrementalRules34 = incrementalRules34,
-      compactAboveFiles = compactAboveFiles)
+      cp("transactions"), wh, seed, compactAboveFiles = compactAboveFiles)
     a + b + c
   }
 }

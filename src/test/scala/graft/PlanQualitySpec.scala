@@ -32,8 +32,8 @@ class PlanQualitySpec extends AnyFunSuite {
           lit(java.sql.Date.valueOf(d)).as("txn_date")),
         partitionCols = Seq("txn_date"))
     }
-    // the exact read shape of Pipeline.runDay's incrementalRules12 mode
-    // and the streaming twin's facts12: day filter on the partition col
+    // the read shape of the streaming day's rules-1/2 input
+    // (Pipeline.ruleFacts): day filter on the partition col
     val df = wh.read(graft.bank.Pipeline.FactTransactions)
       .where(col("txn_date") === lit(java.sql.Date.valueOf("2021-03-02")))
     val p = df.queryExecution.executedPlan.toString
@@ -60,7 +60,7 @@ class PlanQualitySpec extends AnyFunSuite {
           lit(java.sql.Date.valueOf(d)).as("txn_date")),
         partitionCols = Seq("txn_date"))
     }
-    // the exact read shape of ruleFacts' incrementalRules34 window:
+    // the read shape of ruleFacts' streaming rules-3/4 window:
     // BETWEEN [day−1, day] on the partition column
     val day = java.sql.Date.valueOf("2021-03-03")
     val df = wh.read(graft.bank.Pipeline.FactTransactions)
@@ -73,12 +73,8 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(df.count() == 20)
   }
 
-  test("streaming twin DEFAULTS to the incremental dials; its fact read prunes to <= 2 partitions") {
+  test("streaming rule facts prune to <= 2 partitions") {
     import org.apache.spark.sql.functions._
-    // the defaults ARE these constants (VERDICT r12 #7: flat-in-history
-    // is the twin's default; reference-parity rescan is the named flag)
-    assert(graft.streaming.IngestStream.DefaultIncrementalRules12)
-    assert(graft.streaming.IngestStream.DefaultIncrementalRules34)
     val root = java.nio.file.Files.createTempDirectory("pq_twin").toString
     val wh = new graft.bank.Warehouse(spark, root)
     Seq("2021-03-01", "2021-03-02", "2021-03-03", "2021-03-04").foreach { d =>
@@ -87,12 +83,10 @@ class PlanQualitySpec extends AnyFunSuite {
           lit(java.sql.Date.valueOf(d)).as("txn_date")),
         partitionCols = Seq("txn_date"))
     }
-    // ruleFacts under the twin's default dials: the rules-3/4 frame
-    // must be a partition-pruned [day-1, day] read — 2 of 4 partitions
-    val (_, facts12, facts34) = graft.bank.Pipeline.ruleFacts(wh,
-      java.sql.Date.valueOf("2021-03-04"),
-      graft.streaming.IngestStream.DefaultIncrementalRules12,
-      graft.streaming.IngestStream.DefaultIncrementalRules34)
+    // ruleFacts in the streaming day's plan: the rules-3/4 frame must be
+    // a partition-pruned [day-1, day] read — 2 of 4 partitions
+    val (facts34, facts12) = graft.bank.Pipeline.ruleFacts(wh,
+      java.sql.Date.valueOf("2021-03-04"), incremental = true)
     val p34 = facts34.queryExecution.executedPlan.toString
     assert(p34.contains("PartitionFilters"), p34)
     assert(p34.linesIterator.find(_.contains("PartitionFilters"))

@@ -1,6 +1,6 @@
 package graft.bank
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.Date
 
 import scala.jdk.CollectionConverters._
@@ -24,6 +24,15 @@ import org.apache.spark.sql.functions._
   *  - day 3: P3 is blacklisted from 2021-03-02 and K3 pays → rule 1
   *    now has two hits; rule 2 re-reports K2; K3's day-2 chain is
   *    re-derived and dropped at J12, so rule 4 logs 0.
+  *
+  * The streaming day's pruned plan reads only `day` for rules 1/2 and
+  * `[day−1, day]` for rules 3/4, so it reports nothing twice: day 2 logs
+  * no rule-1 row (K1's hit is day 1's), day 3 logs K3's rule-1 hit alone
+  * and no rule-2 row (K2's hit is day 2's). Rules 3/4 log as in batch.
+  *
+  * [[midnightDays]] are four more days, on card K4 alone, whose rule-3
+  * and rule-4 chains cross midnight — the case the pruned plan's
+  * `[day−1, day]` window exists for.
   */
 object BankDays {
   private lazy val spark = SparkTestSession.spark
@@ -77,8 +86,9 @@ object BankDays {
   private val terms2 = Seq("T1" -> "Moscow", "T2" -> "Kazan")
 
   /** (day, transactions, cumulative blacklist, terminals snapshot) */
-  val days: Seq[(Date, Seq[Txn], Seq[(String, String)],
-      Seq[(String, String)])] = Seq(
+  type Day = (Date, Seq[Txn], Seq[(String, String)], Seq[(String, String)])
+
+  val days: Seq[Day] = Seq(
     (d("2021-03-01"), Seq(
         ("d1a", "2021-03-01 10:00:00", "100,00", "K1", "SUCCESS", "T1"),
         ("d1b", "2021-03-01 11:00:00", "50,00", "K4", "SUCCESS", "T1"),
@@ -103,9 +113,45 @@ object BankDays {
     "REP_FRAUD_diff_cities" -> "ops in diff cities less one hour",
     "REP_FRAUD_attempt_amount" -> "amount guessing")
 
-  /** Hand-derived rule counts per day, in reference order. */
+  /** Hand-derived rule counts per day, in reference order: the batch
+    * day's full rescan, and the streaming day's pruned plan. */
   val expectedRules: Seq[Seq[Int]] = Seq(Seq(1, 0, 1, 0), Seq(1, 1, 0, 1),
     Seq(2, 1, 0, 0))
+  val expectedStreamRules: Seq[Seq[Int]] = Seq(Seq(1, 0, 1, 0),
+    Seq(0, 1, 0, 1), Seq(1, 0, 0, 0))
+
+  /** Card K4 (passport P4, contract and passport valid, never
+    * blacklisted: no rule-1/2 hit) over four days:
+    *
+    *  - 04-01: Moscow 10:00, Kazan 10:30 → an in-day rule-3 pair; Moscow
+    *    23:45;
+    *  - 04-02: Kazan 00:15 → a rule-3 pair with 04-01 23:45, across
+    *    midnight; REJECT 300 at 23:50;
+    *  - 04-03: REJECT 200 at 00:00, SUCCESS 100 at 00:05 → a rule-4
+    *    chain with 04-02 23:50, across midnight;
+    *  - 04-04: one quiet payment. The full rescan re-derives every
+    *    earlier chain here and drops it at J12; the pruned window never
+    *    sees them.
+    *
+    * So 2 rule-3 hits and 1 rule-4 hit in either mode. */
+  val midnightDays: Seq[Day] = {
+    def t(id: String, ts: String, amt: String, res: String, term: String) =
+      (id, ts, amt, "K4", res, term)
+    Seq(
+      (d("2021-04-01"), Seq(
+        t("m1", "2021-04-01 10:00:00", "100,00", "SUCCESS", "T1"),
+        t("m2", "2021-04-01 10:30:00", "90,00", "SUCCESS", "T2"),
+        t("m3", "2021-04-01 23:45:00", "80,00", "SUCCESS", "T1"))),
+      (d("2021-04-02"), Seq(
+        t("m4", "2021-04-02 00:15:00", "70,00", "SUCCESS", "T2"),
+        t("m5", "2021-04-02 23:50:00", "300,00", "REJECT", "T1"))),
+      (d("2021-04-03"), Seq(
+        t("m6", "2021-04-03 00:00:00", "200,00", "REJECT", "T1"),
+        t("m7", "2021-04-03 00:05:00", "100,00", "SUCCESS", "T1"))),
+      (d("2021-04-04"), Seq(
+        t("m8", "2021-04-04 12:00:00", "50,00", "SUCCESS", "T1"))))
+      .map { case (day, txns) => (day, txns, Nil, terms2) }
+  }
 
   /** The META_LOADING parquet files currently in `wh`. */
   private def metaFiles(wh: Warehouse): Set[Path] = {
@@ -126,6 +172,32 @@ object BankDays {
     (metaFiles(wh) -- before).toSeq.map(f =>
       spark.read.parquet(f.toString).collect().toSeq)
   }
+
+  /** Copy the directory tree `src` to `dst`. */
+  def copyDir(src: Path, dst: Path): Unit = {
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val t = dst.resolve(src.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
+    } finally walk.close()
+  }
+
+  /** The dimension tables a transactions day reads. */
+  private val dimTables = Seq(Pipeline.FactBlacklist, Pipeline.DimTerminals)
+
+  /** Copy `wh`'s dimension tables to `<snapshots>/<i>/`. */
+  def saveDims(wh: Warehouse, snapshots: Path, i: Int): Unit =
+    dimTables.foreach(t => copyDir(Paths.get(wh.root, t),
+      snapshots.resolve(s"$i/$t")))
+
+  /** Replace `into`'s dimension tables with the copies [[saveDims]] made
+    * under `<snapshots>/<i>/`. */
+  def landDims(snapshots: Path, i: Int, into: Warehouse): Unit =
+    dimTables.foreach { t =>
+      into.drop(t)
+      copyDir(snapshots.resolve(s"$i/$t"), Paths.get(into.root, t))
+    }
 
   /** Every file under `root` with its size and modification time: equal
     * listings mean nothing was written. */

@@ -19,18 +19,19 @@ class CompactionSpec extends AnyFunSuite {
   test("compact merges small append files; data and partition layout survive") {
     val root = java.nio.file.Files.createTempDirectory("wh_compact").toString
     val wh = new Warehouse(spark, root)
-    // 12 daily appends, each a multi-partition write → many small files
+    // 12 daily appends, each a 4-partition write → 4 small files a leaf
     for (d <- 1 to 12) {
       val day = f"2021-03-$d%02d"
       wh.append("facts",
-        spark.range(200).select(col("id"), lit(day).as("dt")),
+        spark.range(0, 200, 1, 4).select(col("id"), lit(day).as("dt")),
         partitionCols = Seq("dt"))
     }
     val before = parquetFiles(root + "/facts")
     val sumBefore = wh.read("facts").agg(sum("id"), count(lit(1)))
       .as[(Long, Long)].first()
 
-    wh.compact("facts", partitionCols = Seq("dt"))
+    // every leaf's 4 files exceed the per-leaf floor of 2
+    assert(wh.compactIfFragmented("facts", Seq("dt"), maxFiles = 2))
 
     val after = parquetFiles(root + "/facts")
     assert(after.size < before.size,

@@ -1,23 +1,23 @@
 package graft.bank
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.sql.Date
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.SparkTestSession
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The two incremental (partition-pruned) modes against the golden
-  * full-scan reference semantics:
+/** The two rule plans of [[Pipeline.transactionsDay]] on the reference
+  * fixture: the batch day's full rescan (the golden mode) against the
+  * streaming day's pruned plan, driven through the day core directly.
   *
-  *  - rules 1/2 (`incrementalRules12`): scan only today's partition;
-  *    same distinct hit set, no re-reports (SURVEY §7 quirk 1 removed);
-  *  - rules 3/4 (`incrementalRules34`): scan partitions [day−1, day] —
-  *    Δ ≤ 1 h bounds any chain to that window, and J12's anti-join
-  *    makes re-derivations a no-op, so the mart must be BYTE-IDENTICAL
-  *    to the full-history rescan, on the reference fixture and on a
-  *    synthetic multi-day run with chains crossing midnight.
+  *  - rules 1/2 read only today's partition: same distinct hit set, no
+  *    re-reports (SURVEY §7 quirk 1 removed);
+  *  - rules 3/4 read partitions [day−1, day] — Δ ≤ 1 h bounds any chain
+  *    to that window, and J12's anti-join makes re-derivations a no-op,
+  *    so their rows must be BYTE-IDENTICAL to the full-history rescan.
+  *    Chains crossing midnight are covered hermetically by
+  *    TransactionsDaySpec on [[BankDays.midnightDays]].
   */
 @graft.SlowIntegration
 class IncrementalPipelineSpec extends AnyFunSuite {
@@ -25,10 +25,14 @@ class IncrementalPipelineSpec extends AnyFunSuite {
   private val refData = "/root/reference/data/data"
   private val days = Seq("01032021", "02032021", "03032021")
   private lazy val seed = Seeds.load(spark, "/root/reference/data/ddl_dml.sql")
+  private val t12 = Seq("blocked or expired passport", "invalid contract")
+  private val t34 = Seq("ops in diff cities less one hour", "amount guessing")
 
-  private def replay(inc12: Boolean, inc34: Boolean = false): Warehouse = {
-    val work = Files.createTempDirectory("increspec").toString
-    val inbox = Paths.get(work, "inbox")
+  /** The batch replay of the fixture (full rescan), and after each day a
+    * copy of its dimension tables ([[BankDays.saveDims]]). */
+  private lazy val golden: (Warehouse, Path) = {
+    val work = Files.createTempDirectory("increspec")
+    val inbox = work.resolve("inbox")
     Files.createDirectories(inbox)
     days.foreach { d =>
       Seq(s"transactions_$d.txt", s"passport_blacklist_$d.xlsx",
@@ -37,133 +41,69 @@ class IncrementalPipelineSpec extends AnyFunSuite {
           StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    val wh = new Warehouse(spark, Paths.get(work, "wh").toString)
-    val pipe = new Pipeline(wh, seed, incrementalRules12 = inc12,
-      incrementalRules34 = inc34)
-    days.foreach { d =>
+    val wh = new Warehouse(spark, work.resolve("wh").toString)
+    val pipe = new Pipeline(wh, seed)
+    days.zipWithIndex.foreach { case (d, i) =>
       pipe.runDay(
         inbox.resolve(s"transactions_$d.txt").toString,
         inbox.resolve(s"passport_blacklist_$d.xlsx").toString,
         inbox.resolve(s"terminals_$d.xlsx").toString,
-        Paths.get(work, "archive").toString)
+        work.resolve("archive").toString)
+      BankDays.saveDims(wh, work.resolve("snapshots"), i)
+    }
+    (wh, work.resolve("snapshots"))
+  }
+
+  /** The fixture's transactions days through the day core's pruned plan,
+    * each over the golden run's dimensions of that day. */
+  private lazy val pruned: Warehouse = {
+    val wh = new Warehouse(spark,
+      Files.createTempDirectory("increspec_pruned").resolve("wh").toString)
+    days.zipWithIndex.foreach { case (d, i) =>
+      BankDays.landDims(golden._2, i, wh)
+      val (txns, day) =
+        Ingest.transactions(spark, s"$refData/transactions_$d.txt")
+      Pipeline.transactionsDay(wh, seed, day,
+        txns.select(Schemas.factTransactions.fieldNames.map(col).toSeq: _*)
+          .withColumn("txn_date", to_date(col("transaction_date"))),
+        incremental = true, extraMeta = Nil)
     }
     wh
   }
 
+  private def ofTypes(df: DataFrame, types: Seq[String]): DataFrame =
+    df.where(col("event_type").isin(types: _*))
+
   test("incremental rules 1/2: same distinct hits, no re-reports") {
-    val golden = replay(inc12 = false).read(Pipeline.RepFraud).cache()
-    val incr = replay(inc12 = true).read(Pipeline.RepFraud).cache()
+    val full = golden._1.read(Pipeline.RepFraud).cache()
+    val incr = pruned.read(Pipeline.RepFraud).cache()
 
-    def keyset(df: org.apache.spark.sql.DataFrame, types: Seq[String]) =
-      df.where(col("event_type").isin(types: _*))
-        .select("event_type", "passport", "event_dt").distinct()
-        .collect().map(_.toString).toSet
+    def keyset(df: DataFrame) = ofTypes(df, t12)
+      .select("event_type", "passport", "event_dt").distinct()
+      .collect().map(_.toString).toSet
 
-    val t12 = Seq("blocked or expired passport", "invalid contract")
-    assert(keyset(incr, t12) == keyset(golden, t12))
-    // incremental mode reports each hit exactly once
-    val incr12 = incr.where(col("event_type").isin(t12: _*))
+    assert(keyset(incr) == keyset(full))
+    // the pruned plan reports each hit exactly once
+    val incr12 = ofTypes(incr, t12)
     assert(incr12.count() ==
       incr12.select("event_type", "passport", "event_dt").distinct().count())
-    // golden mode re-reports on day 3 what it already reported... it does
-    // not here because days 1-2 produce no rule-1/2 hits in this fixture;
-    // the seeded triggers only fire on day 3 (FIXTURES.md A4). Equality of
-    // totals is therefore expected too:
-    assert(incr12.count() == golden.where(col("event_type").isin(t12: _*)).count())
-    // rules 3/4 identical row-for-row
-    val t34 = Seq("ops in diff cities less one hour", "amount guessing")
-    def rows34(df: org.apache.spark.sql.DataFrame) =
-      df.where(col("event_type").isin(t34: _*)).collect().map(_.toString).toSet
-    assert(rows34(incr) == rows34(golden))
-    golden.unpersist(); incr.unpersist()
+    // the full rescan would re-report on day 3 what it reported earlier,
+    // but days 1-2 produce no rule-1/2 hits in this fixture: the seeded
+    // triggers only fire on day 3 (FIXTURES.md A4). Equal totals follow.
+    assert(incr12.count() == ofTypes(full, t12).count())
+    full.unpersist(); incr.unpersist()
   }
 
   test("incremental rules 3/4: byte parity with full scan on the fixture") {
-    def mart(wh: Warehouse): Seq[String] =
-      wh.read(Pipeline.RepFraud).collect().map(_.toString).sorted.toSeq
-    val golden = mart(replay(inc12 = false, inc34 = false))
-    val incr34 = mart(replay(inc12 = false, inc34 = true))
-    assert(golden.nonEmpty)
-    assert(incr34 == golden)
-    // both dials on: rules 3/4 still byte-identical, rules 1/2 the
-    // deduplicated keyset (a subset by construction on this fixture —
-    // see the test above)
-    val both = replay(inc12 = true, inc34 = true).read(Pipeline.RepFraud)
-    val t34 = Seq("ops in diff cities less one hour", "amount guessing")
-    val both34 = both.where(col("event_type").isin(t34: _*))
+    def rows34(wh: Warehouse): Seq[String] =
+      ofTypes(wh.read(Pipeline.RepFraud), t34)
+        .collect().map(_.toString).sorted.toSeq
+    val full = rows34(golden._1)
+    assert(full.nonEmpty)
+    assert(rows34(pruned) == full)
+    // and the fact the two plans read is the same
+    def fact(wh: Warehouse) = wh.read(Pipeline.FactTransactions)
       .collect().map(_.toString).sorted.toSeq
-    val golden34 = golden.filter(s => t34.exists(s.contains))
-    assert(both34 == golden34)
-  }
-
-  // ------------------------------------------------------------------
-  // synthetic multi-day run: chains CROSSING midnight are the case the
-  // Δ-margin window exists for — the fixture's chains are in-day only
-  // ------------------------------------------------------------------
-
-  private def txnsDf(rows: Seq[(String, String, String, String, String,
-      String, String)]): DataFrame = {
-    import spark.implicits._
-    val raw = rows.toDF("transaction_id", "ts", "amount", "card_num",
-        "oper_type", "oper_result", "terminal")
-      .withColumn("transaction_date", to_timestamp(col("ts"))).drop("ts")
-    Ingest.typedTransactions(raw)
-  }
-
-  private def emptyBlacklist: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      Schemas.factPassportBlacklist)
-
-  private def terminalsDf: DataFrame = {
-    import spark.implicits._
-    Seq(("TSYN1", "POS", "Moscow", "addr 1"),
-        ("TSYN2", "POS", "Kazan", "addr 2"))
-      .toDF("terminal_id", "terminal_type", "terminal_city",
-        "terminal_address")
-  }
-
-  /** Four synthetic days on one seeded card: an in-day rule-3 pair on
-    * day 1, a rule-3 pair CROSSING midnight day1→day2, a rule-4
-    * REJECT/REJECT/SUCCESS chain crossing midnight day2→day3, and a
-    * quiet day 4 (golden mode re-derives days-old pairs there; the
-    * window mode never sees them — outputs must still agree). */
-  private def syntheticMart(inc34: Boolean): Seq[String] = {
-    val card = seed.cards.select("card_num").orderBy("card_num")
-      .head().getString(0)
-    def t(id: String, ts: String, amt: String, res: String, term: String) =
-      (id, ts, amt, card, "PAYMENT", res, term)
-    val byDay: Seq[(Date, Seq[(String, String, String, String, String,
-        String, String)])] = Seq(
-      Date.valueOf("2021-04-01") -> Seq(
-        t("s1", "2021-04-01 10:00:00", "100,00", "SUCCESS", "TSYN1"),
-        t("s2", "2021-04-01 10:30:00", "90,00", "SUCCESS", "TSYN2"),
-        t("s3", "2021-04-01 23:45:00", "80,00", "SUCCESS", "TSYN1")),
-      Date.valueOf("2021-04-02") -> Seq(
-        // completes the cross-midnight rule-3 pair with s3
-        t("s4", "2021-04-02 00:15:00", "70,00", "SUCCESS", "TSYN2"),
-        t("s5", "2021-04-02 23:50:00", "300,00", "REJECT", "TSYN1")),
-      Date.valueOf("2021-04-03") -> Seq(
-        // completes the cross-midnight rule-4 chain with s5
-        t("s6", "2021-04-03 00:00:00", "200,00", "REJECT", "TSYN1"),
-        t("s7", "2021-04-03 00:05:00", "100,00", "SUCCESS", "TSYN1")),
-      Date.valueOf("2021-04-04") -> Seq(
-        t("s8", "2021-04-04 12:00:00", "50,00", "SUCCESS", "TSYN1")))
-    val work = Files.createTempDirectory("incre34syn")
-    val wh = new Warehouse(spark, work.resolve("wh").toString)
-    val pipe = new Pipeline(wh, seed, incrementalRules34 = inc34)
-    byDay.foreach { case (day, rows) =>
-      pipe.runDayStaged(txnsDf(rows), emptyBlacklist, terminalsDf, day)
-    }
-    wh.read(Pipeline.RepFraud).collect().map(_.toString).sorted.toSeq
-  }
-
-  test("incremental rules 3/4: byte parity across midnight-crossing chains") {
-    val golden = syntheticMart(inc34 = false)
-    val incr = syntheticMart(inc34 = true)
-    val t34 = Seq("ops in diff cities less one hour", "amount guessing")
-    // the synthetic chains actually fire: 2 rule-3 hits + 1 rule-4 hit
-    assert(golden.count(_.contains(t34.head)) == 2, golden.mkString("\n"))
-    assert(golden.count(_.contains(t34(1))) == 1, golden.mkString("\n"))
-    assert(incr == golden)
+    assert(fact(pruned) == fact(golden._1))
   }
 }

@@ -48,6 +48,19 @@ class WarehouseRecoverySpec extends AnyFunSuite {
     assert(wh.readTag("d", "_stream_batch").contains("cp 7"))
   }
 
+  test("readTag heals: a tagged version stranded at its tmp keeps its tag") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("wh_readtag").toString
+    val wh = new Warehouse(spark, root)
+    wh.overwriteTagged("d", Seq((1, "x")).toDF("k", "v"),
+      Map("_stream_batch" -> "cp 7"))
+    // crash between the swap's delete and move, and no recover call: the
+    // replay guard's first read is the tag
+    Files.move(Paths.get(root, "d"), Paths.get(root, "d.tmp"))
+    assert(wh.readTag("d", "_stream_batch").contains("cp 7"))
+    assert(!Files.exists(Paths.get(root, "d.tmp")))
+  }
+
   test("recover: COMMITTED tmp beside a (possibly partial) table rolls FORWARD") {
     import spark.implicits._
     val root = Files.createTempDirectory("wh_recover_fwd").toString
