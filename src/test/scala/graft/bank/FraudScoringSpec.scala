@@ -1,39 +1,22 @@
 package graft.bank
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
 
 import graft.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Trains the MLlib scorer on the replayed 3-day warehouse: the rule
-  * labels must be learnable well above chance from the online features. */
+/** Trains the MLlib scorer on the replayed 3-day warehouse
+  * ([[RefFixture]]): the rule labels must be learnable well above chance
+  * from the online features. */
 class FraudScoringSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("logistic pipeline learns the rule labels (AUC > 0.7)",
       graft.SlowIntegrationTag) {
-    val refData = "/root/reference/data/data"
-    val work = Files.createTempDirectory("mlspec").toString
-    val inbox = Paths.get(work, "inbox")
-    Files.createDirectories(inbox)
-    val days = Seq("01032021", "02032021", "03032021")
-    days.foreach { d =>
-      Seq(s"transactions_$d.txt", s"passport_blacklist_$d.xlsx",
-        s"terminals_$d.xlsx").foreach { n =>
-        Files.copy(Paths.get(refData, n), inbox.resolve(n),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    val wh = new Warehouse(spark, Paths.get(work, "wh").toString)
-    val seed = Seeds.load(spark, "/root/reference/data/ddl_dml.sql")
-    val pipe = new Pipeline(wh, seed)
-    days.foreach { d =>
-      pipe.runDay(
-        inbox.resolve(s"transactions_$d.txt").toString,
-        inbox.resolve(s"passport_blacklist_$d.xlsx").toString,
-        inbox.resolve(s"terminals_$d.xlsx").toString,
-        Paths.get(work, "archive").toString)
-    }
+    val work = Files.createTempDirectory("mlspec")
+    val wh = new Warehouse(spark, work.resolve("wh").toString)
+    val seed = Seeds.load(spark, RefFixture.seedSql)
+    RefFixture.replay(wh, seed, work)
 
     val training = FraudScoring.trainingFrame(
       wh.read(Pipeline.FactTransactions), wh.read(Pipeline.RepFraud),

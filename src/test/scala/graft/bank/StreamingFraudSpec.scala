@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * master chain + blacklist lookup + filters), so the SAME function runs
   * unchanged over a Structured Stream with static dimensions — the
   * streaming modernization of the reference's daily batch. The spec
-  * feeds real day-3 fixture transactions through a MemoryStream in two
-  * micro-batches and checks the streamed flags equal the batch result. */
+  * feeds the fixture's day-3 transactions ([[RefFixture]]) through a
+  * MemoryStream in two micro-batches and checks the streamed flags equal
+  * the batch result. */
 final case class StreamTxn(transaction_id: String, transaction_date: Timestamp,
                            card_num: String, oper_type: String, amount: Double,
                            oper_result: String, terminal: String)
@@ -27,14 +28,14 @@ class StreamingFraudSpec extends AnyFunSuite {
 
     val work = java.nio.file.Files.createTempDirectory("streamfraud")
     val src = java.nio.file.Paths.get(
-      "/root/reference/data/data/transactions_03032021.txt")
+      RefFixture.dataDir, "transactions_03032021.txt")
     val copy = work.resolve("txns.txt")
     java.nio.file.Files.copy(src, copy)
     val (txns, day) = Ingest.transactions(spark, copy.toString)
-    val seed = Seeds.load(spark, "/root/reference/data/ddl_dml.sql")
+    val seed = Seeds.load(spark, RefFixture.seedSql)
     // day-3 cumulative blacklist, read via the xlsx source
     val bl = Ingest.blacklist(spark,
-      "/root/reference/data/data/passport_blacklist_03032021.xlsx")
+      s"${RefFixture.dataDir}/passport_blacklist_03032021.xlsx")
       .collect() // materialize before the file would be archived
     val blDf = spark.createDataFrame(
       java.util.List.copyOf(scala.jdk.CollectionConverters
@@ -58,7 +59,8 @@ class StreamingFraudSpec extends AnyFunSuite {
     val q = FraudRules.rule1(typed(mem.toDF()), blDf, seed, day)
       .writeStream.outputMode("append")
       .format("memory").queryName("rule1_stream").start()
-    val (b1, b2) = sample.splitAt(2000)
+    // halves: two non-empty micro-batches whatever the file's size
+    val (b1, b2) = sample.splitAt(sample.length / 2)
     mem.addData(b1.toIndexedSeq: _*)
     q.processAllAvailable()
     mem.addData(b2.toIndexedSeq: _*)

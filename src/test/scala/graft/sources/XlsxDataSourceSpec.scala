@@ -6,17 +6,18 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.bank.RefFixture
 
 /** The distributed xlsx path: same rows as the driver-side reader,
   * one partition per file, header-name column resolution, pruning
-  * pushed into the scan. Fixtures are the reference's real snapshot
-  * drops (terminals_DDMMYYYY.xlsx — main.py:70). */
+  * pushed into the scan. Inputs are the committed fixture's snapshot
+  * drops ([[RefFixture]]; terminals_DDMMYYYY.xlsx — main.py:70). */
 class XlsxDataSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val refData = "/root/reference/data/data"
+  private lazy val refData = RefFixture.dataDir
 
   private lazy val dir: String = {
-    // a directory holding ONLY xlsx terminal snapshots (the reference
+    // a directory holding ONLY xlsx terminal snapshots (the fixture's
     // dir mixes in blacklists + txt files; directory reads must filter)
     val d = Files.createTempDirectory("xlsx_dsv2")
     for (n <- Seq("terminals_01032021.xlsx", "terminals_02032021.xlsx",
@@ -92,6 +93,13 @@ class XlsxDataSourceSpec extends AnyFunSuite {
             org.apache.spark.sql.types.StringType))))
         .load(dir).collect()
     }
-    assert(e.getMessage != null)
+    // the partition reader's own message, wherever the task failure
+    // wraps it: the column, the file's path and the header it has
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).take(8).flatMap(t => Option(t.getMessage)).toSeq
+    assert(messages.exists(m => m.contains("column 'nope' missing in ") &&
+      m.contains(s"$dir/terminals_0") &&
+      m.contains("header: terminal_id,terminal_type,terminal_city," +
+        "terminal_address")), messages)
   }
 }

@@ -7,20 +7,20 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.bank.{Pipeline, Seeds, Warehouse}
+import graft.bank.{Pipeline, RefFixture, Seeds, Warehouse}
 
 /** Streaming twin of the transactions → fact → REP_FRAUD daily stage
-  * (the last stage without a twin), on the reference's real 3-day
-  * fixture: per-day parity with the batch [[graft.bank.Pipeline]],
+  * (the last stage without a twin), on the committed 3-day fixture
+  * ([[RefFixture]]): per-day parity with the batch [[graft.bank.Pipeline]],
   * idempotent re-delivery of completed days, loud failure on
   * different-content re-delivery, and compact-behind on the
   * append-accumulating tables. */
 @graft.SlowIntegration
 class FraudStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val refData = "/root/reference/data/data"
-  private val days = Seq("01032021", "02032021", "03032021")
-  private lazy val seed = Seeds.load(spark, "/root/reference/data/ddl_dml.sql")
+  private lazy val refData = RefFixture.dataDir
+  private val days = RefFixture.days
+  private lazy val seed = Seeds.load(spark, RefFixture.seedSql)
 
   private def copyIn(dir: Path, name: String): Unit =
     Files.copy(Paths.get(refData, name), dir.resolve(name),
@@ -46,18 +46,8 @@ class FraudStreamSpec extends AnyFunSuite {
   /** The batch-path mart over the same fixture, built once. */
   private lazy val batchWh: Warehouse = {
     val work = Files.createTempDirectory("fraudstream_batch")
-    val inbox = Files.createDirectories(work.resolve("inbox"))
     val wh = new Warehouse(spark, work.resolve("wh").toString)
-    val pipe = new Pipeline(wh, seed)
-    days.foreach { d =>
-      Seq(s"transactions_$d.txt", s"passport_blacklist_$d.xlsx",
-        s"terminals_$d.xlsx").foreach(copyIn(inbox, _))
-      pipe.runDay(
-        inbox.resolve(s"transactions_$d.txt").toString,
-        inbox.resolve(s"passport_blacklist_$d.xlsx").toString,
-        inbox.resolve(s"terminals_$d.xlsx").toString,
-        work.resolve("archive").toString)
-    }
+    RefFixture.replay(wh, seed, work)
     wh
   }
 
@@ -307,6 +297,6 @@ class FraudStreamSpec extends AnyFunSuite {
     assert(wh.read(Pipeline.RepFraud).count() == rep)
     // partitioned fact keeps its layout (one dir per day) and prunes
     assert(wh.read(Pipeline.FactTransactions)
-      .where(col("txn_date") === "2021-03-02").count() == 15686)
+      .where(col("txn_date") === "2021-03-02").count() == 1582)
   }
 }

@@ -7,13 +7,14 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.bank.{Ingest, Pipeline, Schemas, Warehouse}
+import graft.bank.{Ingest, Pipeline, RefFixture, Schemas, Warehouse}
 import graft.operators.Cdc
 
-/** Streaming twins of the two xlsx drop paths, on the reference's real
-  * 3-day fixture: terminals snapshot → SCD2 dimension (foreachBatch +
-  * Cdc.scd2Apply, exactly-once via the tagged swap) and cumulative
-  * blacklist → anti-join fact append (idempotent via J1 itself). Each
+/** Streaming twins of the two xlsx drop paths, on the committed 3-day
+  * fixture ([[RefFixture]]): terminals snapshot → SCD2 dimension
+  * (foreachBatch + Cdc.scd2Apply, exactly-once via the tagged swap) and
+  * cumulative blacklist → anti-join fact append (idempotent via J1
+  * itself). Each
   * twin must match the batch path row-for-row, commit nothing on an
   * empty re-run, and absorb a replayed micro-batch without corrupting
   * state (scd2Apply is NOT idempotent — the reference's all-versions
@@ -21,8 +22,8 @@ import graft.operators.Cdc
   * guard is what the exactly-once contract rests on). */
 class XlsxStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val refData = "/root/reference/data/data"
-  private val days = Seq("01032021", "02032021", "03032021")
+  private lazy val refData = RefFixture.dataDir
+  private val days = RefFixture.days
   private def dayDate(d: String): Date =
     Date.valueOf(s"${d.substring(4)}-${d.substring(2, 4)}-${d.substring(0, 2)}")
 
@@ -162,8 +163,8 @@ class XlsxStreamSpec extends AnyFunSuite {
       .where(org.apache.spark.sql.functions.col("table_name") === "stg_terminals")
       .select("event_dt", "rows_processed")
       .collect().map(r => (r.getDate(0).toString, r.getInt(1))).toSet
-    assert(meta == Set(("2021-03-01", 150), ("2021-03-02", 151),
-      ("2021-03-03", 150)))
+    assert(meta == Set(("2021-03-01", 20), ("2021-03-02", 21),
+      ("2021-03-03", 20)))
 
     // an OLDER snapshot arriving after day 3 must be rejected — SCD2
     // application is order-sensitive and silent corruption is the
@@ -197,7 +198,7 @@ class XlsxStreamSpec extends AnyFunSuite {
     assert(IngestStream.blacklistAvailableNow(
       spark, inbox.toString, cp, wh) == 0)
 
-    // day-3 drop: only the 9 never-seen passports append
+    // day-3 drop: only the 6 never-seen passports append
     drop(inbox, "passport_blacklist", "03032021")
     assert(IngestStream.blacklistAvailableNow(
       spark, inbox.toString, cp, wh) >= 1)
@@ -213,8 +214,8 @@ class XlsxStreamSpec extends AnyFunSuite {
         === "stg_passport_blacklist")
       .select("event_dt", "rows_processed")
       .collect().map(r => (r.getDate(0).toString, r.getInt(1))).toSet
-    assert(meta == Set(("2021-03-01", 7), ("2021-03-02", 15),
-      ("2021-03-03", 24)))
+    assert(meta == Set(("2021-03-01", 7), ("2021-03-02", 17),
+      ("2021-03-03", 23)))
 
     // replayed micro-batch: J1's anti-join absorbs it — zero new rows
     IngestStream.applyBlacklistBatch(wh,

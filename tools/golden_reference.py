@@ -7,6 +7,9 @@ interval arithmetic) over the 3-day fixture, then diffs the final tables
 against the Spark pipeline's warehouse (Replay output).
 
 Usage: tools/golden_reference.py <refDataDir> <sparkWhDir>
+  e.g. on the committed fixture, after
+  `sbt "runMain graft.bank.Replay src/test/resources/bank-fixture/data <work>"`:
+  tools/golden_reference.py src/test/resources/bank-fixture/data <work>/wh
 Dev-only tool (driver-side python stack).
 """
 import re
@@ -283,7 +286,8 @@ def main():
         f"SELECT * FROM '{wh}/dwh_dim_terminals_hist/*.parquet'")
     ok &= diff(con, "rep_fraud",
         "SELECT * FROM rep_fraud",
-        f"SELECT event_dt, passport, fio, phone, event_type, report_dt FROM '{wh}/rep_fraud/*.parquet'")
+        "SELECT event_dt, passport, fio, phone, event_type, report_dt FROM "
+        f"read_parquet('{wh}/rep_fraud/**/*.parquet', hive_partitioning = true)")
     sys.exit(0 if ok else 1)
 
 
