@@ -1,9 +1,10 @@
 package graft.bank
 
 import org.apache.spark.ml.{Pipeline => MlPipeline, PipelineModel}
-import org.apache.spark.ml.classification.LogisticRegression
+import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
+import org.apache.spark.ml.graftshim.MlShim
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -77,7 +78,10 @@ object FraudScoring {
         "days_past_passport", "days_past_contract", "blacklisted", "label")
   }
 
-  /** Logistic-regression pipeline over the engineered features. */
+  /** Logistic-regression pipeline over the engineered features. The
+    * fitted model's training summary is dropped: it holds the session,
+    * which does not serialize, and the scoring plan ships the model to
+    * the executors. */
   def fit(training: DataFrame): PipelineModel = {
     val opType = new StringIndexer().setInputCol("oper_type")
       .setOutputCol("oper_type_ix").setHandleInvalid("keep")
@@ -89,7 +93,10 @@ object FraudScoring {
     val lr = new LogisticRegression()
       .setMaxIter(25).setRegParam(0.01)
       .setLabelCol("label").setFeaturesCol("features")
-    new MlPipeline().setStages(Array(opType, features, lr)).fit(training)
+    val model = new MlPipeline().setStages(Array(opType, features, lr))
+      .fit(training)
+    model.stages.collect { case m: LogisticRegressionModel => MlShim.dropSummary(m) }
+    model
   }
 
   /** Area under ROC on a scored frame. */

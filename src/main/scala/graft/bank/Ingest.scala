@@ -9,8 +9,10 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Daily file ingestion (`main.py:43-82`): CSV transactions with
   * decimal-comma amounts, xlsx terminal snapshots, xlsx cumulative
-  * passport blacklist with Excel-serial dates. Files are archived as
-  * `<name>.backup` after consumption — the reference's checkpointing.
+  * passport blacklist with Excel-serial dates. The batch day archives
+  * its files as `<name>.backup` after consumption — the reference's
+  * checkpointing; the streaming drain reads the same files through these
+  * readers and keeps its ledger in a checkpoint instead.
   */
 object Ingest {
 
@@ -37,9 +39,8 @@ object Ingest {
     (typed, first)
   }
 
-  /** S1–S3 typing projection, shared by the batch reader above and the
-    * streaming ingestion twin ([[graft.streaming.IngestStream]]):
-    * decimal-comma amount → DECIMAL(10,2), column order fixed. */
+  /** S1–S3 typing projection of [[transactions]]: decimal-comma amount →
+    * DECIMAL(10,2), column order fixed. */
   def typedTransactions(raw: DataFrame): DataFrame =
     raw.select(
       col("transaction_id"), col("transaction_date"), col("card_num"),
@@ -131,18 +132,12 @@ object Ingest {
   def blacklist(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read.format("xlsx").load(path)
     expectHeader(df, Seq("date", "passport"), path)
-    typedBlacklist(df)
-  }
-
-  /** S6 typing projection, shared by the batch reader above and the
-    * streaming twin ([[graft.streaming.IngestStream.blacklistAvailableNow]]):
-    * Excel serial string ("44256" / "44256.0") → DateType via the 1900
-    * system's 1899-12-30 epoch. */
-  def typedBlacklist(raw: DataFrame): DataFrame =
-    raw.select(
+    // Excel serial string ("44256" / "44256.0") → DateType
+    df.select(
       date_add(to_date(lit("1899-12-30")),
         substring_index(col("date"), ".", 1).cast("int")).as("date"),
       col("passport"))
+  }
 
   /** S13: move a consumed file to `<archiveDir>/<name>.backup`. */
   def archive(path: String, archiveDir: String): Unit = {

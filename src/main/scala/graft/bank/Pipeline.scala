@@ -7,58 +7,98 @@ import graft.operators.Cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Daily batch orchestration, reference order (`main.py:85-117`):
-  * ingest 3 files → blacklist fact append (anti-join dedup) → SCD2
-  * terminals transition → the transactions day ([[Pipeline.transactionsDay]]:
-  * fact partition, the four fraud rules into REP_FRAUD, the day's
-  * META_LOADING audit rows). Each day is one call; state lives in the
-  * [[Warehouse]].
+/** The daily cycle, reference order (`main.py:85-117`): ingest 3 files
+  * → blacklist fact append (anti-join dedup) → SCD2 terminals transition
+  * → the transactions day ([[Pipeline.transactionsDay]]: fact partition,
+  * the four fraud rules into REP_FRAUD, the day's META_LOADING audit
+  * rows). Each day is one call of [[runDayStaged]]; state lives in the
+  * [[Warehouse]]. The batch [[runDay]] and the streaming
+  * [[graft.streaming.IngestStream.runDailyDrains]] both land their days
+  * through it.
   *
-  * The batch mode fixes the rule plan: every day rescans the whole
-  * accumulated fact, as the reference does (`loading_rep_fraud.py:73,107`)
-  * — the golden mode, which tolerates days run out of order. The
-  * streaming twin runs the pruned plan of the same core.
+  * The mode fixes the rule plan. Batch (`streaming = false`) rescans the
+  * whole accumulated fact every day, as the reference does
+  * (`loading_rep_fraud.py:73,107`) — the golden mode, which tolerates
+  * days run out of order. Streaming runs the pruned plan of the same core
+  * and therefore requires days in calendar order.
   */
-final class Pipeline(wh: Warehouse, seed: Seeds.Seed) {
+final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
+                     streaming: Boolean = false) {
   private val spark: SparkSession = wh.spark
 
   import Pipeline._
 
   /** Run one day given the three file paths; files are archived after
-    * the run. Returns the batch date. */
+    * the run (`main.py:66,74,82`). Returns the batch date. */
   def runDay(txnPath: String, blacklistPath: String, terminalsPath: String,
              archiveDir: String): Date = {
-    // --- ingestion to staging (`main.py:43-82`)
-    val (txns, day) = Ingest.transactions(spark, txnPath)
-    runDayStaged(txns, Ingest.blacklist(spark, blacklistPath),
-      Ingest.terminals(spark, terminalsPath), day)
-    // --- archive consumed files (`main.py:66,74,82`)
+    val day = runFiles(txnPath, blacklistPath, terminalsPath)
     Seq(txnPath, blacklistPath, terminalsPath)
       .foreach(Ingest.archive(_, archiveDir))
     day
   }
 
-  /** The post-ingest daily cycle over already-typed staging frames:
-    * blacklist fact → SCD2 terminals → [[Pipeline.transactionsDay]].
-    * Split from [[runDay]] so synthetic multi-day specs can drive the
-    * pipeline without materializing CSV/XLSX drops (the round-12 volume
-    * probe of SCALING.md's "flagship daily workload" drove it too).
-    * `txns` must hold the rows of `day` only ([[Ingest.transactions]]
-    * enforces it for a file): the fact lands as a dynamic overwrite of
-    * the partitions the rows fall in.
+  /** Read one day's three drops with the [[Ingest]] readers
+    * (`main.py:43-82`) and land them through [[runDayStaged]]; nothing
+    * is archived. Returns the batch date. */
+  def runFiles(txnPath: String, blacklistPath: String, terminalsPath: String,
+               failpoint: String => Unit = _ => ()): Date = {
+    val (txns, day) = Ingest.transactions(spark, txnPath)
+    runDayStaged(txns, Ingest.blacklist(spark, blacklistPath),
+      Ingest.terminals(spark, terminalsPath), day, failpoint)
+    day
+  }
+
+  /** The post-ingest daily cycle over typed staging frames: blacklist
+    * fact → SCD2 terminals → [[Pipeline.transactionsDay]]. `txns` must
+    * hold the rows of `day` only ([[Ingest.transactions]] enforces it for
+    * a file): the fact lands as a dynamic overwrite of the partitions the
+    * rows fall in.
     *
-    * The blacklist count is observed on its append ([[RowCount]]); the
-    * terminals snapshot is cached and counted, since SCD2 reads it three
-    * times. The day's ten META rows land as one append, in reference
-    * order, after the mart write — a day that throws leaves no META
-    * rows behind.
+    * The whole day is exactly-once:
     *
-    * Re-running a day rewrites its fact and mart partitions instead of
-    * appending a second copy. The blacklist append is idempotent through
-    * its anti-join; the SCD2 transition and the META rows are not — a
-    * re-run applies the snapshot again and logs the day again. */
+    *  - a COMPLETED day (its last rule marker, `REP_FRAUD_attempt_amount`,
+    *    in META) is skipped and writes nothing, after a content check
+    *    against its fact partition: a same-day file with DIFFERENT
+    *    content is an upstream fault, not a re-run, and fails loudly;
+    *  - the blacklist append is idempotent through its anti-join;
+    *  - the SCD2 swap carries the day it applied ([[AppliedDayTag]]), and
+    *    a re-run of that day skips the transition — `scd2Apply` itself
+    *    is not idempotent (the reference's all-versions deleted-detection
+    *    re-tombstones on re-apply);
+    *  - fact and mart are partition overwrites, and META is written once,
+    *    after every write ([[transactionsDay]]).
+    *
+    * So a cut anywhere in the day, followed by a re-run of the same day,
+    * leaves the warehouse of an uninterrupted run. `failpoint` is the
+    * crash-injection seam (`scd2_swap`, then [[transactionsDay]]'s two);
+    * a throwing hook simulates a crash there.
+    *
+    * A streaming day must not sort below any fact day already landed: the
+    * pruned rule plan equals the full rescan only with days applied in
+    * calendar order. The check reads the fact's partition directory
+    * names, no data.
+    *
+    * META in reference order: staging counts, then (batch only) the
+    * reference's staging clears, then one row per rule. The blacklist
+    * count is observed on its append ([[RowCount]]); the terminals
+    * snapshot is cached and counted, since SCD2 reads it three times. */
   def runDayStaged(txns: DataFrame, blacklist: DataFrame,
-                   terminals: DataFrame, day: Date): Unit = {
+                   terminals: DataFrame, day: Date,
+                   failpoint: String => Unit = _ => ()): Unit = {
+    val dayRows = txns.select(FactColumns.map(col): _*)
+      .withColumn("txn_date", to_date(col("transaction_date")))
+    if (completed(wh, day)) {
+      requireSameDay(day, dayRows)
+      return
+    }
+    if (streaming) landedDays(wh).find(_.after(day)).foreach { last =>
+      throw new IllegalArgumentException(
+        s"out-of-order drop: day $day arrived while fact partitions " +
+          s"already reach $last; the pruned rule plan needs days in " +
+          "calendar order")
+    }
+
     // --- blacklist fact (`comm_funcs.py:47-56`)
     val blFact = wh.readOr(FactBlacklist)
     val (blNew, Seq(nBlacklist)) =
@@ -70,34 +110,57 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed) {
     // --- SCD2 terminals dimension (`incr_loading.py`)
     val stgTerminals = terminals.cache()
     val nTerminals = stgTerminals.count()
-    val hist = wh.readOr(DimTerminals)
-    val newHist = Cdc.scd2Apply(hist, stgTerminals, day,
-      keyCol = "terminal_id",
-      attrCols = Seq("terminal_type", "terminal_city", "terminal_address"))
-    wh.overwrite(DimTerminals, newHist
-      .select(Schemas.dimTerminalsHist.fieldNames.map(col).toSeq: _*))
+    if (!wh.readTag(DimTerminals, AppliedDayTag).contains(day.toString)) {
+      val newHist = Cdc.scd2Apply(wh.readOr(DimTerminals), stgTerminals, day,
+        keyCol = "terminal_id",
+        attrCols = Seq("terminal_type", "terminal_city", "terminal_address"))
+      wh.overwriteTagged(DimTerminals,
+        newHist.select(Schemas.dimTerminalsHist.fieldNames.map(col).toSeq: _*),
+        Map(AppliedDayTag -> day.toString))
+    }
     stgTerminals.unpersist()
+    failpoint("scd2_swap")
 
     // --- facts, fraud mart and the day's audit (`comm_funcs.py:13-78`,
-    // `loading_rep_fraud.py`); META in reference order: staging counts,
-    // staging clears, then one row per rule
-    transactionsDay(wh, seed, day,
-      txns.select(Schemas.factTransactions.fieldNames.map(col).toSeq: _*)
-        .withColumn("txn_date", to_date(col("transaction_date"))),
-      incremental = false,
+    // `loading_rep_fraud.py`)
+    val clears = if (streaming) Nil
+      else Seq("stg_transactions", "stg_terminals", "stg_passport_blacklist")
+        .map(t => Meta(s"CLEAR_$t", day, 0))
+    transactionsDay(wh, seed, day, dayRows, incremental = streaming,
       extraMeta = Seq(Meta("stg_passport_blacklist", day, nBlacklist.get()),
-          Meta("stg_terminals", day, nTerminals)) ++
-        Seq("stg_transactions", "stg_terminals", "stg_passport_blacklist")
-          .map(t => Meta(s"CLEAR_$t", day, 0)))
+        Meta("stg_terminals", day, nTerminals)) ++ clears,
+      failpoint)
+  }
+
+  /** A re-run of completed `day` must carry the rows its fact partition
+    * holds. Signature, order-independent over all fact columns: (count,
+    * XOR of per-row 64-bit hashes, SUM of the same hashes). XOR alone is
+    * blind to even-multiplicity edits (a duplicated pair {A,A} rewritten
+    * to {B,B} XORs to 0 both ways); the sum catches those, accumulated as
+    * decimal(38,0), which cannot overflow at any realistic day size. */
+  private def requireSameDay(day: Date, dayRows: DataFrame): Unit = {
+    def sig(df: DataFrame): (Long, Long, String) = {
+      val hash = s"xxhash64(${(FactColumns :+ "txn_date").mkString(", ")})"
+      val r = df.agg(count(lit(1)),
+        expr(s"bit_xor($hash)"),
+        expr(s"cast(sum(cast($hash as decimal(38,0))) as string)")).head()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
+        if (r.isNullAt(2)) "" else r.getString(2))
+    }
+    val existing = sig(wh.read(FactTransactions)
+      .where(col("txn_date") === lit(day)))
+    val incoming = sig(dayRows)
+    require(existing == incoming,
+      s"re-delivery of completed day $day with different content " +
+        s"(rows/xor-sig $incoming vs committed $existing); a completed " +
+        "day can only be re-run verbatim — correct-by-replacement needs " +
+        "an explicit operator action")
   }
 }
 
 object Pipeline {
 
-  /** The one code that lands a transactions day, for the batch
-    * [[Pipeline.runDayStaged]] and the streaming
-    * [[graft.streaming.IngestStream.applyTransactionsBatch]] alike. In
-    * order:
+  /** The transactions half of [[Pipeline.runDayStaged]], in order:
     *
     *  1. `dayRows` (fact columns plus `txn_date`) land as a dynamic
     *     overwrite of their `txn_date` partition, which yields the
@@ -107,13 +170,13 @@ object Pipeline {
     *     rule counts; then `failpoint("mart_overwrite")`;
     *  3. one META append: `stg_transactions`, then `extraMeta`, then the
     *     four rule rows in reference order. The last of them
-    *     (`REP_FRAUD_attempt_amount`) is the streaming twin's
-    *     day-completion marker.
+    *     (`REP_FRAUD_attempt_amount`) is the day-completion marker
+    *     ([[completed]]).
     *
     * `incremental` is the mode's rule plan, not a tuning choice: the
     * batch day passes `false` (the reference's full rescan), the
-    * streaming day `true` (the pruned plan, exact under the day-order
-    * guards of [[graft.streaming.IngestStream.applyTransactionsBatch]]).
+    * streaming day `true` (the pruned plan, exact under the streaming
+    * day-order check of [[Pipeline.runDayStaged]]).
     * Rules 3/4 always run the Δ-bucketed band join
     * ([[graft.operators.BandJoin.joinWithin]]).
     *
@@ -189,9 +252,34 @@ object Pipeline {
       (facts, facts)
     }
 
+  /** The fact columns of a transactions day, in table order. */
+  private val FactColumns: Seq[String] =
+    Schemas.factTransactions.fieldNames.toSeq
+
+  /** Tag file of the SCD2 dimension: the day whose snapshot produced the
+    * current version ([[Warehouse.overwriteTagged]], so it swaps with the
+    * data). */
+  val AppliedDayTag = "_applied_day"
+
+  /** The fact's `txn_date` partitions, from the directory names alone. */
+  private def landedDays(wh: Warehouse): Seq[Date] =
+    wh.partitionValues(FactTransactions, "txn_date")
+      .filter(_.matches("\\d{4}-\\d{2}-\\d{2}")).map(Date.valueOf)
+
+  /** True iff `day` ran to its end: its last rule row
+    * (`REP_FRAUD_attempt_amount`) is in META. A day without a fact
+    * partition cannot have, so META is read only for a landed day. */
+  private[graft] def completed(wh: Warehouse, day: Date): Boolean =
+    landedDays(wh).contains(day) && !wh.readOr(MetaLoading)
+      .where(col("table_name") === "REP_FRAUD_attempt_amount" &&
+        col("event_dt") === lit(day)).isEmpty
+
   val FactTransactions = "dwh_fact_transactions"
   val FactBlacklist = "dwh_fact_passport_blacklist"
   val DimTerminals = "dwh_dim_terminals_hist"
   val RepFraud = "rep_fraud"
   val MetaLoading = "meta_loading"
+  /** The streaming inbox's drops whose day is not complete yet
+    * ([[graft.streaming.IngestStream.runDailyDrains]]). */
+  val PendingDrops = "stream_pending_drops"
 }

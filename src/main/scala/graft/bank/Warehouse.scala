@@ -5,7 +5,7 @@ import java.sql.Date
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
 
 /** Parquet-backed warehouse layer: the Spark replacement for the
   * reference's PostgreSQL schema (`comm_funcs.py:10`). Tables live as
@@ -379,12 +379,15 @@ final class Warehouse(val spark: SparkSession, val root: String) {
 
   /** META_LOADING audit sink (`comm_funcs.py:13-18`): the rows land as
     * one append of one file, in the given order (none for an empty
-    * list). A single event is a one-element list. */
+    * list). A single event is a one-element list. `rows_processed` is an
+    * INT column, so a count above `Int.MaxValue` fails before anything
+    * is written rather than wrapping. */
   def logMeta(rows: Seq[Warehouse.Meta]): Unit =
     if (rows.nonEmpty) {
       import scala.jdk.CollectionConverters._
       append(Pipeline.MetaLoading, spark.createDataFrame(
-        rows.map(m => Row(m.table, m.eventDt, m.rows.toInt, m.status)).asJava,
+        rows.map(m => Row(m.table, m.eventDt, Math.toIntExact(m.rows),
+          m.status)).asJava,
         Schemas.metaLoading).coalesce(1))
     }
 }
@@ -406,5 +409,6 @@ object Warehouse {
     Pipeline.FactBlacklist -> Schemas.factPassportBlacklist,
     Pipeline.DimTerminals -> Schemas.dimTerminalsHist,
     Pipeline.RepFraud -> Schemas.repFraud,
-    Pipeline.MetaLoading -> Schemas.metaLoading)
+    Pipeline.MetaLoading -> Schemas.metaLoading,
+    Pipeline.PendingDrops -> StructType(Seq(StructField("path", StringType))))
 }

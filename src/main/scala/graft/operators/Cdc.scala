@@ -48,7 +48,10 @@ object Cdc {
                    attrCols: Seq[String]): Diff = {
     val histKeyed = hist.select(keyCol, attrCols: _*)
     val added   = snapshot.join(histKeyed, Seq(keyCol), "left_anti")
-    val deleted = histKeyed.join(snapshot, Seq(keyCol), "left_anti").distinct()
+    // One row per history version, as the reference's CTAS has
+    // (`incr_loading.py:36-39`): a key deleted again carries one
+    // tombstone per version it has, identical versions included.
+    val deleted = histKeyed.join(snapshot, Seq(keyCol), "left_anti")
     val anyAttrDiffers = attrCols
       .map(a => !(snapshot(a) <=> histKeyed(a)))
       .reduce(_ || _)

@@ -94,6 +94,50 @@ class BatchDaySpec extends AnyFunSuite {
       days.map(_._1.toString))
   }
 
+  test("a re-run of a completed day leaves every warehouse file untouched") {
+    val (wh, _) = run
+    val before = fileListing(wh.root)
+    val pipe = new Pipeline(wh, seed)
+    days.foreach { case (day, txns, bl, terms) =>
+      pipe.runDayStaged(txnsDf(txns), blacklistDf(bl), terminalsDf(terms), day)
+    }
+    assert(fileListing(wh.root) == before)
+    // a different file for a completed day is an upstream fault
+    val (day, txns, bl, terms) = days(1)
+    val ex = intercept[IllegalArgumentException] {
+      pipe.runDayStaged(txnsDf(txns.tail), blacklistDf(bl), terminalsDf(terms),
+        day)
+    }
+    assert(ex.getMessage.contains("different content"), ex.getMessage)
+    assert(fileListing(wh.root) == before)
+  }
+
+  test("a crash at any write boundary, then a re-run, heals to the uninterrupted run") {
+    val (want, _) = run
+    def state(wh: Warehouse) =
+      Seq(Pipeline.FactBlacklist, Pipeline.DimTerminals,
+        Pipeline.FactTransactions, Pipeline.RepFraud, Pipeline.MetaLoading)
+        .map(t => wh.read(t).collect().map(_.toString).sorted.toSeq)
+    def runDay(pipe: Pipeline, i: Int, failpoint: String => Unit = _ => ()) = {
+      val (day, txns, bl, terms) = days(i)
+      pipe.runDayStaged(txnsDf(txns), blacklistDf(bl), terminalsDf(terms),
+        day, failpoint)
+    }
+    Seq("scd2_swap", "fact_overwrite", "mart_overwrite").foreach { cut =>
+      val wh = new Warehouse(spark,
+        Files.createTempDirectory(s"batchday_$cut").resolve("wh").toString)
+      val pipe = new Pipeline(wh, seed)
+      runDay(pipe, 0)
+      val ex = intercept[RuntimeException] {
+        runDay(pipe, 1, l => if (l == cut)
+          throw new RuntimeException(s"injected crash at $l"))
+      }
+      assert(ex.getMessage.contains(cut))
+      (1 to 2).foreach(runDay(pipe, _))
+      assert(state(wh) == state(want), cut)
+    }
+  }
+
   test("a transactions file with two dates, or a null date, fails before any table changes") {
     val (wh, _) = run
     val inbox = Files.createTempDirectory("batchday_bad")

@@ -10,6 +10,12 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * spec asserts on them comes from the DuckDB replica
   * (`tools/golden_reference.py`), not from the code under test.
   *
+  * `day4/` holds the fourth day of `generate(out, 0.1, 4, 1)` (whose days
+  * 1–3 and seed file are byte-identical to the above): the first day on
+  * which the full rescan re-reports earlier rule-1/2 hits. It sits beside
+  * `data/` so the specs that glob `data/` keep their three days; a replay
+  * opts in through [[drop]].
+  *
   * Resolved through the test classpath, so the working directory does
   * not matter.
   */
@@ -24,6 +30,13 @@ object RefFixture {
   lazy val dataDir: String = root.resolve("data").toString
   lazy val seedSql: String = root.resolve("ddl_dml.sql").toString
   val days: Seq[String] = Seq("01032021", "02032021", "03032021")
+  val day4: String = "04032021"
+
+  /** The committed drop file `name`: day 4's under `day4/`, the others
+    * under `data/`. */
+  def drop(name: String): Path =
+    if (name.contains(day4)) root.resolve("day4").resolve(name)
+    else Paths.get(dataDir, name)
 
   /** The batch replay: each day's drops are copied into `work/inbox`
     * (runDay archives its inputs to `work/archive`) and run through

@@ -147,4 +147,19 @@ class WarehouseRecoverySpec extends AnyFunSuite {
       partitionCols = Seq("dt"))
     assert(wh.partitionValues("g", "dt") == Seq("a b"))
   }
+
+  test("logMeta: a count above Int.MaxValue fails before any row is written") {
+    val wh = new Warehouse(spark,
+      Files.createTempDirectory("wh_meta").toString)
+    val day = java.sql.Date.valueOf("2021-03-01")
+    wh.logMeta(Seq(Warehouse.Meta("stg_transactions", day, Int.MaxValue)))
+    val ex = intercept[ArithmeticException] {
+      wh.logMeta(Seq(Warehouse.Meta("stg_terminals", day, 1),
+        Warehouse.Meta("stg_transactions", day, 1L << 31)))
+    }
+    assert(ex.getMessage.contains("overflow"), ex.getMessage)
+    assert(wh.read(Pipeline.MetaLoading).collect().map(r =>
+      (r.getString(0), r.getInt(2))).toSeq ==
+      Seq(("stg_transactions", Int.MaxValue)))
+  }
 }

@@ -1,25 +1,26 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Date
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.bank.{Ingest, Pipeline, RefFixture, Schemas, Warehouse}
+import graft.bank.{BankDays, Ingest, Pipeline, RefFixture, Schemas}
 import graft.operators.Cdc
 
-/** Streaming twins of the two xlsx drop paths, on the committed 3-day
-  * fixture ([[RefFixture]]): terminals snapshot → SCD2 dimension
-  * (foreachBatch + Cdc.scd2Apply, exactly-once via the tagged swap) and
-  * cumulative blacklist → anti-join fact append (idempotent via J1
-  * itself). Each
-  * twin must match the batch path row-for-row, commit nothing on an
-  * empty re-run, and absorb a replayed micro-batch without corrupting
-  * state (scd2Apply is NOT idempotent — the reference's all-versions
-  * deleted-detection quirk re-tombstones on re-apply — so the replay
-  * guard is what the exactly-once contract rests on). */
+/** The two xlsx drops through the one streaming drain, on the committed
+  * 3-day fixture ([[RefFixture]]): terminals snapshot → SCD2 dimension
+  * (exactly-once through the swap's applied-day tag) and cumulative
+  * blacklist → anti-join fact append (idempotent via J1 itself). Each
+  * must match the batch path row for row, commit nothing on an empty
+  * re-run, and absorb a replay without corrupting state (scd2Apply is NOT
+  * idempotent — the reference's all-versions deleted-detection quirk
+  * re-tombstones on re-apply — so the replay guard is what the
+  * exactly-once contract rests on). */
 class XlsxStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private lazy val refData = RefFixture.dataDir
@@ -27,13 +28,14 @@ class XlsxStreamSpec extends AnyFunSuite {
   private def dayDate(d: String): Date =
     Date.valueOf(s"${d.substring(4)}-${d.substring(2, 4)}-${d.substring(0, 2)}")
 
-  private def drop(inbox: Path, prefix: String, day: String): Unit =
-    Files.copy(Paths.get(refData, s"${prefix}_$day.xlsx"),
-      inbox.resolve(s"${prefix}_$day.xlsx"), StandardCopyOption.REPLACE_EXISTING)
-
   private def rowSet(df: DataFrame): Set[String] =
     df.selectExpr(s"concat_ws('|', ${df.columns.mkString(",")})")
       .collect().map(_.getString(0)).toSet
+
+  /** The messages of `t` and its causes. */
+  private def messages(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
+      .flatMap(e => Option(e.getMessage)).toSeq
 
   /** The batch-path dimension: fold Cdc.scd2Apply over the day-ordered
     * snapshots, exactly what Pipeline.runDay does per day. Each step
@@ -47,179 +49,136 @@ class XlsxStreamSpec extends AnyFunSuite {
         Ingest.terminals(spark, s"$refData/terminals_$d.xlsx"),
         dayDate(d), keyCol = "terminal_id",
         attrCols = Schemas.terminalsSnapshot.fieldNames.toSeq.tail)
-        .select(Schemas.dimTerminalsHist.fieldNames.map(
-          org.apache.spark.sql.functions.col).toSeq: _*)
+        .select(Schemas.dimTerminalsHist.fieldNames.map(col).toSeq: _*)
         .localCheckpoint(true)
     }
 
-  /** A fake (path, content) micro-batch frame, as the binaryFile source
-    * would deliver it — for driving the foreachBatch bodies directly. */
-  private def fileBatch(paths: String*): DataFrame = {
-    import spark.implicits._
-    paths.map(p => (p, Files.readAllBytes(Paths.get(p))))
-      .toDF("path", "content")
-  }
-
   test("terminals twin: batch parity, idempotent re-run, replay guard") {
-    val root = Files.createTempDirectory("xlsx_stream_term")
-    val inbox = Files.createDirectory(root.resolve("inbox"))
-    val cp = root.resolve("cp").toString
-    val wh = new Warehouse(spark, root.resolve("wh").toString)
-
-    // day 1+2 backlog drains as ONE micro-batch (the default), folded
-    // in day order and committed in one tagged swap
-    drop(inbox, "terminals", "01032021"); drop(inbox, "terminals", "02032021")
-    assert(IngestStream.terminalsScd2AvailableNow(
-      spark, inbox.toString, cp, wh) == 1)
-    assert(rowSet(wh.read(Pipeline.DimTerminals)) == rowSet(batchDim(2)))
+    val in = Inbox.fresh("xlsx_stream_term")
+    // day 1+2 backlog drains as ONE micro-batch, folded in day order
+    in.deliver(days(0)); in.deliver(days(1))
+    assert(in.drain() == 1)
+    assert(rowSet(in.wh.read(Pipeline.DimTerminals)) == rowSet(batchDim(2)))
 
     // re-run with nothing new: zero committing batches, dim unchanged
-    assert(IngestStream.terminalsScd2AvailableNow(
-      spark, inbox.toString, cp, wh) == 0)
-    assert(rowSet(wh.read(Pipeline.DimTerminals)) == rowSet(batchDim(2)))
+    assert(in.drain() == 0)
+    assert(rowSet(in.wh.read(Pipeline.DimTerminals)) == rowSet(batchDim(2)))
 
-    // incremental day-3 drop picks up exactly the new snapshot
-    drop(inbox, "terminals", "03032021")
-    assert(IngestStream.terminalsScd2AvailableNow(
-      spark, inbox.toString, cp, wh) >= 1)
-    val after3 = rowSet(wh.read(Pipeline.DimTerminals))
-    assert(after3 == rowSet(batchDim(3)))
+    // incremental day-3 drop picks up exactly the new snapshot; the
+    // swap carries the day it applied
+    in.deliver(days(2))
+    assert(in.drain() == 1)
+    assert(rowSet(in.wh.read(Pipeline.DimTerminals)) == rowSet(batchDim(3)))
+    assert(in.wh.readTag(Pipeline.DimTerminals, Pipeline.AppliedDayTag)
+      .contains("2021-03-03"))
 
-    // replayed micro-batch id (crash between sink commit and source
-    // checkpoint advance): the tagged-swap guard must skip it — without
-    // the guard scd2Apply would re-tombstone and grow history. The tag
-    // is scoped to the checkpoint INSTANCE (the persisted query id),
-    // so the replay carries the id the real stream wrote.
-    val sid = wh.readTag(Pipeline.DimTerminals, IngestStream.BatchTag)
-      .get.trim.split(' ').head
-    assert(sid == IngestStream.checkpointQueryId(spark, cp))
-    IngestStream.applyTerminalsBatch(wh,
-      fileBatch(s"$refData/terminals_03032021.xlsx"),
-      batchId = 0, streamId = sid)
-    assert(rowSet(wh.read(Pipeline.DimTerminals)) == after3)
-
-    // a NEW stream (different query id) is not blocked by the old tag —
-    // but re-delivering an ALREADY-APPLIED day must now fail LOUDLY at
-    // the strictly-after day guard (scd2Apply is not idempotent:
-    // silently re-applying would re-tombstone and grow history)
-    val dup = intercept[IllegalArgumentException] {
-      IngestStream.applyTerminalsBatch(wh,
-        fileBatch(s"$refData/terminals_03032021.xlsx"),
-        batchId = 0, streamId = "other-stream-id")
-    }
-    assert(dup.getMessage.contains("duplicate"))
-    assert(rowSet(wh.read(Pipeline.DimTerminals)) == after3)
-    assert(wh.readTag(Pipeline.DimTerminals,
-      IngestStream.BatchTag).exists(_.startsWith(s"$sid ")))
+    // a replayed day (crash between the day's writes and the source's
+    // commit): the day function finds it complete and writes nothing —
+    // without the guard scd2Apply would re-tombstone and grow history
+    val before = BankDays.fileListing(in.wh.root)
+    val (t, b, m) = in.dayFiles(days(2))
+    new Pipeline(in.wh, Inbox.seed, streaming = true).runFiles(t, b, m)
+    assert(BankDays.fileListing(in.wh.root) == before)
   }
 
-  test("terminals twin: wiped-and-recreated checkpoint fails loudly, no silent skip") {
-    val root = Files.createTempDirectory("xlsx_stream_term_wipe")
-    val inbox = Files.createDirectory(root.resolve("inbox"))
-    val cp = root.resolve("cp")
-    val wh = new Warehouse(spark, root.resolve("wh").toString)
-    days.foreach(drop(inbox, "terminals", _))
-    assert(IngestStream.terminalsScd2AvailableNow(
-      spark, inbox.toString, cp.toString, wh) == 1)
-    val committed = rowSet(wh.read(Pipeline.DimTerminals))
+  test("wiped checkpoint: same drops change nothing, a changed drop fails") {
+    val in = Inbox.fresh("xlsx_stream_wipe")
+    days.foreach(in.deliver(_))
+    assert(in.drain() == 1)
+    val before = BankDays.fileListing(in.wh.root)
 
-    // the routine ops action the round-10 guard mishandled: delete the
-    // checkpoint. Batch ids restart at 0 while the dimension tag holds
-    // the OLD stream's high id. The instance-scoped tag must NOT match
-    // (that would silently skip real batches and mark them consumed);
-    // instead the re-listed old files hit the strictly-after day guard
-    // and the query dies loudly, dimension untouched.
+    // the routine ops action: delete the checkpoint. Every drop is
+    // delivered again, and each completed day is checked against its
+    // fact partition and skipped — never silently re-applied
     def rmTree(p: Path): Unit = if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f))
       finally walk.close()
     }
-    rmTree(cp)
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      IngestStream.terminalsScd2AvailableNow(
-        spark, inbox.toString, cp.toString, wh)
-    }
-    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
-      .take(8).exists(t => Option(t.getMessage)
-        .exists(_.contains("out-of-order or duplicate"))))
-    assert(rowSet(wh.read(Pipeline.DimTerminals)) == committed)
+    rmTree(in.checkpoints)
+    assert(in.drain() == 1)
+    assert(BankDays.fileListing(in.wh.root) == before)
+
+    // a drop that changed since its day ran is an upstream fault: the
+    // re-delivery fails loudly, warehouse untouched
+    rmTree(in.checkpoints)
+    val t1 = Paths.get(in.dayFiles(days(0))._1)
+    val lines = Files.readAllLines(t1)
+    Files.write(t1, lines.subList(0, lines.size - 1))
+    val ex = intercept[StreamingQueryException](in.drain())
+    assert(messages(ex).exists(_.contains("different content")), messages(ex))
+    assert(BankDays.fileListing(in.wh.root) == before)
   }
 
   test("terminals twin: 3-file backlog folds in one batch; out-of-order drop fails loudly") {
-    val root = Files.createTempDirectory("xlsx_stream_term_multi")
-    val inbox = Files.createDirectory(root.resolve("inbox"))
-    val wh = new Warehouse(spark, root.resolve("wh").toString)
-    days.foreach(drop(inbox, "terminals", _))
-    // all three snapshots in ONE micro-batch: one folded dimension
-    // version, one tagged swap — exactly-once even mid-backlog
-    assert(IngestStream.terminalsScd2AvailableNow(spark, inbox.toString,
-      root.resolve("cp").toString, wh) == 1)
-    assert(rowSet(wh.read(Pipeline.DimTerminals)) == rowSet(batchDim(3)))
+    val in = Inbox.fresh("xlsx_stream_term_multi")
+    days.foreach(in.deliver(_))
+    // all three days in ONE micro-batch, applied in day order
+    assert(in.drain() == 1)
+    assert(rowSet(in.wh.read(Pipeline.DimTerminals)) == rowSet(batchDim(3)))
 
     // S8 audit parity: one META row per consumed snapshot with the
     // file's row count, like the batch path's staging log
-    val meta = wh.read(Pipeline.MetaLoading)
-      .where(org.apache.spark.sql.functions.col("table_name") === "stg_terminals")
+    val meta = in.wh.read(Pipeline.MetaLoading)
+      .where(col("table_name") === "stg_terminals")
       .select("event_dt", "rows_processed")
       .collect().map(r => (r.getDate(0).toString, r.getInt(1))).toSet
     assert(meta == Set(("2021-03-01", 20), ("2021-03-02", 21),
       ("2021-03-03", 20)))
 
-    // an OLDER snapshot arriving after day 3 must be rejected — SCD2
-    // application is order-sensitive and silent corruption is the
-    // failure mode (the file source does not order ties by name)
-    val ex = intercept[IllegalArgumentException] {
-      IngestStream.applyTerminalsBatch(wh,
-        fileBatch(s"$refData/terminals_01032021.xlsx"),
-        batchId = 99, streamId = "any")
-    }
-    assert(ex.getMessage.contains("out-of-order"))
-    assert(rowSet(wh.read(Pipeline.DimTerminals)) == rowSet(batchDim(3)))
+    // an OLDER day arriving after a later one must be rejected — SCD2
+    // application and the pruned rules are order-sensitive, and silent
+    // corruption is the failure mode (the file source does not order
+    // ties by name)
+    val late = Inbox.fresh("xlsx_stream_term_late")
+    late.deliver(days(1))
+    assert(late.drain() == 1)
+    val before = BankDays.fileListing(late.wh.root)
+    late.deliver(days(0))
+    val ex = intercept[StreamingQueryException](late.drain())
+    assert(messages(ex).exists(_.contains("out-of-order")), messages(ex))
+    assert(BankDays.fileListing(late.wh.root) == before)
   }
 
   test("blacklist twin: cumulative drops, anti-join idempotence") {
-    val root = Files.createTempDirectory("xlsx_stream_bl")
-    val inbox = Files.createDirectory(root.resolve("inbox"))
-    val cp = root.resolve("cp").toString
-    val wh = new Warehouse(spark, root.resolve("wh").toString)
-
-    drop(inbox, "passport_blacklist", "01032021")
-    drop(inbox, "passport_blacklist", "02032021")
-    assert(IngestStream.blacklistAvailableNow(
-      spark, inbox.toString, cp, wh) >= 2)
+    val in = Inbox.fresh("xlsx_stream_bl")
+    in.deliver(days(0)); in.deliver(days(1))
+    assert(in.drain() == 1)
     // cumulative semantics: after day 2 the fact equals the day-2 file
     // (it contains day 1), each passport exactly once
     val day2 = rowSet(Ingest.blacklist(spark,
       s"$refData/passport_blacklist_02032021.xlsx"))
-    assert(rowSet(wh.read(Pipeline.FactBlacklist)) == day2)
+    assert(rowSet(in.wh.read(Pipeline.FactBlacklist)) == day2)
 
     // nothing new: zero committing batches
-    assert(IngestStream.blacklistAvailableNow(
-      spark, inbox.toString, cp, wh) == 0)
+    assert(in.drain() == 0)
 
-    // day-3 drop: only the 6 never-seen passports append
-    drop(inbox, "passport_blacklist", "03032021")
-    assert(IngestStream.blacklistAvailableNow(
-      spark, inbox.toString, cp, wh) >= 1)
+    // day-3 drop: only the 6 never-seen passports append; a second
+    // deployment at the same point crashes right after the append and
+    // replays the day
+    in.deliver(days(2))
+    val crashed = in.fork("xlsx_stream_bl_crash")
+    assert(in.drain() == 1)
     val day3 = rowSet(Ingest.blacklist(spark,
       s"$refData/passport_blacklist_03032021.xlsx"))
-    assert(rowSet(wh.read(Pipeline.FactBlacklist)) == day3)
-    assert(wh.read(Pipeline.FactBlacklist).count() == day3.size)
+    assert(rowSet(in.wh.read(Pipeline.FactBlacklist)) == day3)
+    assert(in.wh.read(Pipeline.FactBlacklist).count() == day3.size)
 
     // S8 audit parity: one META row per consumed drop with the FILE's
-    // (cumulative) row count — order-independent across batches
-    val meta = wh.read(Pipeline.MetaLoading)
-      .where(org.apache.spark.sql.functions.col("table_name")
-        === "stg_passport_blacklist")
+    // (cumulative) row count
+    val meta = in.wh.read(Pipeline.MetaLoading)
+      .where(col("table_name") === "stg_passport_blacklist")
       .select("event_dt", "rows_processed")
       .collect().map(r => (r.getDate(0).toString, r.getInt(1))).toSet
     assert(meta == Set(("2021-03-01", 7), ("2021-03-02", 17),
       ("2021-03-03", 23)))
 
-    // replayed micro-batch: J1's anti-join absorbs it — zero new rows
-    IngestStream.applyBlacklistBatch(wh,
-      fileBatch(s"$refData/passport_blacklist_03032021.xlsx"))
-    assert(wh.read(Pipeline.FactBlacklist).count() == day3.size)
+    // replayed append: J1's anti-join absorbs it — zero new rows
+    intercept[StreamingQueryException](crashed.drain(failpoint = l =>
+      if (l == "scd2_swap") throw new RuntimeException(s"injected crash at $l")))
+    assert(crashed.drain() == 1)
+    assert(rowSet(crashed.wh.read(Pipeline.FactBlacklist)) == day3)
+    assert(crashed.wh.read(Pipeline.FactBlacklist).count() == day3.size)
   }
 }
