@@ -82,7 +82,7 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
     * META in reference order: staging counts, then (batch only) the
     * reference's staging clears, then one row per rule. The blacklist
     * count is observed on its append ([[RowCount]]); the terminals
-    * snapshot is cached and counted, since SCD2 reads it three times. */
+    * snapshot is cached, since both its count and SCD2 read it. */
   def runDayStaged(txns: DataFrame, blacklist: DataFrame,
                    terminals: DataFrame, day: Date,
                    failpoint: String => Unit = _ => ()): Unit = {

@@ -2,31 +2,28 @@ package graft.operators
 
 import java.sql.Date
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Change-data-capture over full snapshots + SCD2 history maintenance.
   *
   * Re-expresses the reference's terminal-dimension machinery
   * (`/root/reference/py_scripts/incr_loading.py:13-129`) as pure
-  * `DataFrame => DataFrame` functions:
+  * `DataFrame => DataFrame` functions. `scd2Apply` folds the three CTAS
+  * increments (new / deleted / updated, `incr_loading.py:14-57`) and the
+  * five UPDATE/INSERT statements (`incr_loading.py:60-129`) into one
+  * computation: close open rows of changed/deleted keys at `day − 1`,
+  * append fresh open rows, append tombstones (`deleted_flg = true`).
+  * Spark has no in-place UPDATE; the caller atomically swaps the
+  * dimension table.
   *
-  *  - `snapshotDiff` = the three CTAS increments (new / deleted / updated,
-  *    `incr_loading.py:14-57`): anti-joins on the key plus an
-  *    any-attribute-differs residual using Spark's null-safe equality
-  *    (`<=>` ≡ `IS NOT DISTINCT FROM`).
-  *  - `scd2Apply` = the five UPDATE/INSERT statements
-  *    (`incr_loading.py:60-129`) rewritten as a single pure computation:
-  *    close open rows of changed/deleted keys at `day − 1`, append fresh
-  *    open rows, append tombstones (`deleted_flg = true`). Spark has no
-  *    in-place UPDATE; the caller atomically swaps the dimension table.
-  *
-  * Scale notes: the snapshot side of a dimension is typically small
-  * relative to the fact tables — but history can be wide. All joins here
-  * key on the dimension key, so at cluster scale the three diff joins and
-  * the semi-join split share one hash partitioning on `keyCol`; Spark
-  * reuses the exchange. `deletedKeys`/`changedKeys` are distinct key sets
-  * (tiny) and are broadcast automatically under AQE.
+  * Scale notes: `scd2Apply` is one pass keyed on the dimension key. The
+  * history and the snapshot are read once each, tagged and unioned, and
+  * ONE hash exchange on `keyCol` brings each key's versions and snapshot
+  * rows together; the diff is array arithmetic inside the group, with no
+  * join. A key's rows must fit one task's memory — for a dimension that
+  * is the number of versions one key has ever had, which the reference's
+  * multiplicity quirk below can double per changing day.
   */
 object Cdc {
 
@@ -34,72 +31,69 @@ object Cdc {
     * (`create_tables.sql:50`); Spark has no infinity date. */
   val OpenDate: Date = Date.valueOf("9999-12-31")
 
-  final case class Diff(added: DataFrame, deleted: DataFrame, changed: DataFrame)
-
-  /** Diff a full snapshot against the accumulated history.
-    *
-    * Reference quirk replicated exactly: `deleted` anti-joins the snapshot
-    * against ALL history versions, not just open ones
-    * (`incr_loading.py:36-39`), and `changed` inner-joins every history
-    * version too (`incr_loading.py:52-56`) — so a key whose old version
-    * matches any historic row still lands in `changed`.
-    */
-  def snapshotDiff(snapshot: DataFrame, hist: DataFrame, keyCol: String,
-                   attrCols: Seq[String]): Diff = {
-    val histKeyed = hist.select(keyCol, attrCols: _*)
-    val added   = snapshot.join(histKeyed, Seq(keyCol), "left_anti")
-    // One row per history version, as the reference's CTAS has
-    // (`incr_loading.py:36-39`): a key deleted again carries one
-    // tombstone per version it has, identical versions included.
-    val deleted = histKeyed.join(snapshot, Seq(keyCol), "left_anti")
-    val anyAttrDiffers = attrCols
-      .map(a => !(snapshot(a) <=> histKeyed(a)))
-      .reduce(_ || _)
-    // Inner join (not semi): a snapshot row differing from N historic
-    // versions appears N times, exactly like the reference's CTAS
-    // (`incr_loading.py:44-57`) — the multiplicity flows into the
-    // re-insert step and is part of the replicated semantics.
-    val changed = snapshot.alias("s").join(histKeyed,
-        snapshot(keyCol) === histKeyed(keyCol) && anyAttrDiffers, "inner")
-      .select(snapshot(keyCol) +: attrCols.map(a => snapshot(a)): _*)
-    Diff(added, deleted, changed)
-  }
-
   /** Apply one day's snapshot to an SCD2 history (open rows carry
-    * `effective_to = 9999-12-31`). Returns the new history; caller persists.
+    * `effective_to = 9999-12-31`). Returns the new history, in the
+    * history's column order; caller persists. `hist` holds `keyCol`,
+    * `attrCols`, `effective_from`, `effective_to` and `deleted_flg`.
     *
-    * Ordering semantics of the reference are preserved: fresh rows inserted
-    * this very day keep `effective_to = open` because closing only touches
-    * rows that were open BEFORE this application (we close from the input
-    * `hist`, never from rows added here — mirroring how
-    * `incr_loading.py:79-84` runs before the inserts at `:86-101`).
+    * Reference quirks replicated exactly, per key:
+    *  - added: snapshot rows of a key with no history version;
+    *  - deleted: ONE tombstone per history version of a key the snapshot
+    *    lacks, closed versions and tombstones included
+    *    (`incr_loading.py:36-39`), so a tombstoned key is tombstoned again;
+    *  - changed: each snapshot row once per history version (ALL
+    *    versions, `incr_loading.py:44-57`) it differs from under
+    *    null-safe equality (`<=>` ≡ `IS NOT DISTINCT FROM`) — the
+    *    multiplicity flows into the re-insert;
+    *  - a null key never matches: its snapshot rows are added, its
+    *    history versions tombstoned and never closed.
+    *
+    * Closing only touches rows open BEFORE this application (fresh rows
+    * inserted this day stay open), mirroring how `incr_loading.py:79-84`
+    * runs before the inserts at `:86-101`.
     */
   def scd2Apply(hist: DataFrame, snapshot: DataFrame, day: Date,
                 keyCol: String, attrCols: Seq[String]): DataFrame = {
-    val d = snapshotDiff(snapshot, hist, keyCol, attrCols)
-    val closeKeys = d.changed.select(keyCol).distinct()
-      .unionByName(d.deleted.select(keyCol).distinct()).distinct()
+    val Seq(from, to, del) = Seq("effective_from", "effective_to", "deleted_flg")
+    def typed(c: String) = lit(null).cast(hist.schema(c).dataType).as(c)
+    // one tagged row per history version and per snapshot row
+    val rows = hist.select(col(keyCol),
+        struct(lit(true).as("h") +: (attrCols ++ Seq(from, to, del)).map(col): _*)
+          .as("r"))
+      .unionByName(snapshot.select(col(keyCol),
+        struct(lit(false).as("h") +: (attrCols.map(col) ++
+          Seq(typed(from), typed(to), typed(del))): _*).as("r")))
+    val byKey = rows.groupBy(keyCol).agg(collect_list("r").as("rs"))
 
-    val toClose = hist.join(closeKeys, Seq(keyCol), "left_semi")
-      .where(col("effective_to") === lit(OpenDate))
-      .withColumn("effective_to", date_sub(lit(day), 1))
-    // Complement of `toClose` without a second scan-shape: anti-join on the
-    // same (key ∈ closeKeys AND row-is-open) condition.
-    val untouched = hist.join(closeKeys,
-      hist(keyCol) === closeKeys(keyCol) &&
-        hist("effective_to") === lit(OpenDate), "left_anti")
+    val hs = filter(col("rs"), _("h"))
+    val ss = filter(col("rs"), !_("h"))
+    val matched = col(keyCol).isNotNull
+    def differs(s: Column, h: Column): Column =
+      attrCols.map(a => !(s(a) <=> h(a))).reduce(_ || _)
+    def nDiffering(s: Column): Column = size(filter(hs, differs(s, _)))
+    val close = matched &&
+      (size(ss) === 0 || exists(ss, s => exists(hs, differs(s, _))))
 
-    def openRow(df: DataFrame, tombstone: Boolean): DataFrame =
-      df.select(col(keyCol) +: attrCols.map(col): _*)
-        .withColumn("effective_from", lit(day))
-        .withColumn("effective_to", lit(OpenDate))
-        .withColumn("deleted_flg", lit(tombstone))
+    def version(r: Column, f: Column, t: Column, d: Column): Column =
+      struct(attrCols.map(a => r(a).as(a)) ++
+        Seq(f.as(from), t.as(to), d.as(del)): _*)
+    def opened(r: Column, tombstone: Boolean): Column =
+      version(r, lit(day), lit(OpenDate), lit(tombstone))
 
-    untouched
-      .unionByName(toClose)
-      .unionByName(openRow(d.added, tombstone = false))
-      .unionByName(openRow(d.changed, tombstone = false))
-      .unionByName(openRow(d.deleted, tombstone = true))
+    val kept = transform(hs, h => version(h, h(from),
+      when(close && h(to) === lit(OpenDate), date_sub(lit(day), 1))
+        .otherwise(h(to)), h(del)))
+    val added = transform(filter(ss, _ => !matched || size(hs) === 0),
+      opened(_, tombstone = false))
+    val changed = flatten(transform(ss, s => array_repeat(
+      opened(s, tombstone = false), when(matched, nDiffering(s)).otherwise(0))))
+    val deleted = transform(filter(hs, _ => !matched || size(ss) === 0),
+      opened(_, tombstone = true))
+
+    byKey.select(col(keyCol),
+        explode(concat(kept, added, changed, deleted)).as("v"))
+      .select(hist.columns.toSeq.map(c =>
+        if (c == keyCol) col(keyCol) else col("v")(c).as(c)): _*)
   }
 
   /** SCD2 transition with textbook semantics (no reference quirks):

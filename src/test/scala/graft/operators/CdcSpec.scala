@@ -32,7 +32,7 @@ class CdcSpec extends AnyFunSuite {
   private val attrs = Seq("terminal_type", "terminal_city")
 
   test("snapshotDiff splits added/deleted/changed with reference semantics") {
-    val d = Cdc.snapshotDiff(snapshot, hist0, "terminal_id", attrs)
+    val d = CdcJoinTwin.snapshotDiff(snapshot, hist0, "terminal_id", attrs)
     assert(d.added.select("terminal_id").as[String].collect().toSeq == Seq("T4"))
     assert(d.deleted.select("terminal_id").as[String].collect().toSeq == Seq("T2"))
     // T3 differs from 2 historic versions -> appears twice (CTAS join)

@@ -8,16 +8,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** Regression pin for the multi-day SCD2 fold: one `scd2Apply` embeds
-  * its input history plan in ~6 branches (diff joins + the union's
-  * close/insert arms), so an UNMATERIALIZED k-day chain grows the
-  * logical plan ~6^k-fold — found in round 10 when a 3-file streaming
-  * backlog fold exploded into thousands of AQE stages. The fix is a
-  * materialization boundary per step (eager `localCheckpoint`, the
-  * boundary the batch pipeline gets for free from its daily parquet
-  * write). This spec executes a 6-day fold and asserts the plan stays
-  * FLAT — if someone removes the boundary, the node-count assert fires
-  * long before the wall-clock does. */
+/** Regression pin for the multi-day SCD2 fold. The join formulation of
+  * `scd2Apply` (now the test twin [[CdcJoinTwin]]) embedded its input
+  * history plan in ~6 branches (diff joins + the union's close/insert
+  * arms), so an UNMATERIALIZED k-day chain grew the logical plan
+  * ~6^k-fold — found in round 10 when a 3-file streaming backlog fold
+  * exploded into thousands of AQE stages. The fix was a materialization
+  * boundary per step (eager `localCheckpoint`, the boundary the batch
+  * pipeline gets for free from its daily parquet write). The one-pass
+  * `scd2Apply` reads its history once, so an unmaterialized chain now
+  * grows linearly (32 optimized nodes at six days; the checkpointed fold
+  * is one). This spec executes a 6-day fold and asserts the plan stays
+  * under 60 nodes, which a formulation that reads its history more than
+  * once per day would break without the boundary. */
 class Scd2FoldSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -49,9 +52,10 @@ class Scd2FoldSpec extends AnyFunSuite {
       Cdc.scd2Apply(hist, s, d, keyCol = "terminal_id",
         attrCols = Seq("city")).localCheckpoint(true)
     }
-    // flat: one apply layer over a LogicalRDD scan — a few dozen nodes.
-    // Without the boundary the 6-deep chain is ~6^6 scans wide and this
-    // count explodes into the tens of thousands.
+    // flat: the checkpointed fold is a LogicalRDD scan. Without the
+    // boundary the 6-deep chain nests six keyed passes (32 nodes); with
+    // a history read twice per day it would be ~2^6 scans wide, with
+    // the old ~6 reads ~6^6, and this count would explode.
     val nodes = folded.queryExecution.optimizedPlan.collect { case p => p }.size
     assert(nodes < 60, s"fold plan grew to $nodes nodes — did the " +
       "per-step materialization boundary disappear?")

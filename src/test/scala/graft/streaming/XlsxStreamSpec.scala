@@ -40,7 +40,8 @@ class XlsxStreamSpec extends AnyFunSuite {
   /** The batch-path dimension: fold Cdc.scd2Apply over the day-ordered
     * snapshots, exactly what Pipeline.runDay does per day. Each step
     * materializes (localCheckpoint) — the boundary the pipeline's daily
-    * parquet write provides — or the chained plan grows 6^days-fold. */
+    * parquet write provides — or each day's plan nests every earlier
+    * day's keyed pass. */
   private def batchDim(upToDay: Int): DataFrame =
     days.take(upToDay).foldLeft(
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
