@@ -2,8 +2,7 @@ package graft.bank
 
 import java.sql.Date
 
-import graft.operators.BandJoin
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The four fraud-detection rules (`loading_rep_fraud.py:14-135`),
@@ -13,11 +12,12 @@ import org.apache.spark.sql.functions._
   * Spark-first notes:
   *  - the cards→accounts→clients chain (J6) is broadcast: the masters
   *    are tiny dimensions, so the fact scan is never shuffled for them;
-  *  - the self band joins (rules 3/4) keep their equi key (card_num) so
-  *    Catalyst plans a shuffle/sort-merge join with a range residual —
-  *    no cartesian anywhere;
-  *  - `DISTINCT ON` without ORDER BY (rules 3/4) is replicated as
-  *    `dropDuplicates` on the key — deterministic and semantically equal
+  *  - the reference's band self-joins (rules 3/4) are one keyed pass
+  *    over (card, hour bucket) shared by both rules ([[bandRules]]) —
+  *    no join on the card, no cartesian anywhere; the join formulation
+  *    is the test twin `FraudRulesJoinTwin`;
+  *  - `DISTINCT ON` without ORDER BY (rules 3/4) is replicated as one
+  *    aggregate on the key — deterministic and semantically equal
   *    because all other output columns are functionally dependent on it
   *    (SURVEY §7 quirk 2);
   *  - rules 1/2 are deliberately NOT deduplicated across days and rules
@@ -38,7 +38,7 @@ object FraudRules {
         Seq("account"))
       .join(broadcast(seed.clients), col("client") === col("client_id"))
 
-  private def out(df: DataFrame, eventDt: org.apache.spark.sql.Column,
+  private[bank] def out(df: DataFrame, eventDt: Column,
                   eventType: String, reportDt: Date): DataFrame =
     df.select(
       eventDt.as("event_dt"),
@@ -80,94 +80,117 @@ object FraudRules {
     out(joined, col("transaction_date"), "invalid contract", reportDt)
   }
 
-  /** One side of a self band join: every column except the key gets a
-    * `_n` suffix so two (or three) sides coexist without aliases. */
-  private def sided(txns: DataFrame, n: Int): DataFrame =
-    txns.columns.foldLeft(txns)((d, c) =>
-      if (c == "card_num") d else d.withColumnRenamed(c, s"${c}_$n"))
-
-  /** Same-card ordered pairs within Δ: the Δ-bucketed rewrite
-    * (`operators.BandJoin` — the hot-key-safe 100 TB plan, the only one
-    * the daily cycle runs) or, with `bucketed = false`, the naive
-    * equi+residual (the reference's plan — fine at its data shapes,
-    * quadratic on a hot key), kept as the reference the specs compare
-    * against. Identical rows either way (BucketedRulesSpec on the
-    * fixture, TransactionsDaySpec on midnight-crossing chains). */
-  private def bandPairs(a: DataFrame, b: DataFrame, i: Int, j: Int,
-                        deltaUs: Long, bucketed: Boolean): DataFrame =
-    if (bucketed)
-      BandJoin.joinWithin(a, b, "card_num",
-        s"transaction_date_$i", s"transaction_date_$j", deltaUs)
-    else
-      a.join(b, Seq("card_num"))
-        .where(col(s"transaction_date_$i") < col(s"transaction_date_$j") &&
-          unix_micros(col(s"transaction_date_$j")) -
-            unix_micros(col(s"transaction_date_$i")) < deltaUs)
+  private val DiffCities = "ops in diff cities less one hour"
+  private val AmountGuessing = "amount guessing"
 
   /** Rule 3 — operations in different cities within one hour
-    * (`loading_rep_fraud.py:64-92`): same-card pair band join + SCD2
-    * as-of residual on both endpoints + city-differs filter.
-    * Postgres compares timestamp to date at midnight; `effective_to`
-    * (a date) is cast to timestamp for the BETWEEN bound. */
+    * (`loading_rep_fraud.py:64-92`): a SUCCESS whose city differs from
+    * the city of some earlier transaction of the same card less than an
+    * hour before it. A row of [[bandRules]]. */
   def rule3(txns: DataFrame, termHist: DataFrame, seed: Seeds.Seed,
-            repFraud: DataFrame, reportDt: Date,
-            bucketed: Boolean = true): DataFrame = {
-    val pairs = bandPairs(sided(txns, 1), sided(txns, 2), 1, 2,
-      3600L * 1000000L, bucketed)
-    def th(n: Int): DataFrame = termHist.columns.foldLeft(termHist)(
-      (d, c) => d.withColumnRenamed(c, s"${c}_h$n"))
-    val located = pairs
-      .join(th(1), col("terminal_1") === col("terminal_id_h1") &&
-        col("transaction_date_1") >= col("effective_from_h1").cast("timestamp") &&
-        col("transaction_date_1") <= col("effective_to_h1").cast("timestamp"))
-      .join(th(2), col("terminal_2") === col("terminal_id_h2") &&
-        col("transaction_date_2") >= col("effective_from_h2").cast("timestamp") &&
-        col("transaction_date_2") <= col("effective_to_h2").cast("timestamp"))
-      .where(col("terminal_city_h1") =!= col("terminal_city_h2") &&
-        col("oper_result_2") === "SUCCESS")
-    val enriched = located
-      .join(broadcast(seed.cards.select("card_num", "account")), Seq("card_num"))
-      .join(broadcast(seed.accounts.select("account", "client")), Seq("account"))
-      .join(broadcast(seed.clients), col("client") === col("client_id"))
-    val candidates = out(enriched, col("transaction_date_2"),
-      "ops in diff cities less one hour", reportDt)
-      .dropDuplicates("event_dt", "passport")
-    antiJoinExisting(candidates, repFraud, "ops in diff cities less one hour")
-  }
+            repFraud: DataFrame, reportDt: Date): DataFrame =
+    bandRules(txns, termHist, seed, repFraud, reportDt)
+      .where(col("event_type") === DiffCities)
 
   /** Rule 4 — amount guessing (`loading_rep_fraud.py:98-129`):
-    * REJECT → REJECT → SUCCESS with strictly decreasing amounts, all
-    * gaps and the total span under 20 minutes. */
-  def rule4(txns: DataFrame, seed: Seeds.Seed, repFraud: DataFrame,
-            reportDt: Date, bucketed: Boolean = true): DataFrame = {
-    val limit = 1200L * 1000000L
-    def us(n: Int) = unix_micros(col(s"transaction_date_$n"))
-    val chain = bandPairs(
-        bandPairs(sided(txns, 1), sided(txns, 2), 1, 2, limit, bucketed),
-        sided(txns, 3), 2, 3, limit, bucketed)
-      .where(col("oper_result_1") === "REJECT" &&
-        col("oper_result_2") === "REJECT" &&
-        col("oper_result_3") === "SUCCESS" &&
-        col("amount_1") > col("amount_2") &&
-        col("amount_2") > col("amount_3") &&
-        us(3) - us(1) < limit)
-    val enriched = chain
-      .join(broadcast(seed.cards.select("card_num", "account")), Seq("card_num"))
-      .join(broadcast(seed.accounts.select("account", "client")), Seq("account"))
-      .join(broadcast(seed.clients), col("client") === col("client_id"))
-    val candidates = out(enriched, col("transaction_date_3"),
-      "amount guessing", reportDt)
-      .dropDuplicates("event_dt", "passport")
-    antiJoinExisting(candidates, repFraud, "amount guessing")
-  }
+    * REJECT → REJECT → SUCCESS on one card with strictly decreasing
+    * amounts, all gaps and the total span under 20 minutes. A row of
+    * [[bandRules]]; `termHist` feeds rule 3's half of the shared pass,
+    * so both rules plan one frame and the day's write computes it once. */
+  def rule4(txns: DataFrame, termHist: DataFrame, seed: Seeds.Seed,
+            repFraud: DataFrame, reportDt: Date): DataFrame =
+    bandRules(txns, termHist, seed, repFraud, reportDt)
+      .where(col("event_type") === AmountGuessing)
 
-  /** J12: drop candidates already reported with the same passport,
-    * event_dt and event_type (`loading_rep_fraud.py:86-91,123-128`). */
-  private def antiJoinExisting(candidates: DataFrame, repFraud: DataFrame,
-                               eventType: String): DataFrame =
-    candidates.join(
-      repFraud.where(col("event_type") === eventType)
-        .select("passport", "event_dt"),
-      Seq("passport", "event_dt"), "left_anti")
-      .select("event_dt", "passport", "fio", "phone", "event_type", "report_dt")
+  /** Rules 3 and 4 in one keyed pass, both event types in one frame.
+    *
+    *  1. Each transaction takes, by a broadcast left join to the SCD2
+    *     dimension with the reference's as-of residual (`effective_to`,
+    *     a date, compares at midnight), the city of every version open
+    *     at it. A transaction under two overlapping versions (the SCD2
+    *     changed quirk) is two rows; one under none keeps a null city.
+    *  2. Every row lands in its own hour bucket (`home`) and, as a
+    *     ghost, in the next one, and the rows are collected once per
+    *     (card, bucket): a bucket's list holds every row less than an
+    *     hour before any of its home rows.
+    *  3. Each home SUCCESS row r is judged against its list: rule 3 if
+    *     a strict predecessor within Δ = 1 h has a non-null city other
+    *     than r's; rule 4 if two REJECTs p₁ before p₂ lie within
+    *     Δ = 20 min before r with amount(p₁) > amount(p₂) > amount(r).
+    *  4. The hits take the J6 client chain ([[withClients]]; per card,
+    *     so joining after the verdicts changes none), and
+    *     `DISTINCT ON (event_dt, passport)` per rule (SURVEY §7 quirk 2)
+    *     is one aggregate that carries both rule flags; each flag then
+    *     yields its event type, and J12 drops what the mart already
+    *     holds.
+    *
+    * So the day plans one (card, bucket) exchange and one dedup
+    * exchange for both rules; [[rule3]] and [[rule4]] select their
+    * event type above the dedup, where the day's union reuses both. The
+    * keyed collect is the mechanism of the one-pass SCD2 transition
+    * (`operators.Cdc.scd2Apply`); a window formulation (two range
+    * frames over the same partitions) planned the same exchanges but
+    * measured no cheaper than the band joins (SCALING.md).
+    *
+    * Hot keys: a card's history spreads over its hour buckets, so no
+    * card lands whole on one task. The trade is that every row is
+    * shuffled twice (home and ghost), and that one hot (card, hour)
+    * group of m rows is judged by one task in O(m²) comparisons (more
+    * for rule 4's REJECT pairs): the pairs the Δ-bucketed band join
+    * enumerated for the same group. */
+  private def bandRules(txns: DataFrame, termHist: DataFrame,
+                        seed: Seeds.Seed, repFraud: DataFrame,
+                        reportDt: Date): DataFrame = {
+    val hourUs = 3600L * 1000000L
+    val guessUs = 1200L * 1000000L
+    val cities = termHist.select(col("terminal_id"), col("terminal_city"),
+      col("effective_from").cast("timestamp").as("__from"),
+      col("effective_to").cast("timestamp").as("__to"))
+    val home = expr(s"unix_micros(transaction_date) DIV ${hourUs}L")
+    // r's strict predecessors p within Δ
+    def within(p: Column, r: Column, deltaUs: Long) =
+      p("us") < r("us") && p("us") > r("us") - deltaUs
+    val verdicts = transform(
+      filter(col("__rows"), r => r("home") === col("__bucket") &&
+        r("result") === "SUCCESS"),
+      r => struct(r("ts").as("event_dt"),
+        exists(col("__rows"), p => within(p, r, hourUs) &&
+          p("city") =!= r("city")).as("__r3"),
+        exists(col("__rows"), p1 => p1("result") === "REJECT" &&
+          within(p1, r, guessUs) && p1("amount") > r("amount") &&
+          exists(col("__rows"), p2 => p2("result") === "REJECT" &&
+            p2("us") > p1("us") && p2("us") < r("us") &&
+            p1("amount") > p2("amount") && p2("amount") > r("amount")))
+          .as("__r4")))
+    val hits = txns
+      .join(broadcast(cities), col("terminal") === col("terminal_id") &&
+        col("transaction_date") >= col("__from") &&
+        col("transaction_date") <= col("__to"), "left")
+      .where(col("transaction_date").isNotNull)
+      .select(col("card_num"),
+        explode(array(home, home + 1)).as("__bucket"),
+        struct(unix_micros(col("transaction_date")).as("us"),
+          col("transaction_date").as("ts"), home.as("home"),
+          col("oper_result").as("result"), col("amount"),
+          col("terminal_city").as("city")).as("__row"))
+      .groupBy("card_num", "__bucket")
+      .agg(collect_list("__row").as("__rows"))
+      .select(col("card_num"), explode(verdicts).as("__v"))
+      .select(col("card_num"), col("__v.event_dt").as("event_dt"),
+        col("__v.__r3").as("__r3"), col("__v.__r4").as("__r4"))
+      .where(col("__r3") || col("__r4"))
+    withClients(hits, seed)
+      .groupBy(col("event_dt"), col("passport_num").as("passport"))
+      .agg(first(fio).as("fio"), first("phone").as("phone"),
+        bool_or(col("__r3")).as("__r3"), bool_or(col("__r4")).as("__r4"))
+      .select(col("event_dt"), col("passport"), col("fio"), col("phone"),
+        explode(array_compact(array(when(col("__r3"), lit(DiffCities)),
+          when(col("__r4"), lit(AmountGuessing))))).as("event_type"),
+        lit(reportDt).as("report_dt"))
+      .join(repFraud.where(col("event_type").isin(DiffCities, AmountGuessing))
+        .select("passport", "event_dt", "event_type"),
+        Seq("passport", "event_dt", "event_type"), "left_anti")
+      .select("event_dt", "passport", "fio", "phone", "event_type",
+        "report_dt")
+  }
 }

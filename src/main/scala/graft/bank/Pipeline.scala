@@ -177,8 +177,8 @@ object Pipeline {
     * batch day passes `false` (the reference's full rescan), the
     * streaming day `true` (the pruned plan, exact under the streaming
     * day-order check of [[Pipeline.runDayStaged]]).
-    * Rules 3/4 always run the Δ-bucketed band join
-    * ([[graft.operators.BandJoin.joinWithin]]).
+    * Rules 3/4 are one keyed pass over (card, hour bucket)
+    * ([[FraudRules.rule3]]), planned once for both.
     *
     * The rules are computed against the mart WITHOUT `report_dt = day`:
     * an earlier attempt's rows for this day must not feed J12's
@@ -202,28 +202,26 @@ object Pipeline {
     wh.overwritePartitions(FactTransactions, factRows, Seq("txn_date"))
     failpoint("fact_overwrite")
     val (facts, facts12) = ruleFacts(wh, day, incremental)
-    try {
-      val repBefore =
-        wh.readOr(RepFraud).where(col("report_dt") =!= lit(day))
-      val (mart, ruleCounts) = RowCount.observe(Seq(
-        "REP_FRAUD_passport" ->
-          FraudRules.rule1(facts12, wh.readOr(FactBlacklist), seed, day),
-        "REP_FRAUD_contract" -> FraudRules.rule2(facts12, seed, day),
-        "REP_FRAUD_diff_cities" -> FraudRules.rule3(facts,
-          wh.readOr(DimTerminals), seed, repBefore, day),
-        "REP_FRAUD_attempt_amount" ->
-          FraudRules.rule4(facts, seed, repBefore, day)))(
-        _.reduce(_ unionByName _))
-      wh.overwritePartitions(RepFraud, mart, Seq("report_dt"))
-      failpoint("mart_overwrite")
-      wh.logMeta((Meta("stg_transactions", day, nTxns.get()) +: extraMeta) ++
-        ruleCounts.map(n => Meta(n.label, day, n.get())))
-    } finally facts.unpersist()
+    val repBefore =
+      wh.readOr(RepFraud).where(col("report_dt") =!= lit(day))
+    val terms = wh.readOr(DimTerminals)
+    val (mart, ruleCounts) = RowCount.observe(Seq(
+      "REP_FRAUD_passport" ->
+        FraudRules.rule1(facts12, wh.readOr(FactBlacklist), seed, day),
+      "REP_FRAUD_contract" -> FraudRules.rule2(facts12, seed, day),
+      "REP_FRAUD_diff_cities" ->
+        FraudRules.rule3(facts, terms, seed, repBefore, day),
+      "REP_FRAUD_attempt_amount" ->
+        FraudRules.rule4(facts, terms, seed, repBefore, day)))(
+      _.reduce(_ unionByName _))
+    wh.overwritePartitions(RepFraud, mart, Seq("report_dt"))
+    failpoint("mart_overwrite")
+    wh.logMeta((Meta("stg_transactions", day, nTxns.get()) +: extraMeta) ++
+      ruleCounts.map(n => Meta(n.label, day, n.get())))
   }
 
   /** The fact-table frames the four fraud rules read in
-    * [[transactionsDay]]: (cached rules-3/4 input, rules-1/2 input); the
-    * caller unpersists the first.
+    * [[transactionsDay]]: (rules-3/4 input, rules-1/2 input).
     *
     *  - `incremental = false` (batch): the whole accumulated fact for all
     *    four rules, as the reference reads it. Rules 1/2 re-report
@@ -238,17 +236,19 @@ object Pipeline {
     *    equal the full rescan's, at two partitions per day however
     *    long the history.
     *
-    * The window filter sits BELOW the cache, so the parquet scan itself
-    * prunes to the two partitions. */
+    * The window filter prunes the parquet scan itself to the two
+    * partitions. Nothing is cached: the rules-3/4 pass is one subtree
+    * that the day's write computes once for both rules, and adaptive
+    * execution reuses an exchange only above a plain scan, not above an
+    * in-memory cache (whose query stages never compare equal). */
   private[graft] def ruleFacts(wh: Warehouse, day: Date,
       incremental: Boolean): (DataFrame, DataFrame) =
     if (incremental) {
       val facts = wh.read(FactTransactions)
         .where(col("txn_date").between(date_sub(lit(day), 1), lit(day)))
-        .cache()
       (facts, facts.where(col("txn_date") === lit(day)))
     } else {
-      val facts = wh.read(FactTransactions).cache()
+      val facts = wh.read(FactTransactions)
       (facts, facts)
     }
 

@@ -97,38 +97,4 @@ object BandJoin {
         col("__us_2") - col("__us_1") < deltaUs)
       .drop(joinKeys.filterNot(_ == key): _*).drop("__us_1", "__us_2")
   }
-
-  /** General two-table band join: rows l ∈ left, r ∈ right with equal
-    * `key` and l.lts < r.rts < l.lts + Δ. Same Δ-bucket rewrite as
-    * [[pairsWithin]] (left probes its own bucket and the next one);
-    * column names must already be disjoint apart from `key`. */
-  def joinWithin(left: DataFrame, right: DataFrame, key: String,
-                 ltsCol: String, rtsCol: String, deltaUs: Long): DataFrame = {
-    val l = left
-      .withColumn("__lus", unix_micros(col(ltsCol)))
-      .withColumn("__bucket", explode(array(
-        expr(s"__lus DIV ${deltaUs}L"), expr(s"__lus DIV ${deltaUs}L + 1L"))))
-    val r = right
-      .withColumn("__rus", unix_micros(col(rtsCol)))
-      .withColumn("__bucket", expr(s"__rus DIV ${deltaUs}L"))
-    l.join(r, Seq(key, "__bucket"))
-      .where(col("__lus") < col("__rus") &&
-        col("__rus") - col("__lus") < deltaUs)
-      .drop("__bucket", "__lus", "__rus")
-  }
-
-  /** Naive formulation (equi key + residual) — the semantic reference
-    * for tests and the fallback when Δ is huge relative to data span. */
-  def pairsWithinNaive(df: DataFrame, key: String, tsCol: String,
-                       deltaUs: Long, payload: Seq[String]): DataFrame = {
-    val cols = (Seq(key, tsCol) ++ payload).distinct
-    val base = df.select(cols.map(col): _*)
-    def side(n: Int): DataFrame = cols.filterNot(_ == key)
-      .foldLeft(base)((d, c) => d.withColumnRenamed(c, s"${c}_$n"))
-    val l = side(1)
-    val r = side(2)
-    l.join(r, Seq(key))
-      .where(unix_micros(col(s"${tsCol}_1")) < unix_micros(col(s"${tsCol}_2")) &&
-        unix_micros(col(s"${tsCol}_2")) - unix_micros(col(s"${tsCol}_1")) < deltaUs)
-  }
 }

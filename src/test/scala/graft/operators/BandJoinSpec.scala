@@ -13,7 +13,7 @@ class BandJoinSpec extends AnyFunSuite {
       .select("event_id_1", "event_id_2").as[(Long, Long)].collect().toSet
     val bucketed = pairs(BandJoin.pairsWithin(
       e, "user_id", "ts", 3600L * 1000000L, Seq("event_id")))
-    val naive = pairs(BandJoin.pairsWithinNaive(
+    val naive = pairs(BandJoinTwin.pairsWithinNaive(
       e, "user_id", "ts", 3600L * 1000000L, Seq("event_id")))
     assert(bucketed.nonEmpty)
     assert(bucketed == naive)

@@ -17,10 +17,10 @@ import graft.SparkTestSession
   * boundary per step (eager `localCheckpoint`, the boundary the batch
   * pipeline gets for free from its daily parquet write). The one-pass
   * `scd2Apply` reads its history once, so an unmaterialized chain now
-  * grows linearly (32 optimized nodes at six days; the checkpointed fold
-  * is one). This spec executes a 6-day fold and asserts the plan stays
-  * under 60 nodes, which a formulation that reads its history more than
-  * once per day would break without the boundary. */
+  * grows linearly (7 optimized nodes for one day, 5 more per day, 32 at
+  * six; the checkpointed fold is one). This spec executes a 6-day fold
+  * and asserts its plan is smaller than ONE unmaterialized step, which
+  * fails as soon as any step's boundary is gone. */
 class Scd2FoldSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -52,12 +52,11 @@ class Scd2FoldSpec extends AnyFunSuite {
       Cdc.scd2Apply(hist, s, d, keyCol = "terminal_id",
         attrCols = Seq("city")).localCheckpoint(true)
     }
-    // flat: the checkpointed fold is a LogicalRDD scan. Without the
-    // boundary the 6-deep chain nests six keyed passes (32 nodes); with
-    // a history read twice per day it would be ~2^6 scans wide, with
-    // the old ~6 reads ~6^6, and this count would explode.
+    // flat: the checkpointed fold is a LogicalRDD scan (1 node). Without
+    // the boundary the 6-deep chain nests six keyed passes (32 nodes),
+    // and even the last step alone plans 7.
     val nodes = folded.queryExecution.optimizedPlan.collect { case p => p }.size
-    assert(nodes < 60, s"fold plan grew to $nodes nodes — did the " +
+    assert(nodes < 7, s"fold plan grew to $nodes nodes — did the " +
       "per-step materialization boundary disappear?")
 
     // and the folded history carries the reference's exact quirk

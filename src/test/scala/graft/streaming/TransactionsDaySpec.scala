@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import graft.SparkTestSession
-import graft.bank.{BankDays, FraudRules, Pipeline, Warehouse}
+import graft.bank.{BankDays, FraudRules, FraudRulesJoinTwin, Pipeline, Warehouse}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -165,15 +165,16 @@ class TransactionsDaySpec extends AnyFunSuite {
         val facts = wh.read(Pipeline.FactTransactions)
         val noMart = wh.read(Pipeline.RepFraud).where(lit(false))
         val terms = wh.read(Pipeline.DimTerminals)
-        def r3(bucketed: Boolean) = rowSet(FraudRules.rule3(facts, terms,
-          seed, noMart, day, bucketed))
-        def r4(bucketed: Boolean) = rowSet(FraudRules.rule4(facts, seed,
-          noMart, day, bucketed))
+        val r3 = rowSet(FraudRules.rule3(facts, terms, seed, noMart, day))
+        val r4 = rowSet(FraudRules.rule4(facts, terms, seed, noMart, day))
         // every chain of the run, none dropped by J12
-        assert(r3(true).size == (if (wh eq batch) 1 else 2), day)
-        assert(r4(true).size == 1, day)
-        assert(r3(true) == r3(false), day)
-        assert(r4(true) == r4(false), day)
+        assert(r3.size == (if (wh eq batch) 1 else 2), day)
+        assert(r4.size == 1, day)
+        // production against the band-join twin's naive plan
+        assert(r3 == rowSet(FraudRulesJoinTwin.rule3(facts, terms, seed,
+          noMart, day)), day)
+        assert(r4 == rowSet(FraudRulesJoinTwin.rule4(facts, seed, noMart,
+          day)), day)
       }
   }
 }
