@@ -1,11 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * A warmup action runs first so JVM/classloader/codegen startup isn't
-  * charged to whichever query happens to run first. */
+  * charged to whichever query happens to run first. The output depends
+  * only on the code, the data and the box: no earlier record is read. */
 object Bench {
 
   /** Per-query measurement: best-run seconds plus the task metrics of
@@ -14,10 +22,52 @@ object Bench {
     * whose wall seconds dwarf its CPU seconds was waiting, not
     * computing. `load` is the 1-min system load average sampled when
     * the winning run STARTED — the per-query noise annotation
-    * (VERDICT r14 #7). */
+    * (VERDICT r14 #7). `plan`, `jobs`, `stages` and `rows` are the
+    * run's work signature, read off its executed noop write: a time
+    * change under an unchanged signature is box noise, a changed `plan`
+    * or `rows` is a changed query (`tools/bench_diff.py` classes two
+    * records this way). */
   final case class M(sec: Double, sr: Long, sw: Long, sp: Long,
                      in: Long, fs: Long, cpuNs: Long, gcMs: Long,
-                     load: Double)
+                     load: Double, plan: String, jobs: Int, stages: Int,
+                     rows: Long)
+
+  /** Plan text that differs between two runs of one plan on one box or
+    * across boxes: expression, subquery, plan and lambda-variable IDs,
+    * object identity hashes, lambda class numbers, query-stage and
+    * codegen-stage numbers (AQE numbers them in stage-completion order),
+    * shuffle partition counts and file locations. */
+  private val planNoise = Seq(
+    "#\\d+" -> "#",
+    "(lambda [A-Za-z]+)_\\d+" -> "$1",
+    "plan_id=\\d+" -> "plan_id=",
+    "@[0-9a-f]+" -> "@",
+    "0x[0-9a-f]+" -> "0x",
+    "Lambda\\$\\d+" -> "Lambda",
+    "QueryStage \\d+" -> "QueryStage",
+    "\\*\\(\\d+\\)" -> "*",
+    "(partitioning\\((?:[^()]|\\((?:[^()]|\\([^()]*\\))*\\))*?), \\d+\\)" -> "$1)",
+    "RoundRobinPartitioning\\(\\d+\\)" -> "RoundRobinPartitioning",
+    "\\(\\d+ paths\\)" -> "",
+    "file:[^,\\]\\s]*" -> "file:"
+  ).map { case (rx, to) => rx.r -> to }
+
+  /** The work-signature hash of a plan's text, with [[planNoise]]
+    * stripped: equal for the same plan on any box, session or shuffle
+    * partition count, different when an operator changes. */
+  private[graft] def planHash(plan: String): String = {
+    val norm = planNoise.foldLeft(plan) { case (s, (rx, to)) =>
+      rx.replaceAllIn(s, to) }
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(norm.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+  }
+
+  /** The plan a query ran: adaptive execution's final plan (its query
+    * stages print the plans they wrapped), not the initial one. */
+  private[graft] def finalPlan(p: SparkPlan): String = p match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan.treeString
+    case other => other.treeString
+  }
 
   /** The per-query NOISY predicate, pure so BenchHistorySpec can pin
     * it (VERDICT r14 #7: three rounds of headline numbers carried
@@ -33,207 +83,13 @@ object Bench {
                                  threshold: Double): Boolean =
     sec >= 1.0 && load > threshold
 
-  /** Committed per-query history from the last `n` rounds' records:
-    * short query key → seconds per round. Two record shapes merge per
-    * round:
-    *
-    *  - `BENCH_r<N>.json` (driver): `parsed.queries` carries the
-    *    top-110 slowest individually — the fast tail rides in "rest";
-    *  - `bench_detail_r<N>*.json` (the committed full detail): EVERY
-    *    query with ns precision — so the proportional stall gate sees
-    *    the whole catalog, not just the headline bucket (a spike in a
-    *    rest-bucketed query was previously invisible to it).
-    *
-    * `sfShort` filters rounds to the CURRENT scale factor (basename
-    * compare, e.g. "sf0.1"): a run at a different SF must not be gated
-    * against another scale's medians — larger-SF runs would re-measure
-    * everything, smaller-SF stalls would hide. Records predating the sf
-    * field (rounds ≤ 4) were all driver sf0.1 runs and are treated as
-    * such. No matching rounds ⇒ empty history ⇒ byte gate only. Parse
-    * failures degrade the same way. */
-  private[graft] def loadHistory(dir: String = ".", n: Int = 3,
-      sfShort: Option[String] = None): Map[String, Vector[Double]] = {
-    import scala.jdk.CollectionConverters._
-    import com.fasterxml.jackson.databind.JsonNode
-    def base(s: String) =
-      s.split('/').filter(_.nonEmpty).lastOption.getOrElse(s)
-    def sfOk(node: JsonNode): Boolean = sfShort.forall { want =>
-      val v = node.path("sf")
-      if (v.isTextual) base(v.asText) == want else want == "sf0.1"
-    }
-    try {
-      val rxDriver = "^BENCH_r(\\d+)\\.json$".r
-      val rxDetail = "^bench_detail_r(\\d+)".r
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      def parse(p: java.nio.file.Path, detail: Boolean)
-          : Option[Map[String, Double]] =
-        try {
-          val root = om.readTree(java.nio.file.Files.readString(p))
-          val rec = if (detail) root else root.path("parsed")
-          if (!sfOk(rec)) None
-          else {
-            val qs = rec.path("queries")
-            if (!qs.isObject) None
-            // negative values are the bench's error sentinels (-1.0 for
-            // a failed query) — a failed round must not poison the
-            // median a recovered query is gated against
-            else Some(qs.fields().asScala.flatMap { e =>
-              val sec =
-                if (detail) {
-                  val s = e.getValue.path("sec")
-                  if (s.isNumber) Some(s.asDouble) else None
-                } else if (e.getValue.isNumber) Some(e.getValue.asDouble)
-                else None
-              sec.filter(v => v >= 0 && e.getKey != "rest")
-                .map(v => e.getKey.takeWhile(_ != '_') -> v)
-            }.toMap)
-          }
-        } catch { case _: Throwable => None }
-      val listed = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-        .iterator().asScala.toVector
-      def byRound(rx: scala.util.matching.Regex): Map[Int, java.nio.file.Path] =
-        listed.flatMap { p =>
-          rx.findFirstMatchIn(p.getFileName.toString)
-            .map(m => m.group(1).toInt -> p)
-        }.groupBy(_._1).map { case (r, ps) =>
-          // deterministic winner when several files match one round
-          // (ADVICE r13 — Files.list order is filesystem-dependent):
-          // shortest filename first, so the canonical
-          // bench_detail_r<N>.json beats suffixed variants like
-          // bench_detail_r<N>_builder.json; ties break lexicographically
-          r -> ps.map(_._2).minBy { p =>
-            val nm = p.getFileName.toString; (nm.length, nm)
-          }
-        }
-      val drivers = byRound(rxDriver)
-      val details = byRound(rxDetail)
-      val perRound = (drivers.keySet ++ details.keySet).toVector.sorted
-        .map { r =>
-          // the detail record covers every query; driver entries fill in
-          // only when no detail exists for that round
-          val d = drivers.get(r).flatMap(parse(_, detail = false))
-          val t = details.get(r).flatMap(parse(_, detail = true))
-          (d, t) match {
-            case (Some(a), Some(b)) => Some(a ++ b)
-            case (a, b) => b.orElse(a)
-          }
-        }
-        .collect { case Some(m) if m.nonEmpty => m }
-        .takeRight(n)
-      perRound.flatten.groupMap(_._1)(_._2)
-        .view.mapValues(_.toVector).toMap
-    } catch { case _: Throwable => Map.empty }
-  }
-
-  /** Short keys the PREVIOUS round's driver record printed per-query
-    * detail for (its `parsed.queries` minus "rest"), filtered to
-    * entries ≥ `minSec`. VERDICT r15 #3a: 24 queries fell out of the
-    * detail set between rounds (seven of them that round's largest
-    * wins — they got FAST, dropped below the slowest-110 cutoff, and
-    * vanished from the PERF join, which then lost the winners and kept
-    * the noisy losers). Including the previous round's detailed keys
-    * for one extra round keeps every round-over-round join anchored;
-    * the `minSec` floor (≥ the empirical ~0.9 s detail cutoff region)
-    * stops the carried set from growing transitively — a query that
-    * stays fast drops out after the one round in which its improvement
-    * is visible. Same sf gating as [[loadHistory]]. */
-  private[graft] def prevDetailKeys(dir: String = ".", minSec: Double = 0.8,
-      sfShort: Option[String] = None): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    try {
-      val rx = "^BENCH_r(\\d+)\\.json$".r
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      def base(s: String) =
-        s.split('/').filter(_.nonEmpty).lastOption.getOrElse(s)
-      val candidates = java.nio.file.Files
-        .list(java.nio.file.Paths.get(dir)).iterator().asScala
-        .flatMap { p =>
-          rx.findFirstMatchIn(p.getFileName.toString)
-            .map(m => m.group(1).toInt -> p)
-        }.toVector.sortBy(-_._1)
-      candidates.view.map { case (_, p) =>
-        try {
-          val rec = om.readTree(java.nio.file.Files.readString(p))
-            .path("parsed")
-          val sfOk = sfShort.forall { want =>
-            val v = rec.path("sf")
-            if (v.isTextual) base(v.asText) == want else want == "sf0.1"
-          }
-          val qs = rec.path("queries")
-          if (!sfOk || !qs.isObject) Set.empty[String]
-          else qs.fields().asScala.collect {
-            case e if e.getKey != "rest" && e.getValue.isNumber &&
-              e.getValue.asDouble >= minSec => e.getKey
-          }.toSet
-        } catch { case _: Throwable => Set.empty[String] }
-      }.find(_.nonEmpty).getOrElse(Set.empty)
-    } catch { case _: Throwable => Set.empty }
-  }
-
-  private[graft] def median(xs: Vector[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2)
-    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-  }
-
-  /** The stall-arbitration predicate, pure so BenchHistorySpec can pin
-    * it. A measurement is stall-shaped — re-measure once at the end of
-    * the run, keep the min — when EITHER gate fires:
-    *  - BYTE gate: seconds-long wall over trivial measured work
-    *    (< 8 MB shuffle, < 64 MB file reads, zero spill) — a stalled
-    *    light query;
-    *  - PROPORTIONAL gate: wall above 3× the query's own committed
-    *    three-round median, regardless of byte shape — the r10 q115
-    *    case (41 s over 32 MB of shuffle vs a 3.5 s history) that the
-    *    absolute byte gate structurally cannot see.
-    * Genuinely-regressed queries re-measure once (harmless, min-kept)
-    * and still land slow, so real slowdowns stay visible. */
-  private[graft] def stallShaped(sec: Double, shuffleRead: Long,
-                                 fsRead: Long, spilled: Long,
-                                 histMedian: Option[Double]): Boolean = {
-    val byteShaped = sec > 4.0 && shuffleRead < (8L << 20) &&
-      fsRead < (64L << 20) && spilled == 0
-    val propShaped = histMedian.exists(h => sec > math.max(4.0, 3.0 * h))
-    byteShaped || propShaped
-  }
-
   private def loadAvg: Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
-  /** Fraction of machine CPU burned by processes OTHER than this JVM
-    * over a short sampling window — the contention signal the 1-min
-    * loadavg cannot give (VERDICT r15 #3b: loadavg trails the bench's
-    * OWN just-finished 32-core query for tens of seconds, so
-    * waiting on it wastes the budget on self-load; this probe charges
-    * the bench's own jiffies to "self" and reacts only to genuine
-    * external load). Reads /proc/stat (whole machine) and
-    * /proc/self/stat (this JVM) twice; returns 0 when /proc is
-    * unavailable so non-Linux dev boxes skip the wait. */
-  private def externalBusyFrac(windowMs: Int = 100): Double = {
-    def stat(): Option[(Long, Long)] =
-      try {
-        val cpu = java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get("/proc/stat")).get(0)
-          .trim.split("\\s+").drop(1).map(_.toLong)
-        val busy = cpu.sum - cpu(3) - (if (cpu.length > 4) cpu(4) else 0L)
-        val self = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("/proc/self/stat"))
-        val rest = self.substring(self.lastIndexOf(')') + 2).split(" ")
-        Some((busy, rest(11).toLong + rest(12).toLong)) // utime + stime
-      } catch { case _: Throwable => None }
-    (for { a <- stat(); _ = Thread.sleep(windowMs); b <- stat() } yield {
-      val ext = math.max(0L, (b._1 - a._1) - (b._2 - a._2))
-      val capacity = Runtime.getRuntime.availableProcessors() *
-        windowMs / 10.0 // jiffies at USER_HZ=100
-      if (capacity <= 0) 0.0 else ext / capacity
-    }).getOrElse(0.0)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = SparkEntry.cpus
     // Quiet-run discipline: a contended machine produces a record that
     // overstates the engine (round 10: +111 s of pure interference).
     // Wait — boundedly — for the load average to drop below a threshold
@@ -257,6 +113,9 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // scan metadata (filters, schema) untruncated in the plan text: the
+      // cut point moves with the expression-ID digits the plan hash strips
+      .config("spark.sql.maxMetadataStringLength", Int.MaxValue.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -288,12 +147,19 @@ object Bench {
     // scale story ("minimize shuffles") with measured bytes, not plan
     // reading. Listener delivery is async; the short post-query sleep
     // bounds attribution error to far below the numbers' use.
-    val mSr = new java.util.concurrent.atomic.AtomicLong
-    val mSw = new java.util.concurrent.atomic.AtomicLong
-    val mSp = new java.util.concurrent.atomic.AtomicLong
-    val mIn = new java.util.concurrent.atomic.AtomicLong
-    val mCpu = new java.util.concurrent.atomic.AtomicLong // executor CPU, ns
-    val mGc = new java.util.concurrent.atomic.AtomicLong  // JVM GC, ms
+    val mSr = new AtomicLong
+    val mSw = new AtomicLong
+    val mSp = new AtomicLong
+    val mIn = new AtomicLong
+    val mCpu = new AtomicLong // executor CPU, ns
+    val mGc = new AtomicLong  // JVM GC, ms
+    // Work signature of the run's noop write: the jobs and stages of the
+    // last root SQL execution (the write, which follows every eager
+    // action of the query's construction), and the write's executed plan.
+    val sigRoot = new AtomicLong(-1L)
+    val sigJobs = new AtomicInteger
+    val sigStages = new AtomicInteger
+    val sigWrite = new AtomicReference[V2TableWriteExec]
     // TaskMetrics' input_read counts CACHED-block reads too (a resident
     // localCheckpoint scanned 3× shows as 3× its in-memory size), so it
     // cannot distinguish "re-scans the source file per iteration" (the
@@ -307,8 +173,8 @@ object Bench {
     }
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        import org.apache.spark.scheduler._
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
           val m = t.taskMetrics
           if (m != null) {
             mSr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
@@ -319,7 +185,27 @@ object Bench {
             mGc.addAndGet(m.jvmGCTime)
           }
         }
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart
+              if s.rootExecutionId.forall(_ == s.executionId) =>
+            sigJobs.set(0); sigStages.set(0); sigRoot.set(s.executionId)
+          case _ =>
+        }
+        private def inRoot(p: java.util.Properties) = p != null &&
+          p.getProperty("spark.sql.execution.root.id") == sigRoot.get.toString
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (inRoot(j.properties)) sigJobs.incrementAndGet()
+        override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+          if (inRoot(s.properties)) sigStages.incrementAndGet()
       })
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.executedPlan match {
+          case w: V2TableWriteExec => sigWrite.set(w)
+          case _ =>
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     def snap() = (mSr.get, mSw.get, mSp.get, mIn.get, fsBytes,
       mCpu.get, mGc.get)
 
@@ -332,8 +218,9 @@ object Bench {
     // (round 5 recorded a 10.3 s singleton on a 1.5 MB-shuffle query).
     // The MIN over runs is the noise-robust estimator for a deterministic
     // plan — variance is all additive interference. The reported
-    // task-metric deltas come from the fastest run, so bytes and seconds
-    // describe the same execution. Failed queries are not re-run.
+    // task-metric deltas and work signature come from the fastest run,
+    // so bytes, plan and seconds describe the same execution. Failed
+    // queries are not re-run.
     val reps = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
     // Local-iteration filter: comma-separated query-name prefixes. Unset
@@ -341,12 +228,12 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def measureBest(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        n: Int): M = {
-      val runs = Iterator.range(0, n).takeWhile(_ =>
+        fn: (SparkSession, String) => DataFrame): M = {
+      val runs = Iterator.range(0, reps).takeWhile(_ =>
         !errors.contains(name)).map { _ =>
         val repLoad = loadAvg // the run's own noise context (r14 #7)
         val before = snap()
+        sigWrite.set(null)
         val t0 = System.nanoTime()
         // noop sink: materializes EVERY output column (a count() would
         // let Catalyst prune computed columns and under-measure the
@@ -360,7 +247,16 @@ object Bench {
         val elapsed = if (errors.contains(name)) -1.0
                       else (System.nanoTime() - t0) / 1e9
         Thread.sleep(150) // drain in-flight task-end events
+        // the write's success event is the run's last: once it is in,
+        // so are its jobs and stages
+        var drain = 0
+        while (sigWrite.get == null && !errors.contains(name) && drain < 100) {
+          Thread.sleep(20); drain += 1
+        }
         val after = snap()
+        val w = Option(sigWrite.get)
+        val plan = w.fold("")(w => planHash(finalPlan(w.query)))
+        val rows = w.flatMap(_.commitProgress).fold(-1L)(_.numOutputRows)
         // Release the caches operators populate (packed blocks, LSH
         // indexes, IVF cells, …) — untimed, so each run is charged its
         // OWN cache build, storage doesn't accumulate across the bench,
@@ -376,102 +272,16 @@ object Bench {
           .foreach(_.unpersist(blocking = false))
         M(elapsed, after._1 - before._1, after._2 - before._2,
           after._3 - before._3, after._4 - before._4, after._5 - before._5,
-          after._6 - before._6, after._7 - before._7, repLoad)
+          after._6 - before._6, after._7 - before._7, repLoad,
+          plan, sigJobs.get, sigStages.get, rows)
       }.toVector
-      if (errors.contains(name)) M(-1.0, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0.0)
+      if (errors.contains(name))
+        M(-1.0, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0.0, "", 0, 0, -1L)
       else runs.minBy(_.sec)
     }
-    // (history is loaded BEFORE the measuring pass: the per-query
-    // quiet wait below gates on each query's own committed median)
-    val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    val history = loadHistory(sfShort = Some(sfShort))
-    // Per-query wait-for-quiet (VERDICT r15 #3b): before measuring a
-    // query whose committed median is ≥ 1 s (or that has no history),
-    // probe for EXTERNAL cpu pressure and pause — bounded by a global
-    // budget — until it clears. Only the externalBusyFrac probe is
-    // consulted (the 1-min loadavg still trails the bench's own
-    // previous query; see the probe's doc), so on a machine the bench
-    // has to itself this never waits. The noisy ANNOTATION on the
-    // record keeps using loadavg unchanged.
-    var quietBudget = sys.env.getOrElse("SPARK_GRAFT_QUERY_QUIET", "60").toInt
-    def waitQuiet(name: String): Unit = {
-      val heavy = history.get(name.takeWhile(_ != '_'))
-        .map(median).forall(_ >= 1.0)
-      if (!heavy) return
-      var ext = externalBusyFrac()
-      while (ext > 0.25 && quietBudget > 0) {
-        System.err.println(f"[bench] $name: external cpu ${ext * 100}%.0f%% " +
-          f"of the machine, pausing 5 s (quiet budget $quietBudget s)")
-        Thread.sleep(5000); quietBudget -= 5
-        ext = externalBusyFrac()
-      }
-    }
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      .map { case (name, fn) =>
-        waitQuiet(name); name -> measureBest(name, fn, reps) }
-    // Deferred spike arbitration: best-of-2 back-to-back reps cannot
-    // outlive a SUSTAINED external stall (driver round 8 measured
-    // q105_exact_corr — a 3-column groupBy with 552 B of shuffle — at
-    // 18.8 s on BOTH reps, and 0.94 s under the identical harness once
-    // the machine was quiet; a different query spikes each driver run).
-    // A query whose best time is seconds long while its MEASURED work
-    // is tiny (KBs of shuffle, MBs of file reads, zero spill) is
-    // stalled, not slow — re-measure it once at the END of the run,
-    // after the interference window has passed, and keep the faster
-    // execution. Genuinely heavy queries never qualify: their byte
-    // counters are commensurate with their seconds.
-    //
-    // The input gate is FS bytes (actual file reads), not TaskMetrics
-    // input_read: input_read counts resident cached/localCheckpoint
-    // blocks too, so an iterative op scanning an in-memory graph 20×
-    // (q268: 636 MB input_read, ~20 MB of files) looked "heavy" to the
-    // old gate and its environmental spikes escaped re-measurement.
-    // Cost of the wider gate: a handful of genuinely CPU-bound queries
-    // with no I/O footprint (the fused bootstrap q196) re-run once at
-    // the end (~10-20 s per full bench); min-keeping makes that
-    // harmless, and byte counters alone cannot distinguish pure-CPU
-    // work from a stall.
-    //
-    // SECOND gate — PROPORTIONAL, from committed history: the byte gate
-    // is absolute, so a moderate-shuffle iterative query stalled by
-    // machine load escapes it (round 10: q115 at 41 s over 32 MB of
-    // shuffle vs a 3.5 s three-round history — 12× its own record on
-    // unchanged code). A query whose best time exceeds 3× the MEDIAN of
-    // its last three committed driver records (BENCH_r*.json, loaded at
-    // startup) is disproportionate regardless of its byte shape —
-    // re-measure it once at the end and keep the faster execution. A
-    // genuine regression re-measures once (harmless, min-kept) and
-    // still lands slow, so real slowdowns stay visible; only transient
-    // interference is filtered. New queries have no history and fall
-    // back to the byte gate alone.
-    val results = firstPass.map { case (name, m) =>
-      val histMed = history.get(name.takeWhile(_ != '_'))
-        .filter(_.size >= 2).map(median)
-      val shaped = !errors.contains(name) &&
-        stallShaped(m.sec, m.sr, m.fs, m.sp, histMed)
-      if (!shaped) name -> m
-      else {
-        waitQuiet(name)
-        val again = measureBest(name, SparkEntry.queries(name), 1)
-        val why = histMed match {
-          case Some(h) if m.sec > math.max(4.0, 3.0 * h) =>
-            f"${m.sec}%.2f s vs 3-round median $h%.2f s"
-          case _ => "small-byte stall shape"
-        }
-        if (again.sec >= 0 && again.sec < m.sec) {
-          System.err.println(f"[bench] $name re-measured: ${m.sec}%.2f s " +
-            f"(cpu ${m.cpuNs / 1e9}%.2f s, gc ${m.gcMs / 1e3}%.2f s) -> " +
-            f"${again.sec}%.2f s (cpu ${again.cpuNs / 1e9}%.2f s); $why")
-          name -> again
-        } else {
-          if (histMed.isDefined) System.err.println(
-            f"[bench] $name confirmed slow on re-measure: ${m.sec}%.2f s, " +
-              f"cpu ${m.cpuNs / 1e9}%.2f s, gc ${m.gcMs / 1e3}%.2f s; $why")
-          name -> m
-        }
-      }
-    }
+      .map { case (name, fn) => name -> measureBest(name, fn) }
     def jstr(s: String) = "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
@@ -513,26 +323,15 @@ object Bench {
         ",\"cpu_sec\":" + f"${m.cpuNs / 1e9}%.3f" +
         ",\"gc_sec\":" + f"${m.gcMs / 1e3}%.3f" +
         ",\"load\":" + f"${m.load}%.2f" +
-        ",\"noisy\":" + noisyShaped(m.sec, m.load, noisyLoad) + "}"
+        ",\"noisy\":" + noisyShaped(m.sec, m.load, noisyLoad) +
+        ",\"plan\":\"" + m.plan + "\",\"jobs\":" + m.jobs +
+        ",\"stages\":" + m.stages + ",\"rows\":" + m.rows + "}"
     }.mkString("{", ",", "}")
     val runMeta = f""""load_before":$loadBefore%.2f,"load_after":$loadAfter%.2f,"wall_sec":$wallSec%.1f,"reps":$reps"""
     val full = s"""{"metric":"total","value":$total,"unit":"sec",$runMeta,"queries":$fullQs,"errors":$errJson,"sf":"$sfDir"}"""
-    try {
-      val p = java.nio.file.Paths.get("bench_detail.json")
-      java.nio.file.Files.write(p, full.getBytes("UTF-8"))
-      // Per-round committed copy (VERDICT r12 #6): the 3×-median
-      // arbitration gate reads bench_detail_r<N>*.json history, so each
-      // round must leave its own full-coverage detail or the gate's
-      // window stops sliding. SPARK_GRAFT_ROUND is set by the builder's
-      // bench invocation; driver runs (env unset) keep writing only
-      // bench_detail.json, which the builder commits under the round
-      // name.
-      sys.env.get("SPARK_GRAFT_ROUND").filter(_.matches("\\d+")).foreach {
-        r => java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"bench_detail_r$r.json"),
-          full.getBytes("UTF-8"))
-      }
-    } catch { case _: Throwable => () }
+    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
+      full.getBytes("UTF-8"))
+    catch { case _: Throwable => () }
     // Per-query keys at full catalog size no longer fit the driver's
     // ~2000-char tail window (162 queries measured 1767 chars). The
     // line lists failed queries plus the slowest `topN` individually —
@@ -543,21 +342,11 @@ object Bench {
     // margin (measured r10: 336 queries at topN 110 → ~1380 chars, so
     // the loop is headroom against catalog growth, not a working
     // constraint). The COMPLETE per-query map with ns precision and
-    // task metrics is always in bench_detail.json, committed every
-    // round.
+    // task metrics is always in bench_detail.json.
     val (errQs, okQs) = results.partition { case (n, _) => errors.contains(n) }
-    // VERDICT r15 #3a: anchor the round-over-round PERF join by also
-    // detailing every query the PREVIOUS round's record detailed (at
-    // ≥ 0.8 s) — a query that just got fast stays visible for the one
-    // round in which its improvement is the story, instead of silently
-    // folding into "rest". Dropped first by the degrade ladder below if
-    // the line would overflow.
-    val prevKeys = prevDetailKeys(sfShort = Some(sfShort))
-    def mkQs(topN: Int, withPrev: Boolean): String = {
+    def mkQs(topN: Int): String = {
       val slow = okQs.sortBy { case (n, m) => (-m.sec, n) }.take(topN)
-      val carried = if (!withPrev) Nil
-        else okQs.filter { case (n, _) => prevKeys(n.takeWhile(_ != '_')) }
-      val keep = (errQs ++ slow ++ carried).distinctBy(_._1)
+      val keep = errQs ++ slow
       val keepSet = keep.map(_._1).toSet
       val rest = results.filterNot(r => keepSet(r._1))
       val shortKeys = keep.map { case (k, _) => k.takeWhile(_ != '_') }
@@ -578,6 +367,7 @@ object Bench {
     // whose winning run started under load > threshold (slowest 12 —
     // usually empty, so usually zero chars), each with that run's
     // loadavg.
+    val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
     val noisyJson =
       if (noisyQs.isEmpty) ""
       else "\"noisy\":" + noisyQs.sortBy { case (_, m) => -m.sec }.take(12)
@@ -596,17 +386,12 @@ object Bench {
     val errNamesJson = errors.keys.map(k => s"${jstr(k)}:${jstr("failed")}")
       .mkString("{", ",", "}")
     val line = {
-      val full = mkLine(mkQs(110, withPrev = true), errJson)
+      val full = mkLine(mkQs(110), errJson)
       if (full.length <= 1615) full
-      // degrade: first shrink topN down to 60 with the carried
-      // prev-round keys kept, then drop the carried keys and keep
-      // shrinking — coverage of the previous round's join beats a long
-      // fresh tail, but a capacity squeeze must still resolve
-      else ((60 to 110 by 10).reverseIterator.map(n => (n, true)) ++
-          Iterator.iterate(110)(_ - 10).takeWhile(_ >= 10).map(n => (n, false)))
-        .map { case (n, p) => mkLine(mkQs(n, withPrev = p), errNamesJson) }
+      else Iterator.iterate(110)(_ - 10).takeWhile(_ >= 10)
+        .map(n => mkLine(mkQs(n), errNamesJson))
         .find(_.length <= 1615)
-        .getOrElse(mkLine(mkQs(10, withPrev = false), errNamesJson))
+        .getOrElse(mkLine(mkQs(10), errNamesJson))
     }
     // Capacity (not failure-mode) overflow now requires even topN=10
     // to blow the window — still fail loudly at dev time if it does.

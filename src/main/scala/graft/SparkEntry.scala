@@ -22,6 +22,12 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     defs.map(d => d.name -> d.fn).toMap
 
+  /** Local cores of a main's session: `SPARK_GRAFT_CPUS`, else the
+    * machine's, capped at 32. The mains use it as the shuffle partition
+    * count too. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted entries get a rows-only check. */
   def oracleSql: Map[String, String] =

@@ -59,18 +59,6 @@ object Spatial {
         (dx * dx + dy * dy).as("d2"))
   }
 
-  /** O(n²) brute-force twin — the correctness yardstick and the thing
-    * [[epsPairs]] exists to avoid (same stance as q32 vs q34). */
-  def epsPairsNaive(points: DataFrame, cellShift: Int): DataFrame = {
-    val eps2 = (1L << cellShift) * (1L << cellShift)
-    val dx = col("a.x") - col("b.x")
-    val dy = col("a.y") - col("b.y")
-    points.as("a").crossJoin(points.as("b"))
-      .where(col("a.k") < col("b.k") && dx * dx + dy * dy <= eps2)
-      .select(col("a.k").as("k_a"), col("b.k").as("k_b"),
-        (dx * dx + dy * dy).as("d2"))
-  }
-
   /** Symmetric ε-neighbor pairs (both directions, no self-pairs) —
     * the per-point neighbor relation DBSCAN labelling consumes. */
   def neighborPairs(points: DataFrame, cellShift: Int): DataFrame = {

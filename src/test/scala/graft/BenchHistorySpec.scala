@@ -1,111 +1,13 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench stall-arbitration inputs: the committed BENCH_r*.json
-  * driver records parse into a per-query history, and the median over
-  * them is what the proportional gate (re-measure when sec > 3× the
-  * three-round median) compares against. Round 10's q115 spike — 41 s
-  * on a 3.5 s history, escaping the absolute byte gate — is the exact
-  * case this arbitration exists for, so it doubles as the fixture. */
+/** Pins the bench record's self-description: the per-query noisy flag,
+  * and the plan hash of the work signature, which must not change with
+  * what differs between two runs of one plan (expression IDs, shuffle
+  * partition counts) and must change when an operator does. */
 class BenchHistorySpec extends AnyFunSuite {
-
-  test("loadHistory parses the last three committed rounds, window sliding") {
-    val h = Bench.loadHistory(".")
-    assert(h.nonEmpty, "no BENCH_r*.json / bench_detail_r* parsed from the repo root")
-    val q115 = h.getOrElse("q115", fail("q115 missing from history"))
-    assert(q115.size == 3)
-    // r12/r13 commit FULL per-round details (VERDICT r12 #6), so the
-    // three-round window is now r11/r12/r13 and the r10 41 s
-    // environmental spike has slid OUT — the sliding is the point
-    assert(q115.max < 30.0,
-      s"the r10 spike should have slid out of the window, got $q115")
-    assert(Bench.median(q115) < 5.0, q115.toString)
-    // detail records cover the whole catalog: a rest-bucketed query
-    // has history too
-    assert(h.contains("q341") || h.contains("q85"),
-      "full-detail rounds must contribute rest-bucketed queries")
-    // "rest"-bucketed pseudo-key must not leak in as a query
-    assert(!h.contains("rest"))
-  }
-
-  test("detail records extend the gate to EVERY query, and sf filtering holds") {
-    val dir = java.nio.file.Files.createTempDirectory("benchhist")
-    def w(name: String, body: String) =
-      java.nio.file.Files.writeString(dir.resolve(name), body)
-    // driver record: only the headline query is itemized; q77 rides in
-    // "rest" and is invisible to a driver-records-only history
-    w("BENCH_r41.json",
-      """{"parsed":{"queries":{"q05":2.0,"rest":{"n":1,"sec":1.0}},"sf":"sf0.1"}}""")
-    // committed detail for the same round: every query, full names
-    w("bench_detail_r41_builder.json",
-      """{"queries":{"q05_batch_date":{"sec":2.1},"q77_rest_rider":{"sec":0.9}},"sf":"/root/testdata/sf0.1"}""")
-    // a different-SF round: must NOT contaminate the sf0.1 medians
-    w("BENCH_r42.json",
-      """{"parsed":{"queries":{"q05":9.0,"q77":8.0},"sf":"sf1"}}""")
-    val h = Bench.loadHistory(dir.toString, sfShort = Some("sf0.1"))
-    // q77 gained history from the detail file (the VERDICT-r11 ask:
-    // the 3x-median gate provably sees rest-bucketed queries)
-    assert(h.get("q77").contains(Vector(0.9)), h.toString)
-    // same-round driver+detail merge to ONE sample; detail wins
-    assert(h.get("q05").contains(Vector(2.1)), h.toString)
-    assert(!h.contains("rest"))
-    // the sf1 round is filtered out entirely…
-    assert(!h("q77").contains(8.0))
-    // …but selecting sf1 sees only it
-    val h1 = Bench.loadHistory(dir.toString, sfShort = Some("sf1"))
-    assert(h1.get("q05").contains(Vector(9.0)), h1.toString)
-    // records predating the sf field count as driver sf0.1 runs
-    w("BENCH_r40.json", """{"parsed":{"queries":{"q05":1.5}}}""")
-    val h2 = Bench.loadHistory(dir.toString, sfShort = Some("sf0.1"))
-    assert(h2.get("q05").contains(Vector(1.5, 2.1)), h2.toString)
-    assert(Bench.loadHistory(dir.toString, sfShort = Some("sf10x")).isEmpty)
-    // MULTI-ROUND detail merge (VERDICT r12 #6): a second round's
-    // committed detail slides the window — each detail contributes one
-    // sample per query, in round order, including rest-riders the
-    // driver records never itemize
-    w("bench_detail_r43.json",
-      """{"queries":{"q05_batch_date":{"sec":2.5},"q77_rest_rider":{"sec":1.1}},"sf":"/root/testdata/sf0.1"}""")
-    val h3 = Bench.loadHistory(dir.toString, sfShort = Some("sf0.1"))
-    assert(h3.get("q77").contains(Vector(0.9, 1.1)), h3.toString)
-    assert(h3.get("q05").contains(Vector(1.5, 2.1, 2.5)), h3.toString)
-    // TWO detail files for one round (ADVICE r13): the winner must be
-    // deterministic — the canonical bench_detail_r<N>.json beats the
-    // suffixed variant regardless of Files.list order
-    w("bench_detail_r43_builder.json",
-      """{"queries":{"q05_batch_date":{"sec":99.0}},"sf":"/root/testdata/sf0.1"}""")
-    val h4 = Bench.loadHistory(dir.toString, sfShort = Some("sf0.1"))
-    assert(h4.get("q05").contains(Vector(1.5, 2.1, 2.5)), h4.toString)
-  }
-
-  test("median: odd, even, and singleton vectors") {
-    assert(Bench.median(Vector(3.0)) == 3.0)
-    assert(Bench.median(Vector(4.6, 40.96, 3.5)) == 4.6)
-    assert(Bench.median(Vector(2.0, 4.0)) == 3.0)
-  }
-
-  test("a missing directory degrades to an empty history, not a crash") {
-    assert(Bench.loadHistory("/nonexistent-dir-xyz").isEmpty)
-  }
-
-  test("stallShaped: the r10 q115 spike fires the proportional gate, not the byte gate") {
-    val MB = 1L << 20
-    // q115 in the r10 driver record: 40.96 s, 32 MB shuffle, no spill —
-    // the byte gate is blind to it (shuffle ≥ 8 MB)…
-    assert(!Bench.stallShaped(40.96, 32 * MB, 1 * MB, 0, None))
-    // …but with its 3-round median of 4.6 s the proportional gate fires
-    assert(Bench.stallShaped(40.96, 32 * MB, 1 * MB, 0, Some(4.6)))
-    // a genuinely heavy query near its own history does NOT re-measure
-    assert(!Bench.stallShaped(8.3, 200 * MB, 500 * MB, 0, Some(7.6)))
-    // 3× of a tiny median clamps at the 4 s floor — sub-4 s runs of
-    // fast queries never re-measure
-    assert(!Bench.stallShaped(3.9, 0, 0, 0, Some(0.5)))
-    assert(Bench.stallShaped(4.1, 0, 0, 0, Some(0.5))) // byte gate too
-    // byte gate alone: seconds of wall over trivial measured work
-    assert(Bench.stallShaped(5.0, 1 * MB, 10 * MB, 0, None))
-    // spill disqualifies the byte gate (heavy work, honest seconds)
-    assert(!Bench.stallShaped(5.0, 1 * MB, 10 * MB, 1, None))
-  }
 
   test("noisyShaped: per-query contention flag (VERDICT r14 #7)") {
     // the r14 case: q312 measured 6.0 s with loadavg 5.5 at run start
@@ -120,5 +22,47 @@ class BenchHistorySpec extends AnyFunSuite {
     // number past 1 s is run noise, not an adjudication case
     assert(!Bench.noisyShaped(sec = 0.9, load = 9.0, threshold = 4.0))
     assert(Bench.noisyShaped(sec = 1.0, load = 9.0, threshold = 4.0))
+  }
+
+  test("planHash ignores expression IDs and partition counts, not operators") {
+    val at8 =
+      """*(2) Project [k#12L, transform(v#13, lambdafunction((lambda x_1#40 * 2), lambda x_1#40, false)) AS w#14]
+        |+- *(2) HashAggregate(keys=[k#12L], functions=[collect_list(v#11, 0, 0)], output=[k#12L, v#13])
+        |   +- ShuffleQueryStage 0
+        |      +- Exchange hashpartitioning(pmod(hash(k#12L, 42), 7), 8), ENSURE_REQUIREMENTS, [plan_id=31]
+        |         +- *(1) FileScan parquet [k#12L,v#11] Location: InMemoryFileIndex(1 paths)[file:/data/sf0.1/t.parquet], ReadSchema: struct<k:bigint,v:int>
+        |""".stripMargin
+    val at32 = at8.replace("#12L", "#977L").replace("#11", "#976")
+      .replace("#13", "#978").replace("#14", "#979").replace("x_1#40", "x_9#5120")
+      .replace(", 8)", ", 32)").replace("plan_id=31", "plan_id=4410")
+      .replace("Stage 0", "Stage 3").replace("*(2)", "*(5)")
+      .replace("(1 paths)[file:/data/sf0.1/", "(4 paths)[file:/other/sf1/")
+    assert(at32 != at8)
+    assert(Bench.planHash(at32) == Bench.planHash(at8))
+    val repartitioned = at8.replace("+- *(1) FileScan",
+      "+- Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM, [plan_id=7]\n" +
+        "               +- *(1) FileScan")
+    assert(Bench.planHash(repartitioned) != Bench.planHash(at8))
+    assert(Bench.planHash(repartitioned.replace("Partitioning(8)",
+      "Partitioning(16)")) == Bench.planHash(repartitioned))
+  }
+
+  test("planHash: one DataFrame planned at 2 and at 4 shuffle partitions") {
+    val spark = SparkTestSession.spark
+    val key = "spark.sql.shuffle.partitions"
+    val was = spark.conf.get(key)
+    def plan(parts: Int, extraFilter: Boolean) = {
+      spark.conf.set(key, parts.toLong)
+      try {
+        val base = spark.range(100).select((col("id") % 3).as("k"))
+        val df = (if (extraFilter) base.where(col("k") > 0) else base)
+          .groupBy("k").count()
+        Bench.finalPlan(df.queryExecution.executedPlan)
+      } finally spark.conf.set(key, was)
+    }
+    val (p2, p4) = (plan(2, extraFilter = false), plan(4, extraFilter = false))
+    assert(p2.contains(", 2)") && p4.contains(", 4)"), s"$p2\n$p4")
+    assert(Bench.planHash(p2) == Bench.planHash(p4), s"$p2\n$p4")
+    assert(Bench.planHash(plan(2, extraFilter = true)) != Bench.planHash(p2))
   }
 }

@@ -22,7 +22,7 @@ class EvalSpatialSpec extends AnyFunSuite {
       .select("k_a", "k_b", "d2").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // brute force: same derived coordinates, cross join, exact filter
-    val brute = graft.operators.Spatial.epsPairsNaive(
+    val brute = graft.operators.SpatialTwin.epsPairsNaive(
         graft.operators.Spatial.derivePoints(
           graft.Tables.customer(spark, sf), "c_custkey"), 18)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

@@ -16,8 +16,7 @@ object JobProf {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = graft.SparkEntry.cpus
     val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
