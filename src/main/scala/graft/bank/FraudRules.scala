@@ -69,7 +69,7 @@ object FraudRules {
         (col("bl_passport").isNotNull &&
           to_date(col("transaction_date")) > col("bl_date"))) &&
         col("oper_result") === "SUCCESS")
-    out(joined, col("transaction_date"), "blocked or expired passport", reportDt)
+    out(joined, col("transaction_date"), BlockedPassport, reportDt)
   }
 
   /** Rule 2 — invalid contract (`loading_rep_fraud.py:43-58`). */
@@ -77,32 +77,21 @@ object FraudRules {
     val joined = withClients(txns, seed)
       .where(to_date(col("transaction_date")) > col("valid_to") &&
         col("oper_result") === "SUCCESS")
-    out(joined, col("transaction_date"), "invalid contract", reportDt)
+    out(joined, col("transaction_date"), InvalidContract, reportDt)
   }
 
-  private val DiffCities = "ops in diff cities less one hour"
-  private val AmountGuessing = "amount guessing"
+  /** The four rules' `event_type` values, in reference order. */
+  val BlockedPassport = "blocked or expired passport"
+  val InvalidContract = "invalid contract"
+  val DiffCities = "ops in diff cities less one hour"
+  val AmountGuessing = "amount guessing"
 
-  /** Rule 3 — operations in different cities within one hour
-    * (`loading_rep_fraud.py:64-92`): a SUCCESS whose city differs from
-    * the city of some earlier transaction of the same card less than an
-    * hour before it. A row of [[bandRules]]. */
-  def rule3(txns: DataFrame, termHist: DataFrame, seed: Seeds.Seed,
-            repFraud: DataFrame, reportDt: Date): DataFrame =
-    bandRules(txns, termHist, seed, repFraud, reportDt)
-      .where(col("event_type") === DiffCities)
-
-  /** Rule 4 — amount guessing (`loading_rep_fraud.py:98-129`):
-    * REJECT → REJECT → SUCCESS on one card with strictly decreasing
-    * amounts, all gaps and the total span under 20 minutes. A row of
-    * [[bandRules]]; `termHist` feeds rule 3's half of the shared pass,
-    * so both rules plan one frame and the day's write computes it once. */
-  def rule4(txns: DataFrame, termHist: DataFrame, seed: Seeds.Seed,
-            repFraud: DataFrame, reportDt: Date): DataFrame =
-    bandRules(txns, termHist, seed, repFraud, reportDt)
-      .where(col("event_type") === AmountGuessing)
-
-  /** Rules 3 and 4 in one keyed pass, both event types in one frame.
+  /** Rules 3 and 4 in one keyed pass, both event types in one frame:
+    * rule 3, operations in different cities within one hour
+    * (`loading_rep_fraud.py:64-92`), and rule 4, amount guessing
+    * (`loading_rep_fraud.py:98-129`: REJECT → REJECT → SUCCESS on one
+    * card with strictly decreasing amounts, all gaps and the total span
+    * under 20 minutes).
     *
     *  1. Each transaction takes, by a broadcast left join to the SCD2
     *     dimension with the reference's as-of residual (`effective_to`,
@@ -125,12 +114,11 @@ object FraudRules {
     *     holds.
     *
     * So the day plans one (card, bucket) exchange and one dedup
-    * exchange for both rules; [[rule3]] and [[rule4]] select their
-    * event type above the dedup, where the day's union reuses both. The
-    * keyed collect is the mechanism of the one-pass SCD2 transition
-    * (`operators.Cdc.scd2Apply`); a window formulation (two range
-    * frames over the same partitions) planned the same exchanges but
-    * measured no cheaper than the band joins (SCALING.md).
+    * exchange for both rules. The keyed collect is the mechanism of the
+    * one-pass SCD2 transition (`operators.Cdc.scd2Apply`); a window
+    * formulation (two range frames over the same partitions) planned the
+    * same exchanges but measured no cheaper than the band joins
+    * (SCALING.md).
     *
     * Hot keys: a card's history spreads over its hour buckets, so no
     * card lands whole on one task. The trade is that every row is
@@ -138,9 +126,8 @@ object FraudRules {
     * group of m rows is judged by one task in O(m²) comparisons (more
     * for rule 4's REJECT pairs): the pairs the Δ-bucketed band join
     * enumerated for the same group. */
-  private def bandRules(txns: DataFrame, termHist: DataFrame,
-                        seed: Seeds.Seed, repFraud: DataFrame,
-                        reportDt: Date): DataFrame = {
+  def bandRules(txns: DataFrame, termHist: DataFrame, seed: Seeds.Seed,
+                repFraud: DataFrame, reportDt: Date): DataFrame = {
     val hourUs = 3600L * 1000000L
     val guessUs = 1200L * 1000000L
     val cities = termHist.select(col("terminal_id"), col("terminal_city"),

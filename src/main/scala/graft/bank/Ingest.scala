@@ -125,8 +125,9 @@ object Ingest {
   }
 
   /** S6: cumulative passport blacklist; Excel serial → DateType (1900
-    * system, 1899-12-30 epoch — [[Xlsx.serialToDate]]), all-null styled
-    * rows already dropped by the reader. Same distributed source as
+    * date system with the Lotus leap bug, hence the 1899-12-30 epoch:
+    * 44256 = 2021-03-01), all-null styled rows already dropped by the
+    * reader. Same distributed source as
     * [[terminals]]; the serial decode is a column expression so it runs
     * where the rows are. */
   def blacklist(spark: SparkSession, path: String): DataFrame = {

@@ -101,10 +101,10 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
 
     // --- blacklist fact (`comm_funcs.py:47-56`)
     val blFact = wh.readOr(FactBlacklist)
-    val (blNew, Seq(nBlacklist)) =
-      RowCount.observe(Seq("stg_passport_blacklist" -> blacklist))(bl =>
-        bl.head.join(blFact.select("passport"), Seq("passport"), "left_anti")
-          .select("date", "passport"))
+    val (blNew, Seq(nBlacklist)) = RowCount.observe(blacklist,
+      Seq("stg_passport_blacklist" -> lit(true)))(
+      _.join(blFact.select("passport"), Seq("passport"), "left_anti")
+        .select("date", "passport"))
     wh.append(FactBlacklist, blNew)
 
     // --- SCD2 terminals dimension (`incr_loading.py`)
@@ -165,9 +165,15 @@ object Pipeline {
     *  1. `dayRows` (fact columns plus `txn_date`) land as a dynamic
     *     overwrite of their `txn_date` partition, which yields the
     *     staging count ([[RowCount]]); then `failpoint("fact_overwrite")`;
-    *  2. the four fraud rules run over [[ruleFacts]] and land as ONE
-    *     dynamic overwrite of `report_dt=<day>`, which yields the four
-    *     rule counts; then `failpoint("mart_overwrite")`;
+    *  2. the four fraud rules run over [[ruleFacts]] as one frame,
+    *     `rule1 ∪ rule2 ∪ bandRules`, behind one rebalance, and land as
+    *     ONE dynamic overwrite of `report_dt=<day>`; then
+    *     `failpoint("mart_overwrite")`. Adaptive execution sizes the
+    *     rebalanced output to its advisory partition size, so the day's
+    *     partition gets its file count at this one write (one file at the
+    *     reference's volume) and nothing compacts it afterwards. One
+    *     counter above the rebalance yields the four rule counts, a
+    *     `count_if` per event type ([[RuleEventTypes]]);
     *  3. one META append: `stg_transactions`, then `extraMeta`, then the
     *     four rule rows in reference order. The last of them
     *     (`REP_FRAUD_attempt_amount`) is the day-completion marker
@@ -178,7 +184,7 @@ object Pipeline {
     * streaming day `true` (the pruned plan, exact under the streaming
     * day-order check of [[Pipeline.runDayStaged]]).
     * Rules 3/4 are one keyed pass over (card, hour bucket)
-    * ([[FraudRules.rule3]]), planned once for both.
+    * ([[FraudRules.bandRules]]).
     *
     * The rules are computed against the mart WITHOUT `report_dt = day`:
     * an earlier attempt's rows for this day must not feed J12's
@@ -197,23 +203,20 @@ object Pipeline {
   private[graft] def transactionsDay(wh: Warehouse, seed: Seeds.Seed,
       day: Date, dayRows: DataFrame, incremental: Boolean,
       extraMeta: Seq[Meta], failpoint: String => Unit = _ => ()): Unit = {
-    val (factRows, Seq(nTxns)) =
-      RowCount.observe(Seq("stg_transactions" -> dayRows))(_.head)
+    val (factRows, Seq(nTxns)) = RowCount.observe(dayRows,
+      Seq("stg_transactions" -> lit(true)))(identity)
     wh.overwritePartitions(FactTransactions, factRows, Seq("txn_date"))
     failpoint("fact_overwrite")
     val (facts, facts12) = ruleFacts(wh, day, incremental)
     val repBefore =
       wh.readOr(RepFraud).where(col("report_dt") =!= lit(day))
-    val terms = wh.readOr(DimTerminals)
-    val (mart, ruleCounts) = RowCount.observe(Seq(
-      "REP_FRAUD_passport" ->
-        FraudRules.rule1(facts12, wh.readOr(FactBlacklist), seed, day),
-      "REP_FRAUD_contract" -> FraudRules.rule2(facts12, seed, day),
-      "REP_FRAUD_diff_cities" ->
-        FraudRules.rule3(facts, terms, seed, repBefore, day),
-      "REP_FRAUD_attempt_amount" ->
-        FraudRules.rule4(facts, terms, seed, repBefore, day)))(
-      _.reduce(_ unionByName _))
+    val rules = FraudRules.rule1(facts12, wh.readOr(FactBlacklist), seed, day)
+      .unionByName(FraudRules.rule2(facts12, seed, day))
+      .unionByName(FraudRules.bandRules(facts, wh.readOr(DimTerminals), seed,
+        repBefore, day))
+    val (mart, ruleCounts) = RowCount.observe(rules.hint("rebalance"),
+      RuleEventTypes.map { case (l, t) => l -> (col("event_type") === t) })(
+      identity)
     wh.overwritePartitions(RepFraud, mart, Seq("report_dt"))
     failpoint("mart_overwrite")
     wh.logMeta((Meta("stg_transactions", day, nTxns.get()) +: extraMeta) ++
@@ -251,6 +254,15 @@ object Pipeline {
       val facts = wh.read(FactTransactions)
       (facts, facts)
     }
+
+  /** The four rules' META labels with their mart `event_type`, in
+    * reference order; the last is the day-completion marker
+    * ([[completed]]). */
+  private val RuleEventTypes: Seq[(String, String)] = Seq(
+    "REP_FRAUD_passport" -> FraudRules.BlockedPassport,
+    "REP_FRAUD_contract" -> FraudRules.InvalidContract,
+    "REP_FRAUD_diff_cities" -> FraudRules.DiffCities,
+    "REP_FRAUD_attempt_amount" -> FraudRules.AmountGuessing)
 
   /** The fact columns of a transactions day, in table order. */
   private val FactColumns: Seq[String] =

@@ -3,11 +3,11 @@ package graft.bank
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.count_if
 
 /** A row count for the audit trail, read off the write that executes a
   * frame (an `Observation` attached with `df.observe`) instead of from a
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * instead.
   */
 final class RowCount private (val label: String, explicit: Option[Long],
-                              observation: Observation) {
+                              observation: Observation, index: Int) {
 
   /** False where the placement rule forced an explicit count. */
   private[bank] def observed: Boolean = explicit.isEmpty
@@ -45,10 +45,10 @@ final class RowCount private (val label: String, explicit: Option[Long],
             s"row count of $label: no observed metric within $timeout " +
               "(was the observed frame written?)")
         }
-      if (row.length == 0 || row.isNullAt(0))
+      if (row.length <= index || row.isNullAt(index))
         throw new IllegalStateException(
           s"row count of $label: the write reported no metric")
-      row.getLong(0)
+      row.getLong(index)
     }
 }
 
@@ -56,22 +56,24 @@ object RowCount {
   /** How long [[RowCount.get]] waits for a metric that has not arrived. */
   private[bank] val Wait: FiniteDuration = 60.seconds
 
-  /** Attach a row counter to each of the labelled `inputs`, build the
-    * frame to write from the observed inputs with `write`, and return it
-    * with one count per input, in order. Write exactly that frame, then
-    * read the counts. The placement rule is checked on the built frame;
-    * an input whose counter fails it is counted here, eagerly. */
-  def observe(inputs: Seq[(String, DataFrame)])(
-      write: Seq[DataFrame] => DataFrame): (DataFrame, Seq[RowCount]) = {
-    val observations = inputs.map(_ => Observation())
-    val written = write(inputs.zip(observations).map { case ((_, df), o) =>
-      df.observe(o, count(lit(1))) })
-    val plan = written.queryExecution.executedPlan
-    val counts = inputs.zip(observations).map { case ((label, df), o) =>
-      new RowCount(label,
-        if (inResultStage(plan, o.name)) None else Some(df.count()), o)
-    }
-    (written, counts)
+  /** Attach one counter to `df`, one `count_if` per labelled predicate,
+    * build the frame to write from the observed `df` with `write`, and
+    * return it with one count per label, in order. Write exactly that
+    * frame, then read the counts. The placement rule is checked on the
+    * built frame; if the counter fails it, every label is counted here,
+    * eagerly, in one job. */
+  def observe(df: DataFrame, counts: Seq[(String, Column)])(
+      write: DataFrame => DataFrame): (DataFrame, Seq[RowCount]) = {
+    val o = Observation()
+    val aggs = counts.zipWithIndex.map { case ((_, p), i) =>
+      count_if(p).as(s"n$i") }
+    val written = write(df.observe(o, aggs.head, aggs.tail: _*))
+    val explicit: Option[Row] =
+      if (inResultStage(written.queryExecution.executedPlan, o.name)) None
+      else Some(df.select(aggs: _*).head())
+    val rowCounts = counts.zipWithIndex.map { case ((label, _), i) =>
+      new RowCount(label, explicit.map(_.getLong(i)), o, i) }
+    (written, rowCounts)
   }
 
   /** True iff the `CollectMetricsExec` named `name` is in `plan` with no

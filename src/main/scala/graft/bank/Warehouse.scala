@@ -9,11 +9,15 @@ import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType
 
 /** Parquet-backed warehouse layer: the Spark replacement for the
   * reference's PostgreSQL schema (`comm_funcs.py:10`). Tables live as
-  * parquet directories under a root; facts and the mart land as
-  * day-partition overwrites, the audit log appends, dimensions swap
-  * atomically (write-new → move), since Spark cannot overwrite a table
-  * it is currently reading (the SCD2 dimension is input AND output of
-  * the same transition — SURVEY §7 hard-part 2).
+  * parquet directories under a root. Facts and the mart land as
+  * day-partition overwrites ([[overwritePartitions]]), each partition
+  * written once at its final file count; the blacklist fact and the
+  * audit log append unpartitioned ([[append]]) and compact behind
+  * ([[compactIfFragmented]]); dimensions swap atomically (write-new →
+  * move), since Spark cannot overwrite a table it is currently reading
+  * (the SCD2 dimension is input AND output of the same transition —
+  * SURVEY §7 hard-part 2). The swap is the one crash window to heal
+  * ([[recover]]).
   *
   * At cluster scale the same layer maps onto object storage with a
   * rename-free committer or a table format; the call sites don't change.
@@ -25,21 +29,18 @@ final class Warehouse(val spark: SparkSession, val root: String) {
 
   def exists(name: String): Boolean = Files.exists(dir(name))
 
-  /** Every read and write path heals crash windows FIRST. Without this,
-    * a marked tmp left by a crashed [[compact]]/[[overwrite]] can
-    * coexist with subsequent appends to the (possibly stale, possibly
-    * partial) live directory — and the next [[recover]] call would roll
-    * forward to the marked tmp, silently discarding those appends. With
-    * heal-at-entry the invariant is: no table is read or written while
-    * a committed-but-unswapped version exists, so a marked tmp can never
-    * coexist with data written after it (WarehouseRecoverySpec pins the
-    * append-after-crashed-compact case). Cost: a handful of
-    * Files.exists checks (plus a directory walk for `_tmppart_` leaves)
-    * per table access — noise next to any Spark job. */
-  private def heal(name: String): Unit = {
-    recover(name)
-    if (exists(name)) recoverPartitions(name)
-  }
+  /** Every read and write path heals the swap's crash window FIRST
+    * ([[recover]]). Without this, a marked tmp left by a crashed
+    * [[compact]]/[[overwrite]] can coexist with subsequent appends to the
+    * (possibly stale, possibly partial) live directory — and the next
+    * [[recover]] call would roll forward to the marked tmp, silently
+    * discarding those appends. With heal-at-entry the invariant is: no
+    * table is read or written while a committed-but-unswapped version
+    * exists, so a marked tmp can never coexist with data written after
+    * it (WarehouseRecoverySpec pins the append-after-crashed-compact
+    * case). Cost: a few `Files.exists` checks per table access, no
+    * directory walk. */
+  private def heal(name: String): Unit = recover(name)
 
   /** Open a table. The daily cycle's tables are opened with their
     * declared schema ([[Warehouse.KnownSchemas]]), so no job reads
@@ -62,11 +63,11 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       Warehouse.KnownSchemas(name))
   }
 
-  def append(name: String, df: DataFrame,
-             partitionCols: Seq[String] = Nil): Unit = {
+  /** Append to an unpartitioned table; day partitions are written with
+    * [[overwritePartitions]]. */
+  def append(name: String, df: DataFrame): Unit = {
     heal(name)
-    df.write.mode(SaveMode.Append).partitionBy(partitionCols: _*)
-      .parquet(dir(name).toString)
+    df.write.mode(SaveMode.Append).parquet(dir(name).toString)
   }
 
   /** Marker file written into a tmp directory once its content is
@@ -160,13 +161,15 @@ final class Warehouse(val spark: SparkSession, val root: String) {
 
   /** Replace exactly the partitions PRESENT IN `df`, leaving all other
     * partitions of the table untouched (Spark's dynamic partition
-    * overwrite). This is the idempotent write primitive for
-    * day-partitioned fact tables in a `foreachBatch` sink: a replayed
-    * micro-batch re-derives the same day rows and overwrites its own
-    * partition with identical content — append would double it. The
-    * per-partition delete-then-write is not atomic; a crash mid-write
-    * is healed by the replay itself (same batch, same partition,
-    * rewritten whole). */
+    * overwrite). This is the idempotent write primitive for the
+    * day-partitioned fact and mart: a replayed day re-derives the same
+    * rows and overwrites its own partition with identical content —
+    * append would double it. It is also the partition's ONLY write: the
+    * caller sizes its files here (the mart rebalances,
+    * [[Pipeline.transactionsDay]]), and no compaction rewrites a
+    * partition afterwards. The per-partition delete-then-write is not
+    * atomic; a crash mid-write is healed by the replay itself (same day,
+    * same partition, rewritten whole). */
   def overwritePartitions(name: String, df: DataFrame,
                           partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty,
@@ -181,43 +184,25 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   def drop(name: String): Unit = deleteRecursive(dir(name))
 
   /** Number of parquet data files currently backing a table — the
-    * fragmentation signal [[compactIfFragmented]] gates on. Files under
-    * `_`-prefixed dirs (in-flight `_tmppart_` rewrites) are not data. */
+    * fragmentation signal [[compactIfFragmented]] gates on. */
   def parquetFileCount(name: String): Int =
     if (!exists(name)) 0 else parquetFilesUnder(dir(name)).size
 
-  /** Compact-behind gate for streaming drains: compact the table iff
-    * its parquet file count exceeds `maxFiles`. File count — not commit
-    * count — is the trigger, so the cadence self-regulates to append
-    * granularity: a year of one-row daily audit appends compacts every
-    * `maxFiles` days, while a drain that appends nothing never pays a
-    * rewrite. Same single-writer contract as [[compact]]: call it from
-    * the drain that owns the table, after the drain completes. Returns
-    * true iff a compaction ran.
-    *
-    * PARTITIONED tables compact PER PARTITION ([[compactPartition]] on
-    * each leaf directory over `maxFiles / #partitions`, floor 2): a
-    * date-partitioned fact accumulates small files only in the
-    * partitions recent drains touched, and rewriting the whole table to
-    * fix yesterday's files is exactly the O(table) cost that cannot
-    * survive 100 TB — per-partition, the rewrite is O(what fragmented),
-    * old cold partitions are never read, and each swap window is one
-    * partition wide. Unpartitioned tables keep the whole-table rewrite
-    * (they ARE one partition). */
-  def compactIfFragmented(name: String, partitionCols: Seq[String] = Nil,
-                          maxFiles: Int = 256): Boolean = {
+  /** Compact-behind gate for the unpartitioned append tables (the
+    * blacklist fact and META): compact the table iff its parquet file
+    * count exceeds `maxFiles`. File count — not commit count — is the
+    * trigger, so the cadence self-regulates to append granularity: a
+    * year of one-file daily audit appends compacts every `maxFiles`
+    * days, while a drain that appends nothing never pays a rewrite.
+    * Same single-writer contract as [[compact]]: call it from the drain
+    * that owns the table, after the drain completes. Returns true iff a
+    * compaction ran. Day partitions never need it: each is written once,
+    * at its final file count ([[overwritePartitions]]). */
+  def compactIfFragmented(name: String, maxFiles: Int = 256): Boolean = {
     heal(name)
-    if (partitionCols.isEmpty) {
-      if (parquetFileCount(name) > maxFiles) {
-        compact(name); true
-      } else false
-    } else {
-      val parts = leafPartitionDirs(name)
-      val perPart = math.max(2, maxFiles / math.max(1, parts.size))
-      val frag = parts.filter(p => parquetFilesUnder(p).size > perPart)
-      frag.foreach(compactPartition(name, _))
-      frag.nonEmpty
-    }
+    if (parquetFileCount(name) > maxFiles) {
+      compact(name); true
+    } else false
   }
 
   /** Size a compacted rewrite aims for: ~128 MiB per output file. */
@@ -229,68 +214,17 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes).toInt
   }
 
-  /** Leaf partition directories of a partitioned table (the `col=value`
-    * dirs that directly hold parquet files). */
-  private def leafPartitionDirs(name: String): Seq[Path] = {
-    if (!exists(name)) return Nil
-    val walk = Files.walk(dir(name))
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet"))
-        .map(_.getParent).toSet.toSeq
-        .filter { p =>
-          val leaf = p.getFileName.toString
-          leaf.contains("=") && !leaf.startsWith("_")
-        }
-    } finally walk.close()
-  }
-
   private def parquetFilesUnder(p: Path): Seq[Path] = {
     val walk = Files.walk(p)
     try {
       import scala.jdk.CollectionConverters._
-      // skip `_`-prefixed dirs (in-flight _tmppart_ rewrites, sink
-      // metadata) — Spark's listing skips them too
-      walk.iterator().asScala
-        .filter(_.toString.endsWith(".parquet"))
-        .filterNot(_.iterator().asScala
-          .exists(_.toString.startsWith("_tmppart_")))
-        .toSeq
+      walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
     } finally walk.close()
-  }
-
-  /** `_tmppart_` sibling name for a leaf partition dir. The `=` in the
-    * leaf name must be ENCODED: Spark's listing only skips `_`-prefixed
-    * names that contain no `=` (HadoopFSUtils treats `_x=y` as a
-    * potential partition dir), so `_tmppart_dt=...` would be READ as
-    * live data mid-rewrite — verified the hard way in CompactionSpec. */
-  private def tmpPartName(leaf: String): String =
-    "_tmppart_" + leaf.replace("=", "__EQ__")
-  private def leafFromTmpPart(tmp: String): String =
-    tmp.stripPrefix("_tmppart_").replace("__EQ__", "=")
-
-  /** Rewrite ONE leaf partition directory's small files into
-    * ~[[TargetFileBytes]] ones, leaving every other partition untouched.
-    * Write-new → swap like [[compact]], but the tmp lives INSIDE the
-    * table as an `_`-prefixed sibling (ignored by Spark's listing), so
-    * the crash window is one partition wide and [[recoverPartitions]]
-    * heals it. Rows inside a leaf dir carry no partition columns, so
-    * the rewrite is a plain read→repartition→write of that directory. */
-  def compactPartition(name: String, partDir: Path): Unit = {
-    val nFiles = compactedFileCount(parquetFilesUnder(partDir))
-    val tmp = partDir.resolveSibling(tmpPartName(partDir.getFileName.toString))
-    deleteRecursive(tmp)
-    spark.read.parquet(partDir.toString).repartition(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    Files.writeString(tmp.resolve(CommitMarker), "")
-    deleteRecursive(partDir)
-    Files.move(tmp, partDir)
   }
 
   /** Hive-layout partition VALUES of `partCol` from the directory
     * listing alone — one readdir, zero data scan (heals first like
-    * every accessor; unmarked `_tmppart_` leaves are gone by then).
+    * every accessor).
     * The metadata read the streaming guards use instead of aggregating
     * the fact table per micro-batch (ADVICE r14: `max(txn_date)` over
     * the whole fact was a full-table scan whose cost grew with
@@ -315,43 +249,12 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     } finally stream.close()
   }
 
-  /** Heal [[compactPartition]] crash windows, per leaf, with the same
-    * [[CommitMarker]] rules as [[recover]]: target gone → move the tmp
-    * in; target present + MARKED tmp → roll forward (the crash may have
-    * landed mid-delete, leaving the live leaf partial — the marked tmp
-    * is the provably complete copy); target present + unmarked tmp →
-    * aborted write, drop it. */
-  def recoverPartitions(name: String): Int = {
-    if (!exists(name)) return 0
-    val walk = Files.walk(dir(name))
-    val tmps =
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith("_tmppart_")).toList
-      } finally walk.close()
-    var recovered = 0
-    tmps.foreach { tmp =>
-      val target = tmp.resolveSibling(
-        leafFromTmpPart(tmp.getFileName.toString))
-      if (!Files.exists(target)) {
-        Files.move(tmp, target); recovered += 1
-      } else if (Files.exists(tmp.resolve(CommitMarker))) {
-        deleteRecursive(target)
-        Files.move(tmp, target); recovered += 1
-      } else deleteRecursive(tmp)
-    }
-    recovered
-  }
-
   /** Compact an unpartitioned table's small files into
     * ~[[TargetFileBytes]]-sized ones. Daily appends leave one file-set
     * per batch; a year of days makes every scan open hundreds of tiny
     * files (at cluster scale: NameNode/object-store metadata pressure
     * and per-file open latency dominate the read). Rewrites through
-    * [[overwrite]]'s write-new → swap. Partitioned tables compact per
-    * leaf instead ([[compactIfFragmented]]). Run it off-peak at a
+    * [[overwrite]]'s write-new → swap. Run it off-peak at a
     * cadence matching append volume; appends after the swap are new
     * small files again (the usual compact-behind pattern).
     *

@@ -1,8 +1,6 @@
 package graft.sources
 
 import java.io.InputStream
-import java.time.LocalDate
-import java.util.zip.ZipFile
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -16,11 +14,11 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
   * pandas `read_excel` — SURVEY §7 quirk 4).
   *
   * Scale note: a single sheet parses on one JVM (zip + XML are
-  * inherently sequential), so per-FILE is the parallel unit. The
-  * driver-side [[read]] stays the right tool for one small snapshot;
-  * a DIRECTORY of snapshots reads distributed through
+  * inherently sequential), so per-FILE is the parallel unit. Every
+  * snapshot, one file or a directory of them, reads through
   * [[XlsxDataSource]] (`spark.read.format("xlsx")`), which assigns one
-  * file per input partition and parses on executors via [[readBytes]].
+  * file per input partition and parses on executors via [[readBytes]],
+  * the one parse path.
   */
 object Xlsx {
 
@@ -33,18 +31,6 @@ object Xlsx {
     f.setProperty(XMLInputFactory.IS_NAMESPACE_AWARE, true)
     f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
     f
-  }
-
-  def read(path: String): Sheet = {
-    val zip = new ZipFile(path)
-    try {
-      val shared = Option(zip.getEntry("xl/sharedStrings.xml"))
-        .map(e => readSharedStrings(zip.getInputStream(e)))
-        .getOrElse(Vector.empty)
-      val sheetEntry = Option(zip.getEntry("xl/worksheets/sheet1.xml"))
-        .getOrElse(throw new IllegalArgumentException(s"no sheet1 in $path"))
-      buildSheet(readSheet(zip.getInputStream(sheetEntry), shared))
-    } finally zip.close()
   }
 
   /** Parse an xlsx from its raw bytes — the executor-side entry point
@@ -84,11 +70,6 @@ object Xlsx {
     val data = padded.drop(1).filter(_.exists(_.isDefined))
     Sheet(header, data)
   }
-
-  /** Excel serial day → date (1900 date system with the Lotus leap bug,
-    * hence the 1899-12-30 epoch): 44256 = 2021-03-01. */
-  def serialToDate(serial: Int): LocalDate =
-    LocalDate.of(1899, 12, 30).plusDays(serial.toLong)
 
   private def readSharedStrings(in: InputStream): Vector[String] = {
     val reader = factory.createXMLStreamReader(in)

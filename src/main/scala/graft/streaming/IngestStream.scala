@@ -64,9 +64,11 @@ object IngestStream {
     * `checkpointRoot/inbox`. Each micro-batch groups its files by day and
     * runs every complete day, in calendar order, through
     * [[graft.bank.Pipeline.runDayStaged]] ([[landDrops]]). After the
-    * drain, compact-behind bounds the file counts of the
-    * append-accumulating tables (blacklist fact, fact partitions, mart
-    * partitions, META). Safe to run from cron at any cadence: an empty
+    * drain, compact-behind bounds the file counts of the two append
+    * tables, the blacklist fact and META, each compacted once it holds
+    * more than `compactAboveFiles` files; the fact and mart day
+    * partitions are written once at their final size and never
+    * compacted. Safe to run from cron at any cadence: an empty
     * cycle commits nothing. Returns the micro-batches that read files, as
     * seen through the engine's recent-progress buffer (capped, default
     * 100 entries): on a huge backfill a floor; 0 ⇔ nothing new. */
@@ -105,10 +107,8 @@ object IngestStream {
       .start()
     try q.awaitTermination() finally q.stop()
     // compact-behind AFTER the drain (single writer: the query is stopped)
-    wh.compactIfFragmented(Pipeline.FactBlacklist, maxFiles = compactAboveFiles)
-    Seq(Pipeline.FactTransactions -> "txn_date", Pipeline.RepFraud -> "report_dt")
-      .foreach { case (t, p) => wh.compactIfFragmented(t, Seq(p), compactAboveFiles) }
-    wh.compactIfFragmented(Pipeline.MetaLoading, maxFiles = compactAboveFiles)
+    Seq(Pipeline.FactBlacklist, Pipeline.MetaLoading)
+      .foreach(wh.compactIfFragmented(_, compactAboveFiles))
     q.recentProgress.count(_.numInputRows > 0).toLong
   }
 

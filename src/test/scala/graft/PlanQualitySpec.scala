@@ -27,10 +27,9 @@ class PlanQualitySpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("pq_prune").toString
     val wh = new graft.bank.Warehouse(spark, root)
     Seq("2021-03-01", "2021-03-02", "2021-03-03").foreach { d =>
-      wh.append(graft.bank.Pipeline.FactTransactions,
+      wh.overwritePartitions(graft.bank.Pipeline.FactTransactions,
         spark.range(10).select(col("id").cast("string").as("transaction_id"),
-          lit(java.sql.Date.valueOf(d)).as("txn_date")),
-        partitionCols = Seq("txn_date"))
+          lit(java.sql.Date.valueOf(d)).as("txn_date")), Seq("txn_date"))
     }
     // the read shape of the streaming day's rules-1/2 input
     // (Pipeline.ruleFacts): day filter on the partition col
@@ -55,10 +54,9 @@ class PlanQualitySpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("pq_prune34").toString
     val wh = new graft.bank.Warehouse(spark, root)
     Seq("2021-03-01", "2021-03-02", "2021-03-03").foreach { d =>
-      wh.append(graft.bank.Pipeline.FactTransactions,
+      wh.overwritePartitions(graft.bank.Pipeline.FactTransactions,
         spark.range(10).select(col("id").cast("string").as("transaction_id"),
-          lit(java.sql.Date.valueOf(d)).as("txn_date")),
-        partitionCols = Seq("txn_date"))
+          lit(java.sql.Date.valueOf(d)).as("txn_date")), Seq("txn_date"))
     }
     // the read shape of ruleFacts' streaming rules-3/4 window:
     // BETWEEN [day−1, day] on the partition column
@@ -78,10 +76,9 @@ class PlanQualitySpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("pq_twin").toString
     val wh = new graft.bank.Warehouse(spark, root)
     Seq("2021-03-01", "2021-03-02", "2021-03-03", "2021-03-04").foreach { d =>
-      wh.append(graft.bank.Pipeline.FactTransactions,
+      wh.overwritePartitions(graft.bank.Pipeline.FactTransactions,
         spark.range(10).select(col("id").cast("string").as("transaction_id"),
-          lit(java.sql.Date.valueOf(d)).as("txn_date")),
-        partitionCols = Seq("txn_date"))
+          lit(java.sql.Date.valueOf(d)).as("txn_date")), Seq("txn_date"))
     }
     // ruleFacts in the streaming day's plan: the rules-3/4 frame must be
     // a partition-pruned [day-1, day] read — 2 of 4 partitions
@@ -260,12 +257,12 @@ class PlanQualitySpec extends AnyFunSuite {
       cards = empty(graft.bank.Schemas.cards),
       accounts = empty(graft.bank.Schemas.accounts),
       clients = empty(graft.bank.Schemas.clients))
-    val p = graft.bank.FraudRules.rule3(
+    val p = graft.bank.FraudRules.bandRules(
       empty(graft.bank.Schemas.factTransactions),
       empty(graft.bank.Schemas.dimTerminalsHist), seed,
       empty(graft.bank.Schemas.repFraud), java.sql.Date.valueOf("2021-03-01"))
       .queryExecution.executedPlan.toString
-    assert(p.contains("__bucket"), s"default rule3 lost the bucketed plan: $p")
+    assert(p.contains("__bucket"), s"rules 3/4 lost the bucketed plan: $p")
     assert(!p.contains("CartesianProduct"), p)
   }
 

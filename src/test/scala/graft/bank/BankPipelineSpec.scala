@@ -1,9 +1,14 @@
 package graft.bank
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.sql.Date
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkTestSession
-import graft.sources.Xlsx
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,22 +23,47 @@ class BankPipelineSpec extends AnyFunSuite {
   private lazy val refData = RefFixture.dataDir
   private val days = RefFixture.days
 
+  /** Call sites (the long form) of the SQL executions the replay ran. */
+  private val replaySites = new ConcurrentLinkedQueue[String]
+
   private lazy val wh: Warehouse = {
     val work = Files.createTempDirectory("bankspec")
     val w = new Warehouse(spark, work.resolve("wh").toString)
-    RefFixture.replay(w, Seeds.load(spark, RefFixture.seedSql), work)
+    val sentinel = "bankspec_replay_done"
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          if (s.physicalPlanDescription.contains(sentinel)) done.countDown()
+          else replaySites.add(s.details)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      RefFixture.replay(w, Seeds.load(spark, RefFixture.seedSql), work)
+      // the listener bus delivers in order: once the sentinel's start is
+      // seen, every execution of the replay has been seen
+      spark.range(1).selectExpr(s"'$sentinel' AS s").collect()
+      assert(done.await(30, TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
     w
   }
 
   test("xlsx reader: snapshot sizes and serial dates match the fixture") {
-    val t1 = Xlsx.read(s"$refData/terminals_01032021.xlsx")
-    assert(t1.header == Seq("terminal_id", "terminal_type", "terminal_city",
-      "terminal_address"))
-    assert(t1.rows.size == 20)
-    val sizes = days.map(d =>
-      Xlsx.read(s"$refData/passport_blacklist_$d.xlsx").rows.size)
-    assert(sizes == Seq(7, 17, 23)) // all-null styled rows dropped
-    assert(Xlsx.serialToDate(44256).toString == "2021-03-01")
+    val t1 = Ingest.terminals(spark, s"$refData/terminals_01032021.xlsx")
+    assert(t1.columns.toSeq == Seq("terminal_id", "terminal_type",
+      "terminal_city", "terminal_address"))
+    assert(t1.count() == 20)
+    def blacklist(d: String) =
+      Ingest.blacklist(spark, s"$refData/passport_blacklist_$d.xlsx")
+    // all-null styled rows dropped
+    assert(days.map(blacklist(_).count()) == Seq(7, 17, 23))
+    // Excel serials 44256–44258 decode to 2021-03-01–03
+    def dates(d: String) = blacklist(d).select("date").distinct()
+      .collect().map(_.getDate(0).toString).sorted.toSeq
+    assert(dates(days.head) == Seq("2021-03-01"))
+    assert(dates(days.last) == Seq("2021-03-01", "2021-03-02", "2021-03-03"))
   }
 
   test("seed masters parse with exact row counts and intact values") {
@@ -95,5 +125,43 @@ class BankPipelineSpec extends AnyFunSuite {
     val stg = meta.where(col("table_name") === "stg_transactions")
       .orderBy("event_dt").select("rows_processed").collect().map(_.getInt(0))
     assert(stg.toSeq == Seq(1570, 1582, 1575))
+  }
+
+  test("every report_dt partition is one parquet file, written once") {
+    val mart = Paths.get(wh.root, Pipeline.RepFraud).toFile
+    val files = mart.listFiles().filter(_.getName.startsWith("report_dt="))
+      .map(p => p.getName -> p.list().count(_.endsWith(".parquet"))).toMap
+    assert(files == Seq("2021-03-01", "2021-03-02", "2021-03-03")
+      .map(d => s"report_dt=$d" -> 1).toMap, files)
+  }
+
+  test("every META row is the replica's, each count observed on its write") {
+    // the replica's staging sizes and per-day rule rows (FIXTURES.md A6):
+    // stg_transactions, stg_passport_blacklist, stg_terminals, then
+    // rules 1–4
+    val want = Seq(
+      ("2021-03-01", Seq(1570, 7, 20), Seq(0, 0, 4, 3)),
+      ("2021-03-02", Seq(1582, 17, 21), Seq(0, 0, 0, 2)),
+      ("2021-03-03", Seq(1575, 23, 20), Seq(759, 296, 4, 7)))
+      .flatMap { case (d, stg, rules) =>
+        (Seq("stg_transactions", "stg_passport_blacklist", "stg_terminals")
+          .zip(stg) ++
+          Seq("stg_transactions", "stg_terminals", "stg_passport_blacklist")
+            .map(t => s"CLEAR_$t" -> 0) ++
+          Seq("REP_FRAUD_passport", "REP_FRAUD_contract",
+            "REP_FRAUD_diff_cities", "REP_FRAUD_attempt_amount").zip(rules))
+          .map { case (t, n) => (t, Date.valueOf(d), n, "SUCCESS") }
+      }
+    val got = wh.read(Pipeline.MetaLoading).collect()
+      .map(r => (r.getString(0), r.getDate(1), r.getInt(2), r.getString(3)))
+    assert(got.sortBy(_.toString).toSeq == want.sortBy(_.toString))
+    // the day's counts ran no job of their own: no execution started
+    // from RowCount (its explicit-count fallback), while every fact and
+    // mart write was seen
+    val sites = replaySites.asScala.toSeq
+    assert(sites.count(_.contains("graft.bank.Warehouse.overwritePartitions")) ==
+      2 * days.size, sites.size)
+    assert(!sites.exists(_.contains("graft.bank.RowCount")),
+      sites.filter(_.contains("graft.bank.RowCount")).mkString("\n---\n"))
   }
 }

@@ -31,8 +31,9 @@ class BucketedRulesSpec extends AnyFunSuite {
                    day: Date): (Seq[String], Seq[String]) = {
     val facts = wh.read(Pipeline.FactTransactions)
     val terms = wh.read(Pipeline.DimTerminals)
-    val r3 = rows(FraudRules.rule3(facts, terms, seed, mart, day))
-    val r4 = rows(FraudRules.rule4(facts, terms, seed, mart, day))
+    val both = FraudRules.bandRules(facts, terms, seed, mart, day)
+    val r3 = rows(both.where(col("event_type") === FraudRules.DiffCities))
+    val r4 = rows(both.where(col("event_type") === FraudRules.AmountGuessing))
     assert(r3 == rows(FraudRulesJoinTwin.rule3(facts, terms, seed, mart, day)),
       s"$day: rule 3")
     assert(r4 == rows(FraudRulesJoinTwin.rule4(facts, seed, mart, day)),

@@ -5,7 +5,7 @@ import java.sql.Date
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Reference twin of [[FraudRules.rule3]] and [[FraudRules.rule4]]: the
+/** Reference twin of rules 3 and 4 ([[FraudRules.bandRules]]): the
   * band self-join formulation that re-expresses the reference's
   * statements one for one (`loading_rep_fraud.py:64-129`) — same-card
   * ordered pairs within Δ, the SCD2 as-of residual on both endpoints of

@@ -13,14 +13,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Rules 3/4 as one keyed pass ([[FraudRules.rule3]],
-  * [[FraudRules.rule4]]) against the reference's naive band self-joins
-  * ([[FraudRulesJoinTwin]]): the same rows with the same multiplicities,
-  * in the mart's column order, on hand-built edge cases and on seeded
-  * random days over a few cards and terminals (so timestamps collide,
-  * chains cross hour buckets and midnight, SCD2 versions overlap or
-  * leave gaps, and nulls turn up). BucketedRulesSpec checks the replayed
-  * 3- and 4-day fixture.
+/** Rules 3/4 as one keyed pass ([[FraudRules.bandRules]]) against the
+  * reference's naive band self-joins ([[FraudRulesJoinTwin]]): the same
+  * rows with the same multiplicities, in the mart's column order, on
+  * hand-built edge cases and on seeded random days over a few cards and
+  * terminals (so timestamps collide, chains cross hour buckets and
+  * midnight, SCD2 versions overlap or leave gaps, and nulls turn up).
+  * BucketedRulesSpec checks the replayed 3- and 4-day fixture.
   *
   * The hand-built cases share one master chain: cards K1 and K2 belong
   * to client C1 (passport P1), K3 to C3 (P3); K9's account A9 does not
@@ -118,10 +117,11 @@ class RulesEquivalenceSpec extends AnyFunSuite {
   private def assertSame(facts: DataFrame, termHist: DataFrame,
                          seed: Seeds.Seed, mart: DataFrame, reportDt: Date,
                          clue: String): (Int, Int) = {
-    val got3 = FraudRules.rule3(facts, termHist, seed, mart, reportDt)
+    val both = FraudRules.bandRules(facts, termHist, seed, mart, reportDt)
+    val got3 = both.where(col("event_type") === FraudRules.DiffCities)
     val want3 = FraudRulesJoinTwin.rule3(facts, termHist, seed, mart,
       reportDt)
-    val got4 = FraudRules.rule4(facts, termHist, seed, mart, reportDt)
+    val got4 = both.where(col("event_type") === FraudRules.AmountGuessing)
     val want4 = FraudRulesJoinTwin.rule4(facts, seed, mart, reportDt)
     assert(got3.columns.toSeq == want3.columns.toSeq, clue)
     assert(got4.columns.toSeq == want4.columns.toSeq, clue)

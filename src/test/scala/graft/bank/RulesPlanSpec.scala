@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Attribute, Expres
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{CollectMetricsExec, FileSourceScanExec, QueryExecution, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}
-import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.exchange.{Exchange, REBALANCE_PARTITIONS_BY_NONE, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
@@ -24,11 +24,12 @@ import graft.SparkTestSession
   * (`Pipeline.transactionsDay`, batch, over the committed fixture
   * [[RefFixture]]) plans ONE hash exchange on (card_num, __bucket)
   * feeding the keyed collect and ONE dedup exchange, both computed once
-  * for the two rules (the day's union reuses them), no join on the card
-  * but J6's broadcast of the cards master, and the four rule counters in
-  * the write's result stage. Its Spark job count is pinned too: 12 here,
-  * where the band-join formulation ([[FraudRulesJoinTwin]]: three band
-  * self-joins, two dedups, over a cached fact) ran 22 for this write. */
+  * for the two rules, no join on the card but J6's broadcast of the
+  * cards master, and one counter for the four rules in the write's
+  * result stage, directly above the rebalance that sizes the day's
+  * files. Its Spark job count is pinned too: 12 here, where the
+  * band-join formulation ([[FraudRulesJoinTwin]]: three band self-joins,
+  * two dedups, over a cached fact) ran 22 for this write. */
 class RulesPlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -127,7 +128,7 @@ class RulesPlanSpec extends AnyFunSuite {
     }
   }
 
-  test("one (card_num, __bucket) exchange feeds the keyed pass; one dedup exchange; both reused") {
+  test("one (card_num, __bucket) exchange feeds the keyed pass; one dedup exchange; one counter above the rebalance") {
     val (plan, _) = day3
     val all = nodes(plan)
     val exchanges = all.flatMap(n => hashKeys(n).map(_ -> n))
@@ -155,13 +156,9 @@ class RulesPlanSpec extends AnyFunSuite {
     val dedup = exchanges.collect {
       case (ks, e) if ks.toSet == Set("event_dt", "passport_num") => e }
     assert(dedup.size == 1, plan)
-    // the second rule's branch reads the first one's dedup exchange,
-    // and through it the keyed (card_num, __bucket) exchange
-    val reused = all.collect { case r: ReusedExchangeExec => r.child }
-    assert(reused.exists(c => hashKeys(c).exists(_.toSet ==
-      Set("event_dt", "passport_num"))), plan)
-    // the four rule counters sit in the write's result stage, so each
-    // is observed on the write (no explicit-count fallback)
+    // one counter with the four rule counts sits in the write's result
+    // stage, directly above the rebalance's shuffle, so each count is
+    // observed on the write (no explicit-count fallback)
     def resultStage(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => resultStage(a.executedPlan)
       case _: ShuffleQueryStageExec | _: BroadcastQueryStageExec |
@@ -169,8 +166,19 @@ class RulesPlanSpec extends AnyFunSuite {
       case s: QueryStageExec => resultStage(s.plan)
       case n => n +: n.children.flatMap(resultStage)
     }
-    assert(resultStage(plan).count(_.isInstanceOf[CollectMetricsExec]) == 4,
+    val counters = resultStage(plan).collect { case c: CollectMetricsExec => c }
+    assert(counters.size == 1 && counters.head.metricExpressions.size == 4,
       plan)
+    // the counter's only input is the rebalance's shuffle stage
+    def inputs(p: SparkPlan): Seq[QueryStageExec] = p match {
+      case s: QueryStageExec => Seq(s)
+      case n => n.children.flatMap(inputs)
+    }
+    assert(inputs(counters.head) match {
+      case Seq(s: ShuffleQueryStageExec) =>
+        s.shuffle.shuffleOrigin == REBALANCE_PARTITIONS_BY_NONE
+      case _ => false
+    }, plan)
     // no band self-join: every join keyed on card_num (J6's broadcast of
     // the cards master, once per rule) has the fact on one side only
     val onCard = all.collect { case j: BaseJoinExec

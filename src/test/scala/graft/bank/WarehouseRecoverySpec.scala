@@ -103,26 +103,6 @@ class WarehouseRecoverySpec extends AnyFunSuite {
     // a recover AFTER the append (the old data-loss trigger) is a no-op
     assert(!wh.recover("t"))
     assert(wh.read("t").count() == 2)
-
-    // same hazard for a crashed PER-PARTITION compact + partition write
-    val pdf = Seq((1, "2021-01-01"), (2, "2021-01-02"))
-      .toDF("k", "dt")
-    wh.append("p", pdf, partitionCols = Seq("dt"))
-    val leaf = Paths.get(root, "p", "dt=2021-01-01")
-    val tmpLeaf = Paths.get(root, "p", "_tmppart_dt__EQ__2021-01-01")
-    // committed leaf rewrite beside the intact live leaf (leaf files
-    // carry only the data column; k=10 marks the rewritten version)
-    build.overwrite("p_leafbuild", Seq(10).toDF("k"))
-    Files.move(Paths.get(root, "p_leafbuild"), tmpLeaf)
-    Files.writeString(tmpLeaf.resolve("_COMMITTED"), "")
-    // any entry-point access heals the leaf before touching the table
-    wh.append("p", Seq((3, "2021-01-03")).toDF("k", "dt"),
-      partitionCols = Seq("dt"))
-    assert(!Files.exists(tmpLeaf))
-    assert(Files.exists(leaf))
-    // the rolled-forward leaf content won; the append landed beside it
-    val ks = wh.read("p").select("k").collect().map(_.getInt(0)).toSet
-    assert(ks == Set(10, 2, 3))
   }
 
   test("partitionValues: directory-listing metadata read (ADVICE r14)") {
@@ -131,20 +111,19 @@ class WarehouseRecoverySpec extends AnyFunSuite {
     val wh = new Warehouse(spark, root)
     // absent table: empty, no crash
     assert(wh.partitionValues("f", "dt").isEmpty)
-    wh.append("f", Seq((1, "2021-01-02"), (2, "2021-01-01"),
-        (3, "2021-01-02")).toDF("k", "dt"),
-      partitionCols = Seq("dt"))
+    wh.overwritePartitions("f", Seq((1, "2021-01-02"), (2, "2021-01-01"),
+      (3, "2021-01-02")).toDF("k", "dt"), Seq("dt"))
     assert(wh.partitionValues("f", "dt").sorted ==
       Seq("2021-01-01", "2021-01-02"))
-    // a later append extends the listing; wrong column name: empty
-    wh.append("f", Seq((4, "2021-01-03")).toDF("k", "dt"),
-      partitionCols = Seq("dt"))
+    // a later partition write extends the listing; wrong column name:
+    // empty
+    wh.overwritePartitions("f", Seq((4, "2021-01-03")).toDF("k", "dt"),
+      Seq("dt"))
     assert(wh.partitionValues("f", "dt").sorted ==
       Seq("2021-01-01", "2021-01-02", "2021-01-03"))
     assert(wh.partitionValues("f", "nope").isEmpty)
     // values needing URL decoding round-trip (space in the value)
-    wh.append("g", Seq((1, "a b")).toDF("k", "dt"),
-      partitionCols = Seq("dt"))
+    wh.overwritePartitions("g", Seq((1, "a b")).toDF("k", "dt"), Seq("dt"))
     assert(wh.partitionValues("g", "dt") == Seq("a b"))
   }
 

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.bank.RefFixture
 
-/** The distributed xlsx path: same rows as the driver-side reader,
-  * one partition per file, header-name column resolution, pruning
+/** The distributed xlsx path: same rows as a driver-side parse of each
+  * file ([[Xlsx.readBytes]]), one partition per file, header-name column resolution, pruning
   * pushed into the scan. Inputs are the committed fixture's snapshot
   * drops ([[RefFixture]]; terminals_DDMMYYYY.xlsx — main.py:70). */
 class XlsxDataSourceSpec extends AnyFunSuite {
@@ -31,8 +31,8 @@ class XlsxDataSourceSpec extends AnyFunSuite {
     val df = spark.read.format("xlsx").load(dir)
     val viaDriver = Seq("terminals_01032021.xlsx", "terminals_02032021.xlsx",
       "terminals_03032021.xlsx")
-      .flatMap(n => Xlsx.read(s"$refData/$n").rows.map(
-        r => (n, r.map(_.orNull))))
+      .flatMap(n => Xlsx.readBytes(Files.readAllBytes(Paths.get(refData, n)), n)
+        .rows.map(r => (n, r.map(_.orNull))))
       .toSet
     // resolved paths are scheme-qualified URIs — compare by basename
     val got = df.collect().map(r =>
@@ -75,14 +75,6 @@ class XlsxDataSourceSpec extends AnyFunSuite {
       .map(r => r.getString(0).split('/').last -> r.getLong(1)).toMap
     assert(perFile("passport_blacklist_02032021.xlsx") >=
       perFile("passport_blacklist_01032021.xlsx"))
-  }
-
-  test("readBytes === read on the same file (executor parse path)") {
-    for (n <- Seq("terminals_01032021.xlsx", "passport_blacklist_03032021.xlsx")) {
-      val p = s"$refData/$n"
-      val bytes = Files.readAllBytes(Paths.get(p))
-      assert(Xlsx.readBytes(bytes, n) == Xlsx.read(p))
-    }
   }
 
   test("missing column in a later file fails loudly with path + header") {

@@ -292,10 +292,18 @@ class FraudStreamSpec extends AnyFunSuite {
       s"meta not compacted: ${wh.parquetFileCount(Pipeline.MetaLoading)} files")
     assert(wh.parquetFileCount(Pipeline.FactBlacklist) <= 2,
       s"blacklist not compacted: ${wh.parquetFileCount(Pipeline.FactBlacklist)} files")
-    // the mart is report_dt-partitioned: per-partition compaction
-    // bounds each of the 3 day partitions at perPart=2 files
-    assert(wh.parquetFileCount(Pipeline.RepFraud) <= 6,
-      s"rep_fraud not compacted: ${wh.parquetFileCount(Pipeline.RepFraud)} files")
+    // the mart is never compacted: each day's partition is written once
+    // at its final size, one file at the fixture's volume
+    val martFiles = {
+      val parts = java.nio.file.Files.list(
+        java.nio.file.Paths.get(wh.root, Pipeline.RepFraud))
+      try parts.iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("report_dt="))
+        .map(p => p.getFileName.toString -> p.toFile.list()
+          .count(_.endsWith(".parquet"))).toMap
+      finally parts.close()
+    }
+    assert(martFiles.size == 3 && martFiles.values.forall(_ == 1), martFiles)
     // data survives the rewrite
     assert(wh.read(Pipeline.MetaLoading).count() == meta)
     assert(wh.read(Pipeline.RepFraud).count() == rep)

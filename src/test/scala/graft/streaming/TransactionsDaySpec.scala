@@ -140,12 +140,9 @@ class TransactionsDaySpec extends AnyFunSuite {
     copyDir(Paths.get(sw.root), root)
     val before = fileListing(root.toString)
     // a crash between a swap's delete and its move: META only at its
-    // `.tmp`, one fact leaf only at its `_tmppart_` sibling
+    // `.tmp`
     Files.move(root.resolve(Pipeline.MetaLoading),
       root.resolve(s"${Pipeline.MetaLoading}.tmp"))
-    val fact = root.resolve(Pipeline.FactTransactions)
-    Files.move(fact.resolve("txn_date=2021-03-02"),
-      fact.resolve("_tmppart_txn_date__EQ__2021-03-02"))
     runDays(streamPipe(new Warehouse(spark, root.toString)), days)
     assert(fileListing(root.toString) == before)
   }
@@ -165,8 +162,9 @@ class TransactionsDaySpec extends AnyFunSuite {
         val facts = wh.read(Pipeline.FactTransactions)
         val noMart = wh.read(Pipeline.RepFraud).where(lit(false))
         val terms = wh.read(Pipeline.DimTerminals)
-        val r3 = rowSet(FraudRules.rule3(facts, terms, seed, noMart, day))
-        val r4 = rowSet(FraudRules.rule4(facts, terms, seed, noMart, day))
+        val r34 = FraudRules.bandRules(facts, terms, seed, noMart, day)
+        val r3 = rowSet(ofTypes(r34, Seq(FraudRules.DiffCities)))
+        val r4 = rowSet(ofTypes(r34, Seq(FraudRules.AmountGuessing)))
         // every chain of the run, none dropped by J12
         assert(r3.size == (if (wh eq batch) 1 else 2), day)
         assert(r4.size == 1, day)
