@@ -1,17 +1,17 @@
 package graft.bank
 
-import java.sql.Date
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The four fraud-detection rules (`loading_rep_fraud.py:14-135`),
   * re-expressed as pure DataFrame functions producing REP_FRAUD-shaped
-  * rows (event_dt, passport, fio, phone, event_type, report_dt).
+  * rows (event_dt, passport, fio, phone, event_type); the mart write
+  * adds the day's `report_dt` as the partition directory.
   *
   * Spark-first notes:
-  *  - the cards→accounts→clients chain (J6) is broadcast: the masters
-  *    are tiny dimensions, so the fact scan is never shuffled for them;
+  *  - the cards→accounts→clients chain (J6) is resolved once per seed and
+  *    broadcast, so the fact scan is never shuffled for it;
+  *  - rules 1/2 are one pass over the fact ([[rules12]]);
   *  - the reference's band self-joins (rules 3/4) are one keyed pass
   *    over (card, hour bucket) shared by both rules ([[bandRules]]) —
   *    no join on the card, no cartesian anywhere; the join formulation
@@ -26,30 +26,24 @@ import org.apache.spark.sql.functions._
   */
 object FraudRules {
 
-  private def fio = concat(col("last_name"), lit(" "), col("first_name"),
-    lit(" "), coalesce(col("patronymic"), lit("")))
-
-  /** J6: transactions joined through the master hierarchy; masters are
-    * broadcast. Prefix `t.` columns stay unqualified. */
+  /** J6: transactions joined to their card's account and client, one
+    * broadcast join against the dimension the seed resolved once
+    * ([[Seeds.Seed.cardClients]]). Prefix `t.` columns stay unqualified. */
   private def withClients(txns: DataFrame, seed: Seeds.Seed): DataFrame =
-    txns
-      .join(broadcast(seed.cards.select("card_num", "account")), Seq("card_num"))
-      .join(broadcast(seed.accounts.select("account", "valid_to", "client")),
-        Seq("account"))
-      .join(broadcast(seed.clients), col("client") === col("client_id"))
+    txns.join(broadcast(seed.cardClients), Seq("card_num"))
 
-  private[bank] def out(df: DataFrame, eventDt: Column,
-                  eventType: String, reportDt: Date): DataFrame =
-    df.select(
-      eventDt.as("event_dt"),
-      col("passport_num").as("passport"),
-      fio.as("fio"),
-      col("phone"),
-      lit(eventType).as("event_type"),
-      lit(reportDt).as("report_dt"))
-
-  /** Rule 1 — blocked or expired passport (`loading_rep_fraud.py:15-37`):
-    * expired at transaction time, or blacklisted before it.
+  /** Rules 1 and 2 in one pass over the fact, both event types in one
+    * frame: rule 1, blocked or expired passport
+    * (`loading_rep_fraud.py:15-37`: expired at transaction time, or
+    * blacklisted before it), and rule 2, invalid contract
+    * (`loading_rep_fraud.py:43-58`). Each SUCCESS transaction takes J6
+    * and is judged once per rule (`__rule` 1 and 2).
+    *
+    * Only rule 1 left-joins the blacklist (the join condition carries
+    * `__rule = 1`): as in the reference, a passport listed k times
+    * yields up to k rule-1 rows, one per listing the transaction
+    * follows (or every one, if the passport expired), while the rule-2
+    * row stays one row.
     *
     * The blacklist is CUMULATIVE and grows forever, so a static
     * `broadcast()` hint is an eventual driver OOM (SCALING.md measured
@@ -59,25 +53,22 @@ object FraudRules {
     * and plans a shuffle join above it — the plan a years-old blacklist
     * needs anyway; adaptive execution can still demote that join to a
     * broadcast once the shuffled side turns out small. */
-  def rule1(txns: DataFrame, blacklist: DataFrame, seed: Seeds.Seed,
-            reportDt: Date): DataFrame = {
+  def rules12(txns: DataFrame, blacklist: DataFrame,
+              seed: Seeds.Seed): DataFrame = {
     val bl = blacklist.select(col("passport").as("bl_passport"),
       col("date").as("bl_date"))
-    val joined = withClients(txns, seed)
-      .join(bl, col("passport_num") === col("bl_passport"), "left")
-      .where((col("passport_valid_to") < to_date(col("transaction_date")) ||
-        (col("bl_passport").isNotNull &&
-          to_date(col("transaction_date")) > col("bl_date"))) &&
-        col("oper_result") === "SUCCESS")
-    out(joined, col("transaction_date"), BlockedPassport, reportDt)
-  }
-
-  /** Rule 2 — invalid contract (`loading_rep_fraud.py:43-58`). */
-  def rule2(txns: DataFrame, seed: Seeds.Seed, reportDt: Date): DataFrame = {
-    val joined = withClients(txns, seed)
-      .where(to_date(col("transaction_date")) > col("valid_to") &&
-        col("oper_result") === "SUCCESS")
-    out(joined, col("transaction_date"), InvalidContract, reportDt)
+    val day = to_date(col("transaction_date"))
+    val rule1 = col("__rule") === 1
+    withClients(txns.where(col("oper_result") === "SUCCESS"), seed)
+      .select(col("*"), explode(array(lit(1), lit(2))).as("__rule"))
+      .join(bl, col("passport_num") === col("bl_passport") && rule1, "left")
+      .where(when(rule1, col("passport_valid_to") < day ||
+          (col("bl_passport").isNotNull && day > col("bl_date")))
+        .otherwise(day > col("valid_to")))
+      .select(col("transaction_date").as("event_dt"),
+        col("passport_num").as("passport"), col("fio"), col("phone"),
+        when(rule1, lit(BlockedPassport)).otherwise(lit(InvalidContract))
+          .as("event_type"))
   }
 
   /** The four rules' `event_type` values, in reference order. */
@@ -106,12 +97,15 @@ object FraudRules {
     *     a strict predecessor within Δ = 1 h has a non-null city other
     *     than r's; rule 4 if two REJECTs p₁ before p₂ lie within
     *     Δ = 20 min before r with amount(p₁) > amount(p₂) > amount(r).
-    *  4. The hits take the J6 client chain ([[withClients]]; per card,
-    *     so joining after the verdicts changes none), and
+    *  4. The hits take J6's passport ([[withClients]]; per card, so
+    *     joining after the verdicts changes none), and
     *     `DISTINCT ON (event_dt, passport)` per rule (SURVEY §7 quirk 2)
-    *     is one aggregate that carries both rule flags; each flag then
-    *     yields its event type, and J12 drops what the mart already
-    *     holds.
+    *     is one aggregate that carries both rule flags and, as the
+    *     group's representative, its least J6 row (`j6_row`), whose
+    *     `fio` and `phone` it then takes; each flag yields its event
+    *     type, and J12 drops what the mart already holds. The aggregate
+    *     holds booleans and a number only, so it runs as generated
+    *     hash-aggregate code, without sorting the hits.
     *
     * So the day plans one (card, bucket) exchange and one dedup
     * exchange for both rules. The keyed collect is the mechanism of the
@@ -127,7 +121,7 @@ object FraudRules {
     * for rule 4's REJECT pairs): the pairs the Δ-bucketed band join
     * enumerated for the same group. */
   def bandRules(txns: DataFrame, termHist: DataFrame, seed: Seeds.Seed,
-                repFraud: DataFrame, reportDt: Date): DataFrame = {
+                repFraud: DataFrame): DataFrame = {
     val hourUs = 3600L * 1000000L
     val guessUs = 1200L * 1000000L
     val cities = termHist.select(col("terminal_id"), col("terminal_city"),
@@ -168,16 +162,17 @@ object FraudRules {
       .where(col("__r3") || col("__r4"))
     withClients(hits, seed)
       .groupBy(col("event_dt"), col("passport_num").as("passport"))
-      .agg(first(fio).as("fio"), first("phone").as("phone"),
-        bool_or(col("__r3")).as("__r3"), bool_or(col("__r4")).as("__r4"))
-      .select(col("event_dt"), col("passport"), col("fio"), col("phone"),
-        explode(array_compact(array(when(col("__r3"), lit(DiffCities)),
-          when(col("__r4"), lit(AmountGuessing))))).as("event_type"),
-        lit(reportDt).as("report_dt"))
+      .agg(min("j6_row").as("j6_row"), bool_or(col("__r3")).as("__r3"),
+        bool_or(col("__r4")).as("__r4"))
+      .select(col("event_dt"), col("passport"), col("j6_row"),
+        explode(array(when(col("__r3"), lit(DiffCities)),
+          when(col("__r4"), lit(AmountGuessing)))).as("event_type"))
+      .where(col("event_type").isNotNull)
+      .join(broadcast(seed.cardClients.select("j6_row", "fio", "phone")),
+        Seq("j6_row"))
       .join(repFraud.where(col("event_type").isin(DiffCities, AmountGuessing))
         .select("passport", "event_dt", "event_type"),
         Seq("passport", "event_dt", "event_type"), "left_anti")
-      .select("event_dt", "passport", "fio", "phone", "event_type",
-        "report_dt")
+      .select("event_dt", "passport", "fio", "phone", "event_type")
   }
 }

@@ -4,7 +4,7 @@ import java.sql.Date
 
 import graft.bank.Warehouse.Meta
 import graft.operators.Cdc
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The daily cycle, reference order (`main.py:85-117`): ingest 3 files
@@ -52,8 +52,8 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
   /** The post-ingest daily cycle over typed staging frames: blacklist
     * fact → SCD2 terminals → [[Pipeline.transactionsDay]]. `txns` must
     * hold the rows of `day` only ([[Ingest.transactions]] enforces it for
-    * a file): the fact lands as a dynamic overwrite of the partitions the
-    * rows fall in.
+    * a file): the fact lands as the overwrite of partition `txn_date=day`,
+    * and [[transactionsDay]] fails the day if a row held another date.
     *
     * The whole day is exactly-once:
     *
@@ -87,7 +87,6 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
                    terminals: DataFrame, day: Date,
                    failpoint: String => Unit = _ => ()): Unit = {
     val dayRows = txns.select(FactColumns.map(col): _*)
-      .withColumn("txn_date", to_date(col("transaction_date")))
     if (completed(wh, day)) {
       requireSameDay(day, dayRows)
       return
@@ -140,7 +139,7 @@ final class Pipeline(wh: Warehouse, seed: Seeds.Seed,
     * decimal(38,0), which cannot overflow at any realistic day size. */
   private def requireSameDay(day: Date, dayRows: DataFrame): Unit = {
     def sig(df: DataFrame): (Long, Long, String) = {
-      val hash = s"xxhash64(${(FactColumns :+ "txn_date").mkString(", ")})"
+      val hash = s"xxhash64(${FactColumns.mkString(", ")})"
       val r = df.agg(count(lit(1)),
         expr(s"bit_xor($hash)"),
         expr(s"cast(sum(cast($hash as decimal(38,0))) as string)")).head()
@@ -162,12 +161,13 @@ object Pipeline {
 
   /** The transactions half of [[Pipeline.runDayStaged]], in order:
     *
-    *  1. `dayRows` (fact columns plus `txn_date`) land as a dynamic
-    *     overwrite of their `txn_date` partition, which yields the
-    *     staging count ([[RowCount]]); then `failpoint("fact_overwrite")`;
+    *  1. `dayRows` overwrite the partition `txn_date=<day>`, which
+    *     yields the staging count ([[RowCount]]) and the rows' first and
+    *     last date: another date fails the day before the mart and META
+    *     are written; then `failpoint("fact_overwrite")`;
     *  2. the four fraud rules run over [[ruleFacts]] as one frame,
-    *     `rule1 ∪ rule2 ∪ bandRules`, behind one rebalance, and land as
-    *     ONE dynamic overwrite of `report_dt=<day>`; then
+    *     `rules12 ∪ bandRules`, behind one rebalance, and land as ONE
+    *     overwrite of the partition `report_dt=<day>`; then
     *     `failpoint("mart_overwrite")`. Adaptive execution sizes the
     *     rebalanced output to its advisory partition size, so the day's
     *     partition gets its file count at this one write (one file at the
@@ -203,21 +203,26 @@ object Pipeline {
   private[graft] def transactionsDay(wh: Warehouse, seed: Seeds.Seed,
       day: Date, dayRows: DataFrame, incremental: Boolean,
       extraMeta: Seq[Meta], failpoint: String => Unit = _ => ()): Unit = {
-    val (factRows, Seq(nTxns)) = RowCount.observe(dayRows,
+    val dates = Observation()
+    val date = to_date(col("transaction_date"))
+    val (factRows, Seq(nTxns)) = RowCount.observe(dayRows.observe(dates,
+      min(date).as("first"), max(date).as("last")),
       Seq("stg_transactions" -> lit(true)))(identity)
-    wh.overwritePartitions(FactTransactions, factRows, Seq("txn_date"))
+    wh.overwritePartitions(FactTransactions, factRows, "txn_date" -> day.toString)
+    val landed = Seq("first", "last").map(dates.get.get(_).orNull)
+    require(landed.forall(d => d == null || d.toString == day.toString),
+      s"the transactions of $day hold dates ${landed.mkString(" to ")}")
     failpoint("fact_overwrite")
     val (facts, facts12) = ruleFacts(wh, day, incremental)
     val repBefore =
       wh.readOr(RepFraud).where(col("report_dt") =!= lit(day))
-    val rules = FraudRules.rule1(facts12, wh.readOr(FactBlacklist), seed, day)
-      .unionByName(FraudRules.rule2(facts12, seed, day))
+    val rules = FraudRules.rules12(facts12, wh.readOr(FactBlacklist), seed)
       .unionByName(FraudRules.bandRules(facts, wh.readOr(DimTerminals), seed,
-        repBefore, day))
+        repBefore))
     val (mart, ruleCounts) = RowCount.observe(rules.hint("rebalance"),
       RuleEventTypes.map { case (l, t) => l -> (col("event_type") === t) })(
       identity)
-    wh.overwritePartitions(RepFraud, mart, Seq("report_dt"))
+    wh.overwritePartitions(RepFraud, mart, "report_dt" -> day.toString)
     failpoint("mart_overwrite")
     wh.logMeta((Meta("stg_transactions", day, nTxns.get()) +: extraMeta) ++
       ruleCounts.map(n => Meta(n.label, day, n.get())))

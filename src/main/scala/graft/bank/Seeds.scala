@@ -4,19 +4,43 @@ import java.sql.Date
 
 import scala.collection.mutable.ArrayBuffer
 import scala.io.Source
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, IntegerType, StructType}
 
 /** Loader for the reference's pre-seeded "Oracle-sourced" master tables
   * (cards / accounts / clients) from its `data/ddl_dml.sql` single-row
   * INSERT statements (`ddl_dml.sql:7-12,606-612,776-787`). Data-only
   * ingestion of a public fixture — the DDL itself is re-declared in
-  * [[Schemas]].
+  * [[Schemas]]. The masters are local relations: they are read once,
+  * and a plan over them carries their rows instead of a scan.
   */
 object Seeds {
 
-  final case class Seed(cards: DataFrame, accounts: DataFrame, clients: DataFrame)
+  final case class Seed(cards: DataFrame, accounts: DataFrame, clients: DataFrame) {
+
+    /** J6 resolved once (`loading_rep_fraud.py`'s cards → accounts →
+      * clients inner joins): one row per (card, account, client) match,
+      * numbered by `j6_row`, with the columns the fraud rules read and
+      * the client's `fio`, as a local relation. The masters never change
+      * during a run, so each rule broadcasts these rows instead of
+      * planning the chain of three joins again every day. */
+    lazy val cardClients: DataFrame = {
+      val joined = cards.select("card_num", "account")
+        .join(accounts.select("account", "valid_to", "client"), Seq("account"))
+        .join(clients, col("client") === col("client_id"))
+        .select(col("card_num"), col("valid_to"), col("passport_num"),
+          col("passport_valid_to"),
+          concat(col("last_name"), lit(" "), col("first_name"), lit(" "),
+            coalesce(col("patronymic"), lit(""))).as("fio"),
+          col("phone"))
+      cards.sparkSession.createDataFrame(joined.collect().toSeq.zipWithIndex
+        .map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }.asJava,
+        joined.schema.add("j6_row", IntegerType, nullable = false))
+    }
+  }
 
   def load(spark: SparkSession, ddlDmlPath: String): Seed = {
     val src = Source.fromFile(ddlDmlPath, "UTF-8")
@@ -34,7 +58,7 @@ object Seeds {
           }
         })
       }
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      spark.createDataFrame(rows.asJava, schema)
     }
     Seed(
       cards = table("cards", Schemas.cards),

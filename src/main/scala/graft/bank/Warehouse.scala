@@ -5,13 +5,14 @@ import java.sql.Date
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
 
 /** Parquet-backed warehouse layer: the Spark replacement for the
   * reference's PostgreSQL schema (`comm_funcs.py:10`). Tables live as
   * parquet directories under a root. Facts and the mart land as
   * day-partition overwrites ([[overwritePartitions]]), each partition
-  * written once at its final file count; the blacklist fact and the
+  * written once, into its own directory, at its final file count; the blacklist fact and the
   * audit log append unpartitioned ([[append]]) and compact behind
   * ([[compactIfFragmented]]); dimensions swap atomically (write-new →
   * move), since Spark cannot overwrite a table it is currently reading
@@ -159,26 +160,23 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Replace exactly the partitions PRESENT IN `df`, leaving all other
-    * partitions of the table untouched (Spark's dynamic partition
-    * overwrite). This is the idempotent write primitive for the
-    * day-partitioned fact and mart: a replayed day re-derives the same
-    * rows and overwrites its own partition with identical content —
-    * append would double it. It is also the partition's ONLY write: the
-    * caller sizes its files here (the mart rebalances,
-    * [[Pipeline.transactionsDay]]), and no compaction rewrites a
-    * partition afterwards. The per-partition delete-then-write is not
-    * atomic; a crash mid-write is healed by the replay itself (same day,
-    * same partition, rewritten whole). */
+  /** Replace the partition `column=value` with `df` (no partition column:
+    * the value is the directory, so no generated code carries it) — the
+    * idempotent write primitive for the day-partitioned fact and mart: a
+    * replayed day re-derives the same rows and overwrites its own
+    * partition with identical content — append would double it. It is
+    * also the partition's ONLY write: the caller sizes its files here
+    * (the mart rebalances, [[Pipeline.transactionsDay]]), and no
+    * compaction rewrites a partition afterwards. The delete-then-write
+    * is not atomic; a crash mid-write is healed by the replay itself
+    * (same day, same partition, rewritten whole). */
   def overwritePartitions(name: String, df: DataFrame,
-                          partitionCols: Seq[String]): Unit = {
-    require(partitionCols.nonEmpty,
-      "overwritePartitions needs partition columns; use overwrite for whole-table swap")
+                          partition: (String, String)): Unit = {
     heal(name)
-    df.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(dir(name).toString)
+    val (column, value) = partition
+    df.write.mode(SaveMode.Overwrite).parquet(dir(name)
+      .resolve(ExternalCatalogUtils.getPartitionPathString(column, value))
+      .toString)
   }
 
   def drop(name: String): Unit = deleteRecursive(dir(name))

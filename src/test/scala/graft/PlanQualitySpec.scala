@@ -28,8 +28,8 @@ class PlanQualitySpec extends AnyFunSuite {
     val wh = new graft.bank.Warehouse(spark, root)
     Seq("2021-03-01", "2021-03-02", "2021-03-03").foreach { d =>
       wh.overwritePartitions(graft.bank.Pipeline.FactTransactions,
-        spark.range(10).select(col("id").cast("string").as("transaction_id"),
-          lit(java.sql.Date.valueOf(d)).as("txn_date")), Seq("txn_date"))
+        spark.range(10).select(col("id").cast("string").as("transaction_id")),
+        "txn_date" -> d)
     }
     // the read shape of the streaming day's rules-1/2 input
     // (Pipeline.ruleFacts): day filter on the partition col
@@ -55,8 +55,8 @@ class PlanQualitySpec extends AnyFunSuite {
     val wh = new graft.bank.Warehouse(spark, root)
     Seq("2021-03-01", "2021-03-02", "2021-03-03").foreach { d =>
       wh.overwritePartitions(graft.bank.Pipeline.FactTransactions,
-        spark.range(10).select(col("id").cast("string").as("transaction_id"),
-          lit(java.sql.Date.valueOf(d)).as("txn_date")), Seq("txn_date"))
+        spark.range(10).select(col("id").cast("string").as("transaction_id")),
+        "txn_date" -> d)
     }
     // the read shape of ruleFacts' streaming rules-3/4 window:
     // BETWEEN [day−1, day] on the partition column
@@ -77,8 +77,8 @@ class PlanQualitySpec extends AnyFunSuite {
     val wh = new graft.bank.Warehouse(spark, root)
     Seq("2021-03-01", "2021-03-02", "2021-03-03", "2021-03-04").foreach { d =>
       wh.overwritePartitions(graft.bank.Pipeline.FactTransactions,
-        spark.range(10).select(col("id").cast("string").as("transaction_id"),
-          lit(java.sql.Date.valueOf(d)).as("txn_date")), Seq("txn_date"))
+        spark.range(10).select(col("id").cast("string").as("transaction_id")),
+        "txn_date" -> d)
     }
     // ruleFacts in the streaming day's plan: the rules-3/4 frame must be
     // a partition-pruned [day-1, day] read — 2 of 4 partitions
@@ -120,9 +120,8 @@ class PlanQualitySpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("pq_rule1").toString)
     wh.append(Pipeline.FactBlacklist,
       Seq((d("2021-01-01"), "P1")).toDF("date", "passport"))
-    val day = d("2021-03-01")
-    def blJoins(): Seq[String] = FraudRules.rule1(txns,
-        wh.read(Pipeline.FactBlacklist), seed, day)
+    def blJoins(): Seq[String] = FraudRules.rules12(txns,
+        wh.read(Pipeline.FactBlacklist), seed)
       .queryExecution.executedPlan.toString.linesIterator
       .filter(l => l.contains("bl_passport") && l.contains("Join")).toSeq
     // under the threshold: the blacklist ships broadcast on its estimate
@@ -253,14 +252,20 @@ class PlanQualitySpec extends AnyFunSuite {
     import org.apache.spark.sql.Row
     def empty(schema: org.apache.spark.sql.types.StructType) =
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    // one J6 match: the seed's dimension is a local relation, and an
+    // empty one would let the optimizer fold the whole plan away
+    def one(schema: org.apache.spark.sql.types.StructType, vals: Any*) =
+      spark.createDataFrame(java.util.List.of(Row(vals: _*)), schema)
+    val d = java.sql.Date.valueOf("2020-01-01")
     val seed = graft.bank.Seeds.Seed(
-      cards = empty(graft.bank.Schemas.cards),
-      accounts = empty(graft.bank.Schemas.accounts),
-      clients = empty(graft.bank.Schemas.clients))
+      cards = one(graft.bank.Schemas.cards, "1111", "A1", d, d),
+      accounts = one(graft.bank.Schemas.accounts, "A1", d, "C1", d, d),
+      clients = one(graft.bank.Schemas.clients, "C1", "L", "F", "P", d,
+        "P1", d, "+7", d, d))
     val p = graft.bank.FraudRules.bandRules(
       empty(graft.bank.Schemas.factTransactions),
       empty(graft.bank.Schemas.dimTerminalsHist), seed,
-      empty(graft.bank.Schemas.repFraud), java.sql.Date.valueOf("2021-03-01"))
+      empty(graft.bank.Schemas.repFraud))
       .queryExecution.executedPlan.toString
     assert(p.contains("__bucket"), s"rules 3/4 lost the bucketed plan: $p")
     assert(!p.contains("CartesianProduct"), p)

@@ -31,12 +31,12 @@ class BucketedRulesSpec extends AnyFunSuite {
                    day: Date): (Seq[String], Seq[String]) = {
     val facts = wh.read(Pipeline.FactTransactions)
     val terms = wh.read(Pipeline.DimTerminals)
-    val both = FraudRules.bandRules(facts, terms, seed, mart, day)
+    val both = FraudRules.bandRules(facts, terms, seed, mart)
     val r3 = rows(both.where(col("event_type") === FraudRules.DiffCities))
     val r4 = rows(both.where(col("event_type") === FraudRules.AmountGuessing))
-    assert(r3 == rows(FraudRulesJoinTwin.rule3(facts, terms, seed, mart, day)),
+    assert(r3 == rows(FraudRulesJoinTwin.rule3(facts, terms, seed, mart)),
       s"$day: rule 3")
-    assert(r4 == rows(FraudRulesJoinTwin.rule4(facts, seed, mart, day)),
+    assert(r4 == rows(FraudRulesJoinTwin.rule4(facts, seed, mart)),
       s"$day: rule 4")
     (r3, r4)
   }

@@ -1,8 +1,6 @@
 package graft.bank
 
-import java.sql.Date
-
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Reference twin of rules 3 and 4 ([[FraudRules.bandRules]]): the
@@ -39,7 +37,7 @@ object FraudRulesJoinTwin {
     * Postgres compares timestamp to date at midnight; `effective_to`
     * (a date) is cast to timestamp for the BETWEEN bound. */
   def rule3(txns: DataFrame, termHist: DataFrame, seed: Seeds.Seed,
-            repFraud: DataFrame, reportDt: Date): DataFrame = {
+            repFraud: DataFrame): DataFrame = {
     val pairs = bandPairs(sided(txns, 1), sided(txns, 2), 1, 2,
       3600L * 1000000L)
     def th(n: Int): DataFrame = termHist.columns.foldLeft(termHist)(
@@ -53,12 +51,9 @@ object FraudRulesJoinTwin {
         col("transaction_date_2") <= col("effective_to_h2").cast("timestamp"))
       .where(col("terminal_city_h1") =!= col("terminal_city_h2") &&
         col("oper_result_2") === "SUCCESS")
-    val enriched = located
-      .join(broadcast(seed.cards.select("card_num", "account")), Seq("card_num"))
-      .join(broadcast(seed.accounts.select("account", "client")), Seq("account"))
-      .join(broadcast(seed.clients), col("client") === col("client_id"))
-    val candidates = FraudRules.out(enriched, col("transaction_date_2"),
-      "ops in diff cities less one hour", reportDt)
+    val enriched = located.join(broadcast(seed.cardClients), Seq("card_num"))
+    val candidates = out(enriched, col("transaction_date_2"),
+      "ops in diff cities less one hour")
       .dropDuplicates("event_dt", "passport")
     antiJoinExisting(candidates, repFraud, "ops in diff cities less one hour")
   }
@@ -66,8 +61,8 @@ object FraudRulesJoinTwin {
   /** Rule 4 — amount guessing (`loading_rep_fraud.py:98-129`):
     * REJECT → REJECT → SUCCESS with strictly decreasing amounts, all
     * gaps and the total span under 20 minutes. */
-  def rule4(txns: DataFrame, seed: Seeds.Seed, repFraud: DataFrame,
-            reportDt: Date): DataFrame = {
+  def rule4(txns: DataFrame, seed: Seeds.Seed,
+            repFraud: DataFrame): DataFrame = {
     val limit = 1200L * 1000000L
     def us(n: Int) = unix_micros(col(s"transaction_date_$n"))
     val chain = bandPairs(
@@ -79,15 +74,17 @@ object FraudRulesJoinTwin {
         col("amount_1") > col("amount_2") &&
         col("amount_2") > col("amount_3") &&
         us(3) - us(1) < limit)
-    val enriched = chain
-      .join(broadcast(seed.cards.select("card_num", "account")), Seq("card_num"))
-      .join(broadcast(seed.accounts.select("account", "client")), Seq("account"))
-      .join(broadcast(seed.clients), col("client") === col("client_id"))
-    val candidates = FraudRules.out(enriched, col("transaction_date_3"),
-      "amount guessing", reportDt)
+    val enriched = chain.join(broadcast(seed.cardClients), Seq("card_num"))
+    val candidates = out(enriched, col("transaction_date_3"),
+      "amount guessing")
       .dropDuplicates("event_dt", "passport")
     antiJoinExisting(candidates, repFraud, "amount guessing")
   }
+
+  private def out(df: DataFrame, eventDt: Column,
+                  eventType: String): DataFrame =
+    df.select(eventDt.as("event_dt"), col("passport_num").as("passport"),
+      col("fio"), col("phone"), lit(eventType).as("event_type"))
 
   /** J12: drop candidates already reported with the same passport,
     * event_dt and event_type (`loading_rep_fraud.py:86-91,123-128`). */
@@ -97,5 +94,5 @@ object FraudRulesJoinTwin {
       repFraud.where(col("event_type") === eventType)
         .select("passport", "event_dt"),
       Seq("passport", "event_dt"), "left_anti")
-      .select("event_dt", "passport", "fio", "phone", "event_type", "report_dt")
+      .select("event_dt", "passport", "fio", "phone", "event_type")
 }

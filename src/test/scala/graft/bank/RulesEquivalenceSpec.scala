@@ -115,14 +115,13 @@ class RulesEquivalenceSpec extends AnyFunSuite {
   /** Production against the twin's naive plan on one input; returns the
     * (rule 3, rule 4) row counts. */
   private def assertSame(facts: DataFrame, termHist: DataFrame,
-                         seed: Seeds.Seed, mart: DataFrame, reportDt: Date,
+                         seed: Seeds.Seed, mart: DataFrame,
                          clue: String): (Int, Int) = {
-    val both = FraudRules.bandRules(facts, termHist, seed, mart, reportDt)
+    val both = FraudRules.bandRules(facts, termHist, seed, mart)
     val got3 = both.where(col("event_type") === FraudRules.DiffCities)
-    val want3 = FraudRulesJoinTwin.rule3(facts, termHist, seed, mart,
-      reportDt)
+    val want3 = FraudRulesJoinTwin.rule3(facts, termHist, seed, mart)
     val got4 = both.where(col("event_type") === FraudRules.AmountGuessing)
-    val want4 = FraudRulesJoinTwin.rule4(facts, seed, mart, reportDt)
+    val want4 = FraudRulesJoinTwin.rule4(facts, seed, mart)
     assert(got3.columns.toSeq == want3.columns.toSeq, clue)
     assert(got4.columns.toSeq == want4.columns.toSeq, clue)
     val (r3, r4) = (rows(got3), rows(got4))
@@ -134,7 +133,7 @@ class RulesEquivalenceSpec extends AnyFunSuite {
   private def assertCase(clue: String, txns: Seq[Txn], want: (Int, Int),
                          mart: Seq[Reported] = Nil): Unit = {
     val (f, h, s, m) = frames(txns, versions, masters, mart)
-    assert(assertSame(f, h, s, m, day, clue) == want, clue)
+    assert(assertSame(f, h, s, m, clue) == want, clue)
   }
 
   private def t(id: String, ts: String, card: String, res: String,
@@ -301,7 +300,7 @@ class RulesEquivalenceSpec extends AnyFunSuite {
           (ts, s"P${rnd.nextInt(3)}", pick(Seq(Diff, Guess))))
       }
       val (f, h, s, r) = frames(txns, hist, m, mart)
-      assertSame(f, h, s, r, day, s"trial $trial")
+      assertSame(f, h, s, r, s"trial $trial")
     }
     // the draws exercise both rules
     assert(hits.map(_._1).sum > 0 && hits.map(_._2).sum > 0, hits)

@@ -31,7 +31,7 @@ class StreamingFraudSpec extends AnyFunSuite {
       RefFixture.dataDir, "transactions_03032021.txt")
     val copy = work.resolve("txns.txt")
     java.nio.file.Files.copy(src, copy)
-    val (txns, day) = Ingest.transactions(spark, copy.toString)
+    val (txns, _) = Ingest.transactions(spark, copy.toString)
     val seed = Seeds.load(spark, RefFixture.seedSql)
     // day-3 cumulative blacklist, read via the xlsx source
     val bl = Ingest.blacklist(spark,
@@ -50,13 +50,13 @@ class StreamingFraudSpec extends AnyFunSuite {
       .withColumn("amount", col("amount").cast("double")).as[StreamTxn]
       .collect().take(4000)
 
-    val expected = FraudRules.rule1(
-        typed(sample.toSeq.toDF()), blDf, seed, day)
+    val expected = FraudRules.rules12(
+        typed(sample.toSeq.toDF()), blDf, seed)
       .collect().map(_.toString).sorted.toSeq
     assert(expected.nonEmpty, "day-3 fixture must produce rule-1 hits")
 
     val mem = MemoryStream[StreamTxn]
-    val q = FraudRules.rule1(typed(mem.toDF()), blDf, seed, day)
+    val q = FraudRules.rules12(typed(mem.toDF()), blDf, seed)
       .writeStream.outputMode("append")
       .format("memory").queryName("rule1_stream").start()
     // halves: two non-empty micro-batches whatever the file's size

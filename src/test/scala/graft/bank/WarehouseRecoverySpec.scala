@@ -111,19 +111,18 @@ class WarehouseRecoverySpec extends AnyFunSuite {
     val wh = new Warehouse(spark, root)
     // absent table: empty, no crash
     assert(wh.partitionValues("f", "dt").isEmpty)
-    wh.overwritePartitions("f", Seq((1, "2021-01-02"), (2, "2021-01-01"),
-      (3, "2021-01-02")).toDF("k", "dt"), Seq("dt"))
+    wh.overwritePartitions("f", Seq(1, 3).toDF("k"), "dt" -> "2021-01-02")
+    wh.overwritePartitions("f", Seq(2).toDF("k"), "dt" -> "2021-01-01")
     assert(wh.partitionValues("f", "dt").sorted ==
       Seq("2021-01-01", "2021-01-02"))
     // a later partition write extends the listing; wrong column name:
     // empty
-    wh.overwritePartitions("f", Seq((4, "2021-01-03")).toDF("k", "dt"),
-      Seq("dt"))
+    wh.overwritePartitions("f", Seq(4).toDF("k"), "dt" -> "2021-01-03")
     assert(wh.partitionValues("f", "dt").sorted ==
       Seq("2021-01-01", "2021-01-02", "2021-01-03"))
     assert(wh.partitionValues("f", "nope").isEmpty)
     // values needing URL decoding round-trip (space in the value)
-    wh.overwritePartitions("g", Seq((1, "a b")).toDF("k", "dt"), Seq("dt"))
+    wh.overwritePartitions("g", Seq(1).toDF("k"), "dt" -> "a b")
     assert(wh.partitionValues("g", "dt") == Seq("a b"))
   }
 

@@ -50,7 +50,7 @@ class Scd2PropertySpec extends AnyFunSuite {
         // lineage (histories are a handful of rows; letting the plan tree
         // stack 32 scd2Apply layers made Catalyst re-optimization the
         // dominant cost and thrashed execution memory in the full suite).
-        val applied = Cdc.scd2ApplySane(hist, snapDf(snap), day, "k", Seq("a"))
+        val applied = Scd2Sane.scd2ApplySane(hist, snapDf(snap), day, "k", Seq("a"))
         hist = histDf(applied.collect().toSeq)
         day = new Date(day.getTime + 86400000L)
       }

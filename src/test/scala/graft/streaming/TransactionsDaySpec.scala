@@ -162,7 +162,7 @@ class TransactionsDaySpec extends AnyFunSuite {
         val facts = wh.read(Pipeline.FactTransactions)
         val noMart = wh.read(Pipeline.RepFraud).where(lit(false))
         val terms = wh.read(Pipeline.DimTerminals)
-        val r34 = FraudRules.bandRules(facts, terms, seed, noMart, day)
+        val r34 = FraudRules.bandRules(facts, terms, seed, noMart)
         val r3 = rowSet(ofTypes(r34, Seq(FraudRules.DiffCities)))
         val r4 = rowSet(ofTypes(r34, Seq(FraudRules.AmountGuessing)))
         // every chain of the run, none dropped by J12
@@ -170,9 +170,9 @@ class TransactionsDaySpec extends AnyFunSuite {
         assert(r4.size == 1, day)
         // production against the band-join twin's naive plan
         assert(r3 == rowSet(FraudRulesJoinTwin.rule3(facts, terms, seed,
-          noMart, day)), day)
-        assert(r4 == rowSet(FraudRulesJoinTwin.rule4(facts, seed, noMart,
-          day)), day)
+          noMart)), day)
+        assert(r4 == rowSet(FraudRulesJoinTwin.rule4(facts, seed, noMart)),
+          day)
       }
   }
 }
