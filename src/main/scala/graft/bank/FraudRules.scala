@@ -37,7 +37,9 @@ object FraudRules {
     * (`loading_rep_fraud.py:15-37`: expired at transaction time, or
     * blacklisted before it), and rule 2, invalid contract
     * (`loading_rep_fraud.py:43-58`). Each SUCCESS transaction takes J6
-    * and is judged once per rule (`__rule` 1 and 2).
+    * and is judged for rule 1 (`__rule` 1); one whose contract expired
+    * before its day is also a rule-2 row (`__rule` 2), so the fact side
+    * of the blacklist join stays about one row per transaction.
     *
     * Only rule 1 left-joins the blacklist (the join condition carries
     * `__rule = 1`): as in the reference, a passport listed k times
@@ -60,11 +62,11 @@ object FraudRules {
     val day = to_date(col("transaction_date"))
     val rule1 = col("__rule") === 1
     withClients(txns.where(col("oper_result") === "SUCCESS"), seed)
-      .select(col("*"), explode(array(lit(1), lit(2))).as("__rule"))
+      .select(col("*"), explode(when(day > col("valid_to"),
+        array(lit(1), lit(2))).otherwise(array(lit(1)))).as("__rule"))
       .join(bl, col("passport_num") === col("bl_passport") && rule1, "left")
-      .where(when(rule1, col("passport_valid_to") < day ||
-          (col("bl_passport").isNotNull && day > col("bl_date")))
-        .otherwise(day > col("valid_to")))
+      .where(!rule1 || col("passport_valid_to") < day ||
+        (col("bl_passport").isNotNull && day > col("bl_date")))
       .select(col("transaction_date").as("event_dt"),
         col("passport_num").as("passport"), col("fio"), col("phone"),
         when(rule1, lit(BlockedPassport)).otherwise(lit(InvalidContract))

@@ -27,25 +27,19 @@ object FraudScoring {
   def trainingFrame(facts: DataFrame, repFraud: DataFrame,
                     blacklist: DataFrame, seed: Seeds.Seed): DataFrame = {
     val labels = repFraud
-      .join(broadcast(seed.clients.select("client_id", "passport_num")),
+      .join(broadcast(seed.cardClients.select("card_num", "passport_num")),
         repFraud("passport") === col("passport_num"))
-      .join(broadcast(seed.accounts.select("account", "client")),
-        col("client") === col("client_id"))
-      .join(broadcast(seed.cards.select("card_num", "account")), Seq("account"))
       .select(col("card_num").as("l_card"), col("event_dt"))
       .distinct()
 
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("card_num").orderBy("transaction_date")
     facts
-      // client-state features via the broadcast master chain: the same
-      // lookups the rules use, expressed as continuous distances
-      .join(broadcast(seed.cards.select("card_num", "account")), Seq("card_num"))
-      .join(broadcast(seed.accounts.select(col("account"),
-        col("valid_to").as("contract_valid_to"), col("client"))), Seq("account"))
-      .join(broadcast(seed.clients.select(col("client_id"),
-        col("passport_num"), col("passport_valid_to"))),
-        col("client") === col("client_id"))
+      // client-state features via the rules' J6 dimension
+      // ([[Seeds.Seed.cardClients]]), expressed as continuous distances
+      .join(broadcast(seed.cardClients.select(col("card_num"),
+        col("valid_to").as("contract_valid_to"), col("passport_num"),
+        col("passport_valid_to"))), Seq("card_num"))
       .join(broadcast(blacklist.select(col("passport").as("bl_passport"),
         col("date").as("bl_date"))),
         col("passport_num") === col("bl_passport"), "left")

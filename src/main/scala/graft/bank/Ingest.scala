@@ -20,9 +20,10 @@ object Ingest {
     * The batch date is the file's calendar day — `min` rather than the
     * reference's first-row peek, same value on these files. The file
     * must hold exactly one date and no null one, checked in the same
-    * aggregate before anything is written: the day's facts land as a
-    * dynamic overwrite of the partitions their rows fall in, so a second
-    * date would replace another day's partition. */
+    * aggregate before anything is written: the day's facts land as the
+    * overwrite of the one partition `txn_date=<date>`, so a row of
+    * another date would land in the wrong day (the day write checks it
+    * again, [[Pipeline.transactionsDay]]). */
   def transactions(spark: SparkSession, path: String): (DataFrame, Date) = {
     val raw = spark.read
       .option("sep", ";")

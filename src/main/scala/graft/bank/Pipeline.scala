@@ -2,6 +2,8 @@ package graft.bank
 
 import java.sql.Date
 
+import scala.concurrent.Await
+
 import graft.bank.Warehouse.Meta
 import graft.operators.Cdc
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -163,8 +165,10 @@ object Pipeline {
     *
     *  1. `dayRows` overwrite the partition `txn_date=<day>`, which
     *     yields the staging count ([[RowCount]]) and the rows' first and
-    *     last date: another date fails the day before the mart and META
-    *     are written; then `failpoint("fact_overwrite")`;
+    *     last date. The dates are known only once that write is done: a
+    *     row of another date deletes the partition again and fails the
+    *     day, before the mart and META are written; then
+    *     `failpoint("fact_overwrite")`;
     *  2. the four fraud rules run over [[ruleFacts]] as one frame,
     *     `rules12 ∪ bandRules`, behind one rebalance, and land as ONE
     *     overwrite of the partition `report_dt=<day>`; then
@@ -209,9 +213,12 @@ object Pipeline {
       min(date).as("first"), max(date).as("last")),
       Seq("stg_transactions" -> lit(true)))(identity)
     wh.overwritePartitions(FactTransactions, factRows, "txn_date" -> day.toString)
-    val landed = Seq("first", "last").map(dates.get.get(_).orNull)
-    require(landed.forall(d => d == null || d.toString == day.toString),
-      s"the transactions of $day hold dates ${landed.mkString(" to ")}")
+    val span = Await.result(dates.future, RowCount.Wait).toSeq
+    if (span.exists(d => d != null && d.toString != day.toString)) {
+      wh.dropPartition(FactTransactions, "txn_date" -> day.toString)
+      throw new IllegalArgumentException(
+        s"the transactions of $day hold dates ${span.mkString(" to ")}")
+    }
     failpoint("fact_overwrite")
     val (facts, facts12) = ruleFacts(wh, day, incremental)
     val repBefore =

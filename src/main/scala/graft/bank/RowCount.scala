@@ -33,12 +33,9 @@ final class RowCount private (val label: String, placed: Promise[Boolean],
 
   /** The count. Call it after the write returned; the metric arrives
     * with the write's completion event. Fails loudly, naming `label`, if
-    * no metric arrived within [[RowCount.Wait]] (the frame was never
-    * written) — it never blocks for longer. */
-  def get(): Long = within(RowCount.Wait)
-
-  /** [[get]] with its wait shortened, for the spec. */
-  private[bank] def within(timeout: FiniteDuration): Long = {
+    * no metric arrived within `timeout` (the frame was never written) —
+    * it never blocks for longer. */
+  def get(timeout: FiniteDuration = RowCount.Wait): Long = {
     val row =
       if (await(placed.future, timeout)) await(observation.future, timeout)
       else explicit()
@@ -84,18 +81,21 @@ object RowCount {
 
   /** Completed, once a query that carries the counter `name` in its
     * logical plan (the write) succeeds, with whether the counter sits in
-    * that query's result stage. The listener leaves once it has decided,
-    * or once a reader gave up waiting. */
+    * that query's result stage; failed with that query's error if it
+    * fails. The listener leaves once it has decided, or once a reader
+    * gave up waiting. */
   private def placement(spark: SparkSession, name: String): Promise[Boolean] = {
     val placed = Promise[Boolean]()
+    def carries(qe: QueryExecution) = qe.logical.exists {
+      case c: CollectMetrics => c.name == name
+      case _ => false
+    }
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.logical.exists {
-            case c: CollectMetrics => c.name == name
-            case _ => false
-          }) placed.trySuccess(inResultStage(qe.executedPlan, name))
+        if (carries(qe)) placed.trySuccess(inResultStage(qe.executedPlan, name))
       override def onFailure(f: String, qe: QueryExecution,
-                             e: Exception): Unit = ()
+                             e: Exception): Unit =
+        if (carries(qe)) placed.tryFailure(e)
     }
     spark.listenerManager.register(listener)
     placed.future.onComplete(_ => spark.listenerManager.unregister(listener))(

@@ -173,11 +173,17 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   def overwritePartitions(name: String, df: DataFrame,
                           partition: (String, String)): Unit = {
     heal(name)
-    val (column, value) = partition
-    df.write.mode(SaveMode.Overwrite).parquet(dir(name)
-      .resolve(ExternalCatalogUtils.getPartitionPathString(column, value))
+    df.write.mode(SaveMode.Overwrite).parquet(partitionDir(name, partition)
       .toString)
   }
+
+  /** Delete the partition `column=value`, if it is there. */
+  def dropPartition(name: String, partition: (String, String)): Unit =
+    deleteRecursive(partitionDir(name, partition))
+
+  private def partitionDir(name: String, partition: (String, String)): Path =
+    dir(name).resolve(ExternalCatalogUtils.getPartitionPathString(
+      partition._1, partition._2))
 
   def drop(name: String): Unit = deleteRecursive(dir(name))
 

@@ -367,19 +367,6 @@ object Similarity {
     if (((digest(0) >> 4) & 0xf) >= 8) 1.0 else -1.0
   }
 
-  /** `planes`-bit random-hyperplane bucket key for hash table `table` —
-    * the composable (per-plane DotProduct) formulation. Kept as the
-    * semantic reference for the fused
-    * [[graft.functions.VectorExpressions.lshBucketsNative]] expression
-    * (LshBucketsSpec asserts bit-identical keys); `lshTopK` uses the
-    * fused form. */
-  def lshBucket(vec: Column, dim: Int, planes: Int, table: Int): Column =
-    (0 until planes).map { j =>
-      val signs = array((0 until dim).map(d =>
-        lit(planeSign(table * planes + j, d))): _*)
-      when(dot(vec, signs) > 0, lit(1L << j)).otherwise(0L)
-    }.reduce(_ + _)
-
   /** Approximate top-k with multi-table, multi-probe LSH.
     *
     * `tables` independent `planes`-bit hash tables, all computed by ONE

@@ -76,7 +76,7 @@ class RowCountSpec extends AnyFunSuite {
       RowCount.observe(spark.range(5).toDF(),
         Seq("REP_FRAUD_never" -> lit(true)))(identity)
     val t0 = System.nanoTime()
-    val e = intercept[IllegalStateException](n.within(200.millis))
+    val e = intercept[IllegalStateException](n.get(200.millis))
     assert(e.getMessage.contains("REP_FRAUD_never"), e.getMessage)
     assert((System.nanoTime() - t0) / 1e9 < 10)
   }

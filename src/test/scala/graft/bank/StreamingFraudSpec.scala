@@ -53,7 +53,8 @@ class StreamingFraudSpec extends AnyFunSuite {
     val expected = FraudRules.rules12(
         typed(sample.toSeq.toDF()), blDf, seed)
       .collect().map(_.toString).sorted.toSeq
-    assert(expected.nonEmpty, "day-3 fixture must produce rule-1 hits")
+    assert(expected.exists(_.contains(FraudRules.BlockedPassport)),
+      "day-3 fixture must produce rule-1 hits")
 
     val mem = MemoryStream[StreamTxn]
     val q = FraudRules.rules12(typed(mem.toDF()), blDf, seed)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkTestSession, Tables}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -162,13 +163,24 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(exact.nonEmpty, "fixture must exercise the operator")
   }
 
+  /** `planes`-bit random-hyperplane bucket key for hash table `table`,
+    * one dot product per plane: the composable formulation the fused
+    * `lshBucketsNative` expression (which `lshTopK` uses) must match. */
+  private def lshBucket(vec: Column, dim: Int, planes: Int,
+                        table: Int): Column =
+    (0 until planes).map { j =>
+      val signs = array((0 until dim).map(d =>
+        lit(Similarity.planeSign(table * planes + j, d))): _*)
+      when(Similarity.dot(vec, signs) > 0, lit(1L << j)).otherwise(0L)
+    }.reduce(_ + _)
+
   test("fused LshBuckets expression matches the per-plane formulation") {
     val emb = Tables.embeddings(spark, sf).limit(50)
       .select(col("vec_id"), transform(col("embedding"),
         x => x.cast("double")).as("v"))
     val tables = 3; val planes = 5
     val unfused = emb.select(col("vec_id"), array((0 until tables).map(t =>
-      Similarity.lshBucket(col("v"), 64, planes, t)): _*).as("keys"))
+      lshBucket(col("v"), 64, planes, t)): _*).as("keys"))
     val fused = emb.select(col("vec_id"),
       graft.functions.VectorExpressions
         .lshBucketsNative(col("v"), 64, planes, tables).as("keys"))

@@ -147,6 +147,29 @@ class TransactionsDaySpec extends AnyFunSuite {
     assert(fileListing(root.toString) == before)
   }
 
+  test("a transaction of another date fails the day: no fact partition, no META row") {
+    val wh = newWh("txnday_foreign")
+    val pipe = streamPipe(wh)
+    runDay(pipe, days, 0)
+    val day1Fact = rowSet(wh.read(Pipeline.FactTransactions))
+    val (day, txns, bl, terms) = days(1)
+    // day 2's drop carrying one row of day 1
+    val foreign = days(0)._2.head.copy(_1 = "T_foreign")
+    val ex = intercept[IllegalArgumentException] {
+      pipe.runDayStaged(txnsDf(txns :+ foreign), blacklistDf(bl),
+        terminalsDf(terms), day)
+    }
+    assert(ex.getMessage.contains(s"the transactions of $day hold dates"))
+    // the partition written before the check is deleted again, day 1's
+    // partition is untouched, and day 2 logged nothing
+    assert(wh.partitionValues(Pipeline.FactTransactions, "txn_date") ==
+      Seq(days(0)._1.toString))
+    assert(rowSet(wh.read(Pipeline.FactTransactions)) == day1Fact)
+    assert(wh.read(Pipeline.MetaLoading)
+      .where(col("event_dt") === lit(day)).isEmpty)
+    assert(!Pipeline.completed(wh, day))
+  }
+
   test("midnight-crossing chains: the pruned stream mart is the batch mart") {
     val (sw, _) = streamRun(midnightDays)
     val want = rowSet(midnightBatch.read(Pipeline.RepFraud))

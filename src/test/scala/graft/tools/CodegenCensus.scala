@@ -15,7 +15,7 @@ import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
-import graft.bank.{Pipeline, RefFixture, Seeds, Warehouse}
+import graft.bank.{Pipeline, Seeds, Warehouse}
 import graft.streaming.IngestStream
 
 /** Per-day census of the daily cycle's generated code: how many classes
@@ -31,7 +31,7 @@ import graft.streaming.IngestStream
   *
   * `dataDir` holds `ddl_dml.sql` and the drops, under `drops/` (a
   * `perfbench/gen.py` output directory) or `data/` (the committed fixture,
-  * the default). Each mode, batch then stream, replays every day in a
+  * the default, resolved from the repository root). Each mode, batch then stream, replays every day in a
   * fresh JVM at Spark's default cache size, the session configured as the
   * benchmark configures its own (`local[<cores>]`, shuffle partitions =
   * cores). Compilations are the delta of
@@ -43,8 +43,9 @@ object CodegenCensus {
   def main(args: Array[String]): Unit = args match {
     case Array(dataDir, mode) => census(dataDir, mode)
     case _ =>
-      val dataDir = args.headOption.getOrElse(
-        Paths.get(RefFixture.seedSql).getParent.toString)
+      // the fixture's directory, not its classpath resource: `runMain`
+      // may see the test resources inside a jar
+      val dataDir = args.headOption.getOrElse("src/test/resources/bank-fixture")
       Seq("batch", "stream").foreach(child(dataDir, _))
   }
 
